@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import fan_out, load
+from ..tables import fan_out, load, persist
 
 Q_SCALE = 1000
 DIM = 64
@@ -120,18 +120,23 @@ def _cents_df(spark, cents: list[tuple[int, list[int]]]) -> DataFrame:
         "cent_id long, cv array<long>")
 
 
-# Persisted quantized-vector frames, releasable via unpersist_cached()
-# (same contract as operators/dedup.py — the persist must outlive the
-# lazy consumer, so eager unpersist inside the builders is impossible).
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release quantized-vector frames persisted by the k-means paths."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
+def _seeded_vecs(emb: DataFrame, seed_ids: list[int]
+                 ) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
+    """(vecs, cents0): the corpus persisted in quantized integer space
+    and the seed vectors as driver-held (cent_id, cv) centroids. The
+    seed collect doubles as the persist materialization, so later
+    passes read the cache."""
+    # fan_out BEFORE the persist: the driver testdata scan is one task
+    # (single row group), so without it every downstream _assign — an
+    # interpreted k x DIM HOF fold per row — serializes on one core of
+    # local[32] for every Lloyd round and final assignment (measured
+    # r11: ann_index_incremental 27.6 s one-task vs 3.3 s baseline).
+    # Guide §2.5 input-skew rule; no-op on >=defaultParallelism inputs.
+    vecs = persist(fan_out(_quantized(emb), "vec_id"))
+    seed_rows = (vecs.where(F.col("vec_id").isin(seed_ids))
+                 .select(F.col("vec_id").alias("cent_id"),
+                         F.col("v").alias("cv")).collect())
+    return vecs, sorted((r["cent_id"], list(r["cv"])) for r in seed_rows)
 
 
 def _refined_int_cents(emb: DataFrame, seed_ids: list[int],
@@ -139,23 +144,8 @@ def _refined_int_cents(emb: DataFrame, seed_ids: list[int],
                                               list[tuple[int, list[int]]]]:
     """(vecs, cents) after n_iters Lloyd rounds: vecs persisted in
     quantized integer space, cents as the driver-held (cent_id, cv)
-    list (k x DIM ints — tiny round state). The seed collect doubles
-    as the persist materialization, so later passes read the cache."""
-    from pyspark import StorageLevel
-
-    # fan_out BEFORE the persist: the driver testdata scan is one task
-    # (single row group), so without it every downstream _assign — an
-    # interpreted k x DIM HOF fold per row — serializes on one core of
-    # local[32] for every Lloyd round and final assignment (measured
-    # r11: ann_index_incremental 27.6 s one-task vs 3.3 s baseline).
-    # Guide §2.5 input-skew rule; no-op on >=defaultParallelism inputs.
-    vecs = fan_out(_quantized(emb), "vec_id").persist(
-        StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(vecs)
-    seed_rows = (vecs.where(F.col("vec_id").isin(seed_ids))
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv")).collect())
-    cents = sorted((r["cent_id"], list(r["cv"])) for r in seed_rows)
+    list (k x DIM ints — tiny round state)."""
+    vecs, cents = _seeded_vecs(emb, seed_ids)
     for _ in range(n_iters):
         cents = _update(_assign(vecs, cents))
     return vecs, cents
@@ -587,13 +577,9 @@ def _silhouette_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Evaluation cost is O(panel * corpus), the ann_recall_eval
     shape.
     """
-    from pyspark import StorageLevel
-
     emb = load(spark, sf_dir, "embeddings")
     vecs, cents = _refined_int_cents(emb, SEED_IDS, N_ITERS)
-    assigned = (_assign(vecs, cents)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(assigned)
+    assigned = persist(_assign(vecs, cents))
     probes = (assigned.where(F.col("vec_id") % SIL_MOD == 0)
               .select(F.col("vec_id").alias("pid"),
                       F.col("v").alias("pv"),

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import HASH_MOD, poly_hash, word_shingles
+from ..tables import persist
 
 # Fixed MinHash permutation constants (seed 42), shared with the DuckDB
 # oracle generators — regenerate only in lockstep with minhash_perm_sql().
@@ -324,42 +325,18 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
             .where(F.col("hamming") <= max_hamming))
 
 
-# Frames persisted by _sigs_and_bands, so long-lived sessions can release
-# them: the persist must outlive the (lazy) verify join, which no library
-# function here ever materializes itself, so eager unpersist is impossible —
-# callers run their action, then call unpersist_cached().
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release every signature frame persisted by the MinHash paths.
-
-    Call after the consuming action has materialized. Returns the number
-    of frames released. Library callers in long-lived sessions that skip
-    this (and don't spark.catalog.clearCache()) accumulate pinned blocks
-    — one sigs frame per minhash_lsh_pairs / two per
-    incremental_minhash_pairs call."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
-
 def _sigs_and_bands(df: DataFrame, id_col: str, text_col: str,
                     n: int, max_tokens: int | None):
     """(sigs, bands) pair for banded MinHash: sigs carries the shingle
     hashes + signature per doc (persisted MEMORY_AND_DISK — both the
-    banding and verification branches consume it; tracked in
-    ``_PERSISTED`` for :func:`unpersist_cached`), bands is the exploded
+    banding and verification branches consume it; tracked by
+    :func:`tables.persist`), bands is the exploded
     (id, band_id, band_key) table."""
-    from pyspark import StorageLevel
-
-    sigs = (df.select(
-                F.col(id_col),
-                shingle_hashes(F.col(text_col), n, max_tokens).alias("shingles"))
-            .withColumn("sig", signature_from_hashes("shingles"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(sigs)
+    sigs = persist(
+        df.select(
+            F.col(id_col),
+            shingle_hashes(F.col(text_col), n, max_tokens).alias("shingles"))
+        .withColumn("sig", signature_from_hashes("shingles")))
     # band table as one expr parse (same construction economics as the
     # signature above); concat_ws('_', bigint...) casts implicitly in
     # both the column API and SQL — identical band keys

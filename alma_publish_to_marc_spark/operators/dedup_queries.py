@@ -13,22 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 from . import dedup as D
 
 NEAR_DUP_TAIL = "synthetic near dup tail"
 
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 # ---- SQL fragment generators (lockstep with functions/text.py hashes) ----
 def sql_toks(text: str = "text") -> str:
@@ -696,9 +685,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # led feeds three branches (pairs, edge rows, bucket sizes) —
     # persist per the multi-branch rule (CLAUDE.md) so the scan +
     # window run once.
-    from pyspark import StorageLevel
-    led = led.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(led)
+    led = persist(led)
     # ONE explode over a neighbor-struct array instead of a W-way
     # union of filtered branches — a union re-runs the scan + window
     # per branch (Spark does not dedupe common subplans).

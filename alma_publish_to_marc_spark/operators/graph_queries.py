@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, on_release, persist
 
 _MAX_ROUNDS = 25  # 2^25 ≫ any component diameter after pointer jumping
 
@@ -629,10 +629,6 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import knn_graph
     from .similarity_queries import KNN_K
 
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     emb = load(spark, sf_dir, "embeddings")
     und = (knn_graph(emb, "vec_id", "embedding", k=KNN_K)
            .select(F.least("src", "dst").alias("a"),
@@ -641,20 +637,17 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every peel round references the previous edge frame THREE times
     # (degree count + two semi-joins): without persisting, the whole
     # knn pipeline re-executes 3^rounds times (measured: 170 s vs 14 s
-    # at sf0.01). Persists ride similarity._PERSISTED so the standard
-    # unpersist_cached() contract releases them.
-    edges = und.persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(edges)
+    # at sf0.01).
+    edges = persist(und)
     for _ in range(KCORE_ROUNDS):
         deg = (edges.select(F.col("a").alias("n")).unionAll(
                    edges.select(F.col("b").alias("n")))
                .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
         keep = deg.where(F.col("deg") >= KCORE_K).select("n")
-        edges = (edges
-                 .join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-                 .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _sim._PERSISTED.append(edges)
+        edges = persist(
+            edges
+            .join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("n", "b"), "b", "left_semi"))
     final_deg = (edges.select(F.col("a").alias("node")).unionAll(
                      edges.select(F.col("b").alias("node")))
                  .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
@@ -714,10 +707,6 @@ def bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     small diameter (bipartite through popular suppliers) means the
     frontier saturates fast — visible in the level counts.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -726,26 +715,21 @@ def bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
           .distinct())
     off = F.broadcast(e0.agg((F.max("c") + F.lit(1)).alias("_off")))
     e0o = e0.crossJoin(off)
-    und = (e0o.select(F.col("c").alias("src"),
-                      (F.col("s") + F.col("_off")).alias("dst"))
-           .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
-                                   F.col("c").alias("dst")))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(und)
+    und = persist(
+        e0o.select(F.col("c").alias("src"),
+                   (F.col("s") + F.col("_off")).alias("dst"))
+        .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
+                                F.col("c").alias("dst"))))
     src = F.broadcast(e0.agg(F.min("c").alias("n")))
     frontier = src.select("n")
     visited = frontier
     out = frontier.select(F.lit(0).alias("level"), "n")
     for lvl in range(1, BFS_ROUNDS + 1):
-        nxt = (und.join(frontier.withColumnRenamed("n", "src"), "src")
-               .select(F.col("dst").alias("n")).distinct()
-               .join(visited, "n", "left_anti")
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(nxt)
+        nxt = persist(und.join(frontier.withColumnRenamed("n", "src"), "src")
+                      .select(F.col("dst").alias("n")).distinct()
+                      .join(visited, "n", "left_anti"))
         out = out.unionByName(nxt.select(F.lit(lvl).alias("level"), "n"))
-        visited = visited.unionByName(nxt) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _sim._PERSISTED.append(visited)
+        visited = persist(visited.unionByName(nxt))
         frontier = nxt
     return (out.groupBy("level")
             .agg(F.count(F.lit(1)).alias("n_nodes"),
@@ -814,9 +798,6 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     step-joins — the union re-derives every prefix — and every extra
     consumer (walk-PMI's aggregate branches) pays it all again.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .sketches import _h48
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -827,12 +808,11 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
           .distinct())
     off = F.broadcast(e0.agg((F.max("c") + F.lit(1)).alias("_off")))
     e0o = e0.crossJoin(off)
-    und = (e0o.select(F.col("c").alias("src"),
-                      (F.col("s") + F.col("_off")).alias("dst"))
-           .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
-                                   F.col("c").alias("dst")))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(und)
+    und = persist(
+        e0o.select(F.col("c").alias("src"),
+                   (F.col("s") + F.col("_off")).alias("dst"))
+        .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
+                                F.col("c").alias("dst"))))
     cur = (e0.select(F.col("c").alias("seed")).distinct()
            .where(F.col("seed") % WALK_SEED_MOD == 0)
            .select("seed", F.col("seed").alias("node")))
@@ -841,13 +821,12 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = _h48(F.concat_ws(":", F.col("seed").cast("string"),
                              F.lit(str(step)),
                              F.col("dst").cast("string")))
-        nxt = (und.join(cur.withColumnRenamed("node", "src"), "src")
-               .groupBy("seed")
-               .agg(F.min(F.struct(h.alias("h"),
-                                   F.col("dst").alias("dst"))).alias("b"))
-               .select("seed", F.col("b.dst").alias("node"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(nxt)
+        nxt = persist(
+            und.join(cur.withColumnRenamed("node", "src"), "src")
+            .groupBy("seed")
+            .agg(F.min(F.struct(h.alias("h"),
+                                F.col("dst").alias("dst"))).alias("b"))
+            .select("seed", F.col("b.dst").alias("node")))
         out = out.unionByName(
             nxt.select("seed", F.lit(step).alias("step"), "node"))
         cur = nxt
@@ -914,10 +893,6 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the similarity module's list; at diameter ≫ K switch to a
     convergence loop staged to parquet (same superstep body).
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("w"))
@@ -928,12 +903,11 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.min("w").alias("w")))
     off = F.broadcast(e0.agg((F.max("c") + F.lit(1)).alias("_off")))
     e0o = e0.crossJoin(off)
-    und = (e0o.select(F.col("c").alias("src"),
-                      (F.col("s") + F.col("_off")).alias("dst"), "w")
-           .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
-                                   F.col("c").alias("dst"), "w"))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(und)
+    und = persist(
+        e0o.select(F.col("c").alias("src"),
+                   (F.col("s") + F.col("_off")).alias("dst"), "w")
+        .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
+                                F.col("c").alias("dst"), "w")))
     dist = e0.agg(F.min("c").alias("node")).select(
         "node", F.lit(0).cast("long").alias("d"))
     for _ in range(BF_ROUNDS):
@@ -941,10 +915,8 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
                             .withColumnRenamed("d", "ds"), "src")
                    .select(F.col("dst").alias("node"),
                            (F.col("ds") + F.col("w")).alias("d")))
-        dist = (dist.unionByName(relaxed)
-                .groupBy("node").agg(F.min("d").alias("d"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(dist)
+        dist = persist(dist.unionByName(relaxed)
+                       .groupBy("node").agg(F.min("d").alias("d")))
     n_reached = F.broadcast(dist.agg(F.count(F.lit(1)).alias("n_reached")))
     return (dist.crossJoin(n_reached)
             .orderBy(F.asc("d"), F.asc("node"))
@@ -1194,22 +1166,17 @@ def walk_pmi_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     it the whole walk join chain re-executes per branch.
     Composes two existing operators (seeded walks, PMI ranking) with
     no new primitives."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
-
-    from . import similarity as _sim
 
     walks = graph_random_walks(spark, sf_dir)
     a = walks.select("seed", F.col("step").alias("i"),
                      F.col("node").alias("na"))
     b = walks.select("seed", F.col("step").alias("j"),
                      F.col("node").alias("nb"))
-    pairs = (a.join(b, "seed")
-             .where((F.abs(F.col("i") - F.col("j")) <= _WPMI_WINDOW)
-                    & (F.col("i") != F.col("j")))
-             .select("na", "nb")
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(pairs)
+    pairs = persist(a.join(b, "seed")
+                    .where((F.abs(F.col("i") - F.col("j")) <= _WPMI_WINDOW)
+                           & (F.col("i") != F.col("j")))
+                    .select("na", "nb"))
     c_ab = pairs.groupBy("na", "nb").agg(F.count(F.lit(1)).alias("cab"))
     c_a = pairs.groupBy("na").agg(F.count(F.lit(1)).alias("ca"))
     c_b = pairs.groupBy("nb").agg(F.count(F.lit(1)).alias("cb"))
@@ -1416,23 +1383,17 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each half-round is one key-shuffled sum over the edge list
     (map-side combinable) plus a 1-row broadcast max; the edge list is
-    persisted once (tracked via similarity._PERSISTED) and reused by
+    persisted once (tracked by tables.persist) and reused by
     all {HITS_ITERS}×2 message passes. Final top-k is TakeOrdered, no
     global sort shuffle. Reference anchor: bib↔part edge traversal
     (ddl/data_sync_db.sql:82-85) taken to fixpoint.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (li.join(orders, li.l_orderkey == orders.o_orderkey)
-         .select(F.col("o_custkey").alias("c"),
-                 F.col("l_partkey").alias("p"))
-         .distinct()
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(e)
+    e = persist(li.join(orders, li.l_orderkey == orders.o_orderkey)
+                .select(F.col("o_custkey").alias("c"),
+                        F.col("l_partkey").alias("p"))
+                .distinct())
     a = (e.select("p").distinct()
          .withColumn("a", F.lit(HITS_SCALE).cast("long")))
     h = None
@@ -1441,15 +1402,13 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join): persist every round or the edge-join chain re-executes
         # 2^(2·rounds) times (CLAUDE.md multi-branch hazard; measured
         # 41 s → ~8 s at sf0.001)
-        h_raw = (e.join(a, "p").groupBy("c").agg(F.sum("a").alias("hr"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(h_raw)
+        h_raw = persist(
+            e.join(a, "p").groupBy("c").agg(F.sum("a").alias("hr")))
         mh = F.broadcast(h_raw.agg(F.max("hr").alias("mh")))
         h = (h_raw.crossJoin(mh)
              .select("c", F.expr(f"(hr * {HITS_SCALE}) div mh").alias("h")))
-        a_raw = (e.join(h, "c").groupBy("p").agg(F.sum("h").alias("ar"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(a_raw)
+        a_raw = persist(
+            e.join(h, "c").groupBy("p").agg(F.sum("h").alias("ar")))
         ma = F.broadcast(a_raw.agg(F.max("ar").alias("ma")))
         a = (a_raw.crossJoin(ma)
              .select("p", F.expr(f"(ar * {HITS_SCALE}) div ma").alias("a")))
@@ -1537,22 +1496,17 @@ def local_clustering_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree-bounded by the k-NN construction, ≤ |V|·(2k)² wedges); the
     per-node explode is 3 rows per triangle; everything else is
     node-keyed aggregation. The edge frame feeds four branches (deg +
-    three join legs) so it is persisted (tracked via
-    similarity._PERSISTED).
+    three join legs) so it is persisted (tracked by
+    tables.persist).
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .similarity import knn_graph
     from .similarity_queries import KNN_K
 
     emb = load(spark, sf_dir, "embeddings")
-    und = (knn_graph(emb, "vec_id", "embedding", k=KNN_K)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(und)
+    und = persist(knn_graph(emb, "vec_id", "embedding", k=KNN_K)
+                  .select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
+                  .distinct())
     deg = (und.select(F.col("a").alias("n")).unionAll(
                und.select(F.col("b").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
@@ -1744,15 +1698,10 @@ def incremental_connected_components(spark: SparkSession,
     ``connected_components``, so the count branches re-read files, not
     lineage.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .similarity_queries import INC_MOD, INC_REM
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    full_e = (_candidate_edges(spark, sf_dir)
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(full_e)
+    full_e = persist(_candidate_edges(spark, sf_dir))
     is_new = lambda c: c % INC_MOD == INC_REM
     base_e = full_e.where(~is_new(F.col("src")) & ~is_new(F.col("dst")))
     delta_e = full_e.where(is_new(F.col("src")) | is_new(F.col("dst")))
@@ -2125,29 +2074,20 @@ def _modularity_gain_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     by 2|E|; the before/after quality passes are the
     ``community_modularity`` shape twice. No all-pairs anything.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     emb, edges, labels = _lp_state(spark, sf_dir)
     # und feeds ~8 plan branches (degrees, d_c, l_ic, both quality
     # passes) and comm ~6; without persisting, the whole knn+LP chain
     # re-executes per branch (the CLAUDE.md multi-branch hazard —
-    # measured minutes vs seconds at sf0.01). Persists ride
-    # similarity._PERSISTED so unpersist_cached() releases them.
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(und)
-    comm = (emb.select("vec_id")
-            .join(labels.withColumnRenamed("node", "vec_id"), "vec_id",
-                  "left")
-            .select(F.col("vec_id").alias("node"),
-                    F.coalesce(F.col("lbl").cast("long"),
-                               F.lit(-1) - F.col("vec_id")).alias("c"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(comm)
+    # measured minutes vs seconds at sf0.01).
+    und = persist(edges.select(F.least("src", "dst").alias("a"),
+                               F.greatest("src", "dst").alias("b"))
+                  .distinct())
+    comm = persist(emb.select("vec_id")
+                   .join(labels.withColumnRenamed("node", "vec_id"), "vec_id",
+                         "left")
+                   .select(F.col("vec_id").alias("node"),
+                           F.coalesce(F.col("lbl").cast("long"),
+                                      F.lit(-1) - F.col("vec_id")).alias("c")))
     m = F.broadcast(und.agg(F.count(F.lit(1)).alias("m")))
     dir_ = (und.select(F.col("a").alias("i"), F.col("b").alias("j"))
             .unionAll(und.select(F.col("b").alias("i"),
@@ -2188,12 +2128,11 @@ def _modularity_gain_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .otherwise(F.col("ci")).alias("c"),
                      (F.col("g_best") > F.col("g_stay")).cast("long")
                      .alias("did_move")))
-    comm2 = (comm.join(moved.select("node", F.col("c").alias("c2"),
-                                    "did_move"), "node", "left")
-             .select("node", F.coalesce("c2", F.col("c")).alias("c"),
-                     F.coalesce("did_move", F.lit(0)).alias("did_move"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(comm2)
+    comm2 = persist(
+        comm.join(moved.select("node", F.col("c").alias("c2"),
+                               "did_move"), "node", "left")
+        .select("node", F.coalesce("c2", F.col("c")).alias("c"),
+                F.coalesce("did_move", F.lit(0)).alias("did_move")))
 
     def _q_num(cmap):
         ca = cmap.select(F.col("node").alias("a"), F.col("c").alias("c_a"))
@@ -2385,22 +2324,17 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list — sum_z deg(z)^2 rows, bounded by (2k)^2 per node on a
     k-NN graph (never quadratic in N). One anti-join removes existing
     edges; one (a, b) aggregate scores candidates map-side. The und
-    edge frame feeds five branches, so it is persisted (tracked via
-    similarity._PERSISTED, released by unpersist_cached()).
+    edge frame feeds five branches, so it is persisted (tracked by
+    tables.persist, released by tables.release()).
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .similarity import knn_graph
     from .similarity_queries import KNN_K
 
     emb = load(spark, sf_dir, "embeddings")
-    und = (knn_graph(emb, "vec_id", "embedding", k=KNN_K)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(und)
+    und = persist(knn_graph(emb, "vec_id", "embedding", k=KNN_K)
+                  .select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
+                  .distinct())
     dirn = und.unionAll(und.select(F.col("b").alias("a"),
                                    F.col("a").alias("b"))) \
               .select(F.col("a").alias("z"), F.col("b").alias("n"))
@@ -2627,19 +2561,14 @@ def graph_robustness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Isolated survivors count as singleton components via the node-set
     anti-join, not by materializing empty adjacency.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .similarity import knn_graph
     from .similarity_queries import KNN_K
 
     emb = load(spark, sf_dir, "embeddings")
-    und = (knn_graph(emb, "vec_id", "embedding", k=KNN_K)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(und)
+    und = persist(knn_graph(emb, "vec_id", "embedding", k=KNN_K)
+                  .select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
+                  .distinct())
     dirn = und.unionAll(und.select(F.col("b").alias("a"),
                                    F.col("a").alias("b")))
     deg = dirn.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
@@ -2757,24 +2686,18 @@ def link_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical wedge shape to link_prediction_scores (Σ deg²
     bounded per node by 2k); the top-K is a TakeOrdered, the hit join
     is K rows against the holdout. The und frame feeds many branches →
-    persisted (similarity._PERSISTED contract).
+    persisted (tables.persist).
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
     from .similarity import knn_graph
     from .similarity_queries import KNN_K
 
     emb = load(spark, sf_dir, "embeddings")
-    und = (knn_graph(emb, "vec_id", "embedding", k=KNN_K)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(und)
+    und = persist(knn_graph(emb, "vec_id", "embedding", k=KNN_K)
+                  .select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
+                  .distinct())
     gate = F.substring(F.md5(F.concat_ws(":", F.lit("lp"), "a", "b")), 1, 1)
-    held = und.where(gate == "0").persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(held)
+    held = persist(und.where(gate == "0"))
     train = und.where(gate != "0")
     dirn = train.unionAll(train.select(F.col("b").alias("a"),
                                        F.col("a").alias("b"))) \
@@ -2790,14 +2713,12 @@ def link_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count(F.lit(1)).alias("cn")))
     dega = deg.select(F.col("z").alias("a"), F.col("deg").alias("deg_a"))
     degb = deg.select(F.col("z").alias("b"), F.col("deg").alias("deg_b"))
-    topk = (scored.join(dega, "a").join(degb, "b")
-            .select("a", "b", "cn",
-                    F.expr("(1000000 * cn) div (deg_a + deg_b - cn)")
-                    .alias("jac"))
-            .orderBy(F.desc("cn"), F.desc("jac"), "a", "b")
-            .limit(_LPE_K)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(topk)
+    topk = persist(scored.join(dega, "a").join(degb, "b")
+                   .select("a", "b", "cn",
+                           F.expr("(1000000 * cn) div (deg_a + deg_b - cn)")
+                           .alias("jac"))
+                   .orderBy(F.desc("cn"), F.desc("jac"), "a", "b")
+                   .limit(_LPE_K))
     hits = topk.join(held, ["a", "b"]).agg(
         F.count(F.lit(1)).alias("hits"))
     covered = (held.join(scored, ["a", "b"])
@@ -2906,10 +2827,6 @@ def closeness_centrality_sampled(spark: SparkSession,
     the frontier, not the edge list. The oracle bounds its recursive
     expansion at the same round count.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -2918,29 +2835,23 @@ def closeness_centrality_sampled(spark: SparkSession,
           .distinct())
     off = F.broadcast(e0.agg((F.max("c") + F.lit(1)).alias("_off")))
     e0o = e0.crossJoin(off)
-    und = (e0o.select(F.col("c").alias("src"),
-                      (F.col("s") + F.col("_off")).alias("dst"))
-           .unionByName(e0o.select((F.col("s") + F.col("_off"))
-                                   .alias("src"),
-                                   F.col("c").alias("dst")))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(und)
+    und = persist(e0o.select(F.col("c").alias("src"),
+                             (F.col("s") + F.col("_off")).alias("dst"))
+                  .unionByName(e0o.select((F.col("s") + F.col("_off"))
+                                          .alias("src"),
+                                          F.col("c").alias("dst"))))
     seeds = (e0.select(F.col("c").alias("seed")).distinct()
              .orderBy("seed").limit(_CLOSE_SEEDS))
     frontier = seeds.select("seed", F.col("seed").alias("n"))
     visited = frontier
     out = frontier.select("seed", "n", F.lit(0).alias("dist"))
     for lvl in range(1, _CLOSE_ROUNDS + 1):
-        nxt = (und.join(frontier.withColumnRenamed("n", "src"), "src")
-               .select("seed", F.col("dst").alias("n")).distinct()
-               .join(visited, ["seed", "n"], "left_anti")
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        _sim._PERSISTED.append(nxt)
+        nxt = persist(und.join(frontier.withColumnRenamed("n", "src"), "src")
+                      .select("seed", F.col("dst").alias("n")).distinct()
+                      .join(visited, ["seed", "n"], "left_anti"))
         out = out.unionByName(nxt.select("seed", "n",
                                          F.lit(lvl).alias("dist")))
-        visited = visited.unionByName(nxt) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _sim._PERSISTED.append(visited)
+        visited = persist(visited.unionByName(nxt))
         frontier = nxt
     return (out.where(F.col("dist") > 0)
             .groupBy("seed")
@@ -2997,21 +2908,6 @@ QUERIES["closeness_centrality_sampled"] = (closeness_centrality_sampled,
 KTRUSS_K = 4          # each surviving edge must close >= K-2 triangles
 KTRUSS_ROUNDS = 2
 
-# Staged-parquet directories still referenced by a returned frame's
-# lineage (ktruss_prune's last round). Released by unpersist_cached()
-# — the same deferred-cleanup contract the persist ledgers follow.
-_STAGED_DIRS: list[str] = []
-
-
-def unpersist_cached() -> int:
-    """Remove staged round directories left for returned-frame lineage."""
-    import shutil
-
-    n = len(_STAGED_DIRS)
-    while _STAGED_DIRS:
-        shutil.rmtree(_STAGED_DIRS.pop(), ignore_errors=True)
-    return n
-
 
 def triangle_support(e: DataFrame) -> DataFrame:
     """Exact per-edge triangle support of an undirected edge set
@@ -3062,6 +2958,7 @@ def ktruss_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
     import uuid
+    from functools import partial
     from urllib.parse import urlparse
 
     from .similarity import knn_graph
@@ -3108,12 +3005,12 @@ def ktruss_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Return the DISTRIBUTED plan (rooted at the last staged edge
     # frame) instead of eagerly collecting — plan audits and bench see
     # the real pipeline, not a LocalTableScan (ADVICE r7). Intermediate
-    # rounds drop now; the final round's files are released later via
-    # unpersist_cached() (after the caller has consumed the frame).
+    # rounds drop now; the final round's files are removed later by
+    # tables.release() (after the caller has consumed the frame).
     if local_dir is not None:
         for i in range(KTRUSS_ROUNDS):
             shutil.rmtree(f"{local_dir}/e{i}", ignore_errors=True)
-        _STAGED_DIRS.append(local_dir)
+        on_release(partial(shutil.rmtree, local_dir, ignore_errors=True))
     return out
 
 
@@ -3186,10 +3083,6 @@ def graph_diameter_double_sweep(spark: SparkSession,
     Scale: 2 × rounds keyed edge⋈frontier joins with persisted
     frontiers (tracked) — exactly two BFS passes at any graph size.
     """
-    from pyspark import StorageLevel
-
-    from . import similarity as _sim
-
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -3198,26 +3091,22 @@ def graph_diameter_double_sweep(spark: SparkSession,
           .distinct())
     off = F.broadcast(e0.agg((F.max("c") + F.lit(1)).alias("_off")))
     e0o = e0.crossJoin(off)
-    und = (e0o.select(F.col("c").alias("src"),
-                      (F.col("s") + F.col("_off")).alias("dst"))
-           .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
-                                   F.col("c").alias("dst")))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _sim._PERSISTED.append(und)
+    und = persist(
+        e0o.select(F.col("c").alias("src"),
+                   (F.col("s") + F.col("_off")).alias("dst"))
+        .unionByName(e0o.select((F.col("s") + F.col("_off")).alias("src"),
+                                F.col("c").alias("dst"))))
 
     def sweep(frontier):
         visited = frontier
         out = frontier.select(F.lit(0).alias("level"), "n")
         for lvl in range(1, DIAM_ROUNDS + 1):
-            nxt = (und.join(frontier.withColumnRenamed("n", "src"), "src")
-                   .select(F.col("dst").alias("n")).distinct()
-                   .join(visited, "n", "left_anti")
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-            _sim._PERSISTED.append(nxt)
+            nxt = persist(
+                und.join(frontier.withColumnRenamed("n", "src"), "src")
+                .select(F.col("dst").alias("n")).distinct()
+                .join(visited, "n", "left_anti"))
             out = out.unionByName(nxt.select(F.lit(lvl).alias("level"), "n"))
-            visited = visited.unionByName(nxt) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            _sim._PERSISTED.append(visited)
+            visited = persist(visited.unionByName(nxt))
             frontier = nxt
         return (out.groupBy("level")
                 .agg(F.count(F.lit(1)).alias("cnt"), F.min("n").alias("mn"))

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 
 MICRO = 1_000_000
 N_ROUNDS = 2
@@ -114,15 +114,12 @@ def _logreg_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _trained_feats_w(spark: SparkSession, sf_dir: str):
     """(feats, w) for every query that trains AND scores: the
     featurized frame is persisted (tracked, released via
-    unpersist_cached()) because the unrolled training rounds plus the
+    tables.release()) because the unrolled training rounds plus the
     scoring/threshold branches each re-reference it — unpersisted,
     that is up to ~24 corpus scans in one plan (measured on the
     fairness audit before this helper existed)."""
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
-    feats = _featurized(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(feats)
+    feats = persist(_featurized(docs))
     w = logreg_train(docs, feats=feats).select(
         *[f"w_{n}" for n in FEATURES])
     return feats, w
@@ -836,19 +833,6 @@ QUERIES["logreg_calibration_bins"] = (_logreg_calibration_bins,
                                       _calibration_sql())
 
 
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract; first needed by isotonic below).
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
-
 def _isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAVA) recalibration of the classifier's reliability
     bins — the standard fix when ``logreg_calibration_bins`` shows a
@@ -868,10 +852,9 @@ def _isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus collapses to <=CAL_BINS rows in the same two
     scans as the reliability diagram; the minimax grid is <=B^3 rows
     of the persisted prefix frame (4 consumer branches — CLAUDE.md
-    multi-branch hazard — released via unpersist_cached()). B is a
+    multi-branch hazard — released via tables.release()). B is a
     constant; corpus size never touches the grid.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     feats, w = _trained_feats_w(spark, sf_dir)
@@ -887,11 +870,9 @@ def _isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("pos")))
     wspec = (Window.orderBy("bin")
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    pref = (bins.select("bin", "n_docs", "pos",
-                        F.sum("n_docs").over(wspec).alias("c"),
-                        F.sum("pos").over(wspec).alias("p"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(pref)
+    pref = persist(bins.select("bin", "n_docs", "pos",
+                               F.sum("n_docs").over(wspec).alias("c"),
+                               F.sum("pos").over(wspec).alias("p")))
     j = pref.select(F.col("bin").alias("j"),
                     (F.col("p") - F.col("pos")).alias("pj"),
                     (F.col("c") - F.col("n_docs")).alias("cj"))
@@ -1237,9 +1218,8 @@ def _fairness_group_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table and the per-group confusion counts) on top of the shared
     training chain; the per-group frame is persisted (it feeds the
     pooled totals AND the final projection) and released via
-    unpersist_cached().
+    tables.release().
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     feats, w = _trained_feats_w(spark, sf_dir)
@@ -1259,12 +1239,10 @@ def _fairness_group_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("source", "y01",
                     (F.col("pm") > F.col("med")).cast("long")
                     .alias("pr")))
-    g = (pred.groupBy("source")
-         .agg(F.count(F.lit(1)).alias("n"), F.sum("y01").alias("pos"),
-              F.sum("pr").alias("predp"),
-              F.sum(F.col("pr") * F.col("y01")).alias("tp"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(g)
+    g = persist(pred.groupBy("source")
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("y01").alias("pos"),
+                     F.sum("pr").alias("predp"),
+                     F.sum(F.col("pr") * F.col("y01")).alias("tp")))
     ov = g.agg(F.sum("n").alias("onn"), F.sum("pos").alias("opos"),
                F.sum("predp").alias("opredp"), F.sum("tp").alias("otp"))
     rate = "case when {d} = 0 then cast(0 as bigint)" \

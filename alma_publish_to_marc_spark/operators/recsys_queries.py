@@ -27,25 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alma_publish_to_marc_spark.tables import load
+from alma_publish_to_marc_spark.tables import load, persist
 
 QUERIES: dict = {}
 
 _TOP_K = 3
 _MIN_PAIR = 2  # prune noise pairs (support >= 2 orders)
-
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract; registry.release_caches finds the
-# hook by name).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 def _item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,8 +43,6 @@ def _item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 (c_ij ≤ 2^15 at driver scale → 1e6·c_ij² < 2^51; at larger
     corpora drop the 1e6 scale to 1e4 or rank on the raw rational via
     cross-multiplication)."""
-    from pyspark import StorageLevel
-
     # One explicit shuffle on l_orderkey serves THREE consumers: the
     # (order, part) dedup (partitioning on a key subset satisfies the
     # distinct's clustering), the part-frequency aggregate, and both
@@ -66,13 +51,11 @@ def _item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate plan subtrees, so the unpersisted frame re-ran the
     # lineitem scan + repartition + dedup once per reference — the r12
     # before-plan shows SIX lineitem scans (the union mirror doubled
-    # every subtree under it on top). Released via unpersist_cached.
-    baskets = (load(spark, sf_dir, "lineitem")
-               .select("l_orderkey", "l_partkey")
-               .repartition("l_orderkey")
-               .dropDuplicates(["l_orderkey", "l_partkey"])
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(baskets)
+    # every subtree under it on top). Released via tables.release.
+    baskets = persist(load(spark, sf_dir, "lineitem")
+                      .select("l_orderkey", "l_partkey")
+                      .repartition("l_orderkey")
+                      .dropDuplicates(["l_orderkey", "l_partkey"]))
     freq = baskets.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
     a = baskets.select(F.col("l_orderkey").alias("ok"),
                        F.col("l_partkey").alias("i"))
@@ -317,20 +300,6 @@ FROM agg CROSS JOIN catalog
 QUERIES["recs_quality_eval"] = (_recs_quality_eval, _RECS_EVAL_SQL)
 
 
-# ---------------------------------------------------------------------------
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
-
 # als_rank1_sweep: rank-1 matrix factorization, exact alternations
 # ---------------------------------------------------------------------------
 
@@ -355,22 +324,18 @@ def als_rank1_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each alternation is one keyed join + map-side-combinable
     aggregate on the ratings frame (persisted across its four
-    consumers, released via unpersist_cached()); factors are
+    consumers, released via tables.release()); factors are
     entity-sized frames, broadcast into the joins.
     """
-    from pyspark import StorageLevel
-
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey",
         F.col("l_quantity").cast("long").alias("q"))
     orders = load(spark, sf_dir, "orders").select("o_orderkey",
                                                   "o_custkey")
-    r = (li.join(orders, li.l_orderkey == orders.o_orderkey)
-         .groupBy(F.col("o_custkey").alias("c"),
-                  F.col("l_partkey").alias("p"))
-         .agg(F.sum("q").alias("q"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(r)
+    r = persist(li.join(orders, li.l_orderkey == orders.o_orderkey)
+                .groupBy(F.col("o_custkey").alias("c"),
+                         F.col("l_partkey").alias("p"))
+                .agg(F.sum("q").alias("q")))
 
     # v0 = 1000 (e3 unity) for every part: first solve collapses to
     # the row mean; iterate u -> v -> u in exact integer space

@@ -21,6 +21,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..tables import persist
+
 N_PLANES = 8
 DIM = 64
 _rng = random.Random(7)
@@ -109,22 +111,6 @@ def brute_force_topk(emb: DataFrame, id_col: str, vec_col: str,
     return (pairs.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("qid", F.col(id_col).alias("neighbor_id"), "cosine", "rank"))
-
-
-# Frames persisted by knn_graph (sigs + normed vectors are re-read by
-# several plan branches; HOF folds are interpreted, so recomputation is
-# the dominant cost). Same contract as operators/dedup.py: the persists
-# must outlive the lazy result, so callers run their action and then
-# call unpersist_cached().
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release every frame persisted by knn_graph; returns the count."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 PROBE_RADIUS = 2
@@ -487,8 +473,6 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str, vec_col: str,
     once per pair. At 100 TB this turns the heaviest exchange from
     vectors×bands into 20-byte id/sig rows, and AQE is free to
     broadcast the (small) candidate set into the vector joins."""
-    from pyspark import StorageLevel
-
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     sigs = e.select(
         id_col,
@@ -502,9 +486,8 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str, vec_col: str,
     # folds per vector and feeds BOTH self-join sides — persist so it
     # runs once per vector, not twice (the knn_graph sigs convention;
     # the cached band table is 3 narrow columns, 4 rows/vector).
-    # Released via unpersist_cached.
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sigs)
+    # Released via tables.release.
+    sigs = persist(sigs)
     a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
     b = sigs.select(F.col(id_col).alias("id_b"), "band", "sig")
     cand = (a.join(b, ["band", "sig"])
@@ -519,10 +502,8 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str, vec_col: str,
     # en feeds BOTH join-back sides, so the interpreted norm fold is
     # persisted once (N folds + cache write) instead of re-paid per
     # side (2N folds) — the knn_graph persist convention; released via
-    # unpersist_cached.
-    en = e.withColumn("nm", norm(F.col("v"))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(en)
+    # tables.release.
+    en = persist(e.withColumn("nm", norm(F.col("v"))))
     return (cand
             .join(en.select(F.col(id_col).alias("id_a"),
                             F.col("v").alias("va"),
@@ -558,22 +539,19 @@ def knn_graph(emb: DataFrame, id_col: str, vec_col: str,
     window over src (WindowGroupLimit prunes to k per key map-side
     before the shuffle). No driver-side state anywhere.
     """
-    from pyspark import StorageLevel
-
     e = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
     # sigs and normed vectors feed 2 and 3 plan branches respectively;
     # the HOF fold expressions are interpreted (not codegen), so each
     # recomputation pays the full O(bands·planes·dim) walk — persist
-    # both (tracked in _PERSISTED for unpersist_cached())
-    sigs = e.select(
+    # both (tracked by tables.persist)
+    sigs = persist(e.select(
         id_col,
         F.expr("explode(array(" + ", ".join(
             f"named_struct('band', {band}, 'sig', "
             + _lsh_bucket_sql("v", planes) + ")"
             for band, planes in enumerate(BAND_PLANES)) + "))").alias("bs"),
     ).select(id_col, F.col("bs.band").alias("band"),
-             F.col("bs.sig").alias("sig"))         .persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sigs)
+             F.col("bs.sig").alias("sig")))
     a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
     b = sigs.select(F.col(id_col).alias("id_b"), "band", "sig")
     half = (a.join(b, ["band", "sig"])
@@ -584,8 +562,7 @@ def knn_graph(emb: DataFrame, id_col: str, vec_col: str,
     # cosine recomputing norm(a)·norm(b) per pair would redo 2·dim ops
     # on every one of the ~N·k·bands candidates (the dominant term).
     # round(dot/(na·nb), 6) is bit-identical to cosine() — same doubles.
-    en = e.select(id_col, "v", norm(F.col("v")).alias("nm"))         .persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(en)
+    en = persist(e.select(id_col, "v", norm(F.col("v")).alias("nm")))
     # Score each UNORDERED pair once, then explode-mirror the scored
     # edge (r11, guide §2.3/§3.3): the former mirror-then-score unioned
     # the half-pair subtree and re-ran the vector joins AND the

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 from . import similarity as S
 
 QUERY_IDS = [0, 1, 2, 3, 4]
@@ -793,7 +793,7 @@ def _mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: MMR is inherently sequential in K, but it only ever runs on
     a top-N candidate pool (here from the exact scorer; from LSH/IVF
     at production). The pool is PERSISTED after the one corpus scan
-    (tracked, released via this module's ``unpersist_cached``), and the
+    (tracked, released via ``tables.release``), and the
     greedy loop is driver-paced: each round collects exactly ONE pick
     row (the BPE-argmax shape) and the next round's plan reads only
     the ≤ MMR_POOL-row cached pool — never the corpus. K−1 tiny jobs,
@@ -813,15 +813,13 @@ def _mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.where(F.col("vec_id") == QUERY_IDS[0])
          .select(F.col("v").alias("qv"))
          .withColumn("nq", S.norm(F.col("qv"))))
-    cand = (e.crossJoin(F.broadcast(q))
-            .where(F.col("vec_id") != QUERY_IDS[0])
-            .select("vec_id", "v",
-                    F.round(S.dot(F.col("qv"), F.col("v"))
-                            / (F.col("nq") * S.norm(F.col("v"))), 6)
-                     .alias("rel"))
-            .orderBy(F.desc("rel"), F.asc("vec_id")).limit(MMR_POOL)
-            .persist())
-    S._PERSISTED.append(cand)
+    cand = persist(e.crossJoin(F.broadcast(q))
+                   .where(F.col("vec_id") != QUERY_IDS[0])
+                   .select("vec_id", "v",
+                           F.round(S.dot(F.col("qv"), F.col("v"))
+                                   / (F.col("nq") * S.norm(F.col("v"))), 6)
+                            .alias("rel"))
+                   .orderBy(F.desc("rel"), F.asc("vec_id")).limit(MMR_POOL))
     first = (cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1)
              .select("vec_id", "rel").collect()[0])
     picks: list[tuple[int, int, float, float]] = [
@@ -901,7 +899,7 @@ INC_MOD, INC_REM = 10, 5
 
 def _inc_full_cents(spark: SparkSession, sf_dir: str):
     """(emb, vecs_all, cents_inc, cents_full): ONE quantization pass
-    over the corpus (persisted, tracked via clustering.unpersist_cached)
+    over the corpus (persisted, tracked by tables.persist)
     feeds both training chains — the incremental quantizer trains on
     the pre-batch subset of the SAME cached frame (quantization is
     per-row, so filtering the cached quantized corpus is bit-identical
@@ -919,20 +917,10 @@ def _inc_full_cents(spark: SparkSession, sf_dir: str):
     N_ITERS round-trips."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
-
     from . import clustering as CL
 
     emb = load(spark, sf_dir, "embeddings")
-    vecs_all = CL.fan_out(CL._quantized(emb), "vec_id").persist(
-        StorageLevel.MEMORY_AND_DISK)
-    CL._PERSISTED.append(vecs_all)
-    # the seed collect doubles as the persist materialization (the
-    # _refined_int_cents convention)
-    seed_rows = (vecs_all.where(F.col("vec_id").isin(CL.SEED_IDS))
-                 .select(F.col("vec_id").alias("cent_id"),
-                         F.col("v").alias("cv")).collect())
-    cents0 = sorted((r["cent_id"], list(r["cv"])) for r in seed_rows)
+    vecs_all, cents0 = CL._seeded_vecs(emb, CL.SEED_IDS)
     vecs_base = vecs_all.where(F.col("vec_id") % INC_MOD != INC_REM)
 
     def _chain(vecs, cents):
@@ -963,7 +951,7 @@ def _ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines); the oracle unrolls both training chains as CTEs.
 
     Scale: ONE quantization pass over the corpus (persisted, tracked
-    via clustering.unpersist_cached) feeds base training, full
+    by tables.persist) feeds base training, full
     training, and both assignment passes; every assignment is a
     broadcast join + WindowGroupLimit argmin. The incremental path is
     what runs per-batch at 100 TB — only the batch reshuffles; the
@@ -1511,20 +1499,18 @@ def _graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     _BEAM_ENTRIES smallest vec_ids (derived, not hard-coded).
 
     Scale: the graph build amortizes across queries (and is persisted
-    here, tracked via similarity._PERSISTED). Each round broadcasts the
+    here, tracked by tables.persist). Each round broadcasts the
     tiny (queries × B) beam against the adjacency list and joins the
     candidate ids back to vectors — the only big-frame operations are
     those two keyed joins; no corpus scan per query, no cross join
     anywhere. Rounds are driver-paced like bfs_levels, each round's
-    beam persisted and released via unpersist_cached().
+    beam persisted and released via tables.release().
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    e = (emb.select("vec_id", S.as_double(F.col("embedding")).alias("v"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    S._PERSISTED.append(e)
+    e = persist(
+        emb.select("vec_id", S.as_double(F.col("embedding")).alias("v")))
     # query norms precomputed ONCE on the tiny broadcast panel (r11):
     # _score re-ran the interpreted norm(qv) fold per candidate row per
     # round. norm(v) deliberately stays per candidate — hanging a norm
@@ -1534,12 +1520,10 @@ def _graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.where(F.col("vec_id").isin(QUERY_IDS))
          .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
          .withColumn("nq", S.norm(F.col("qv"))))
-    und = (S.knn_graph(emb, "vec_id", "embedding", k=KNN_K)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    S._PERSISTED.append(und)
+    und = persist(S.knn_graph(emb, "vec_id", "embedding", k=KNN_K)
+                  .select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
+                  .distinct())
     adj = und.unionAll(und.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
 
@@ -1562,8 +1546,7 @@ def _graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("node"))
     beam = _score(q.select("qid").crossJoin(entries))
     for _ in range(_BEAM_ROUNDS):
-        beam = beam.persist(StorageLevel.MEMORY_AND_DISK)
-        S._PERSISTED.append(beam)
+        beam = persist(beam)
         nbrs = (beam.join(adj, beam.node == adj.a)
                 .select("qid", F.col("b").alias("node")))
         cand = beam.select("qid", "node").unionAll(nbrs).distinct()

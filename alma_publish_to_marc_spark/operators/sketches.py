@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 
 KMV_K = 256
 HLL_M = 256          # 2^8 buckets, first 2 hex chars of md5
@@ -50,17 +50,6 @@ TOPN = 20
 
 
 SHINGLE_N = 3
-
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -110,17 +99,14 @@ def kmv_distinct(spark: SparkSession, sf_dir: str, k: int = KMV_K) -> DataFrame:
     (aggregate k-sets, union, re-truncate); the estimate itself is
     exact int64 math so both engines agree to the last digit.
     """
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
     # ONE tokenize pass + ONE corpus-wide distinct on the 16-byte md5
     # key feeds both branches (persisted — vocab-sized): the 48-bit
     # sketch hash is the first 6 md5 bytes, so distinct(h48(gram)) ==
     # distinct(h48 over distinct md5s) — the former shape ran the
     # shingle explode twice and shuffled the corpus once per branch.
-    dm = (_tokens(docs).select(F.unhex(F.md5("gram")).alias("mh"))
-          .distinct().persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(dm)
+    dm = persist(_tokens(docs).select(F.unhex(F.md5("gram")).alias("mh"))
+                 .distinct())
     hashes = (dm.select(F.conv(F.hex(F.substring("mh", 1, 6)), 16, 10)
                         .cast("long").alias("h")).distinct())
     kth = (hashes.orderBy("h").limit(k)
@@ -183,10 +169,6 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = _tokens(docs)
     md5c = F.md5(F.col("gram"))
-    bucket = F.conv(F.substring(md5c, 1, 2), 16, 10).cast("long")
-    v = F.conv(F.substring(md5c, 3, 12), 16, 10).cast("long")
-    rho = F.when(v == 0, F.lit(49).cast("long")) \
-           .otherwise(F.lit(49) - F.length(F.bin(v))).cast("long")
     # One pass: distinct the md5 keys FIRST (one shuffle, map-side
     # partial dedup), then derive bucket/rho from the already-distinct
     # keys — bucket and rho are pure functions of the hash, so the
@@ -199,11 +181,11 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (CLAUDE.md shuffle-key rule — halves the distinct exchange);
     # bucket = first byte, v = bytes 2-7, identical values
     dh = toks.select(F.unhex(md5c).alias("mh")).distinct()
-    b2 = F.conv(F.hex(F.substring("mh", 1, 1)), 16, 10).cast("long")
-    v2 = F.conv(F.hex(F.substring("mh", 2, 6)), 16, 10).cast("long")
-    rho2 = F.when(v2 == 0, F.lit(49).cast("long")) \
-            .otherwise(F.lit(49) - F.length(F.bin(v2))).cast("long")
-    regs = (dh.select(b2.alias("bucket"), rho2.alias("rho"))
+    bucket = F.conv(F.hex(F.substring("mh", 1, 1)), 16, 10).cast("long")
+    v = F.conv(F.hex(F.substring("mh", 2, 6)), 16, 10).cast("long")
+    rho = F.when(v == 0, F.lit(49).cast("long")) \
+           .otherwise(F.lit(49) - F.length(F.bin(v))).cast("long")
+    regs = (dh.select(bucket.alias("bucket"), rho.alias("rho"))
             .groupBy("bucket").agg(F.max("rho").alias("m_j"),
                                    F.count(F.lit(1)).alias("dc")))
     sums = regs.agg(
@@ -278,20 +260,16 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for whatever candidate stream production probes (the
     sketch itself never stores terms).
     """
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
     # persisted: tc feeds one sketch-cell branch per CMS row plus the
     # exact top-N probe — unpersisted, the tokenize + term count ran
-    # once per branch (released via the module's unpersist_cached)
-    tc = (_tokens(docs)
-          .select(F.unhex(F.md5("gram")).alias("gk"), "gram")
-          .groupBy("gk")
-          .agg(F.count(F.lit(1)).alias("exact_count"),
-               F.min("gram").alias("gram"))
-          .select("gram", "exact_count")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(tc)
+    # once per branch (released via tables.release)
+    tc = persist(_tokens(docs)
+                 .select(F.unhex(F.md5("gram")).alias("gk"), "gram")
+                 .groupBy("gk")
+                 .agg(F.count(F.lit(1)).alias("exact_count"),
+                      F.min("gram").alias("gram"))
+                 .select("gram", "exact_count"))
     cells = None
     for row, salt in enumerate(CMS_SALTS):
         part = tc.select(
@@ -1287,10 +1265,8 @@ def hll_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    " div 86400000000") + 4) % 7)
     base = ev.select(dow.alias("dow"), F.col("event_type").alias("et"),
                      "user_id", bucket.alias("bucket"), rho.alias("rho"))
-    cells = (base.groupBy("dow", "et", "bucket")
-             .agg(F.max("rho").alias("m_j"))
-             .persist())
-    _PERSISTED.append(cells)
+    cells = persist(base.groupBy("dow", "et", "bucket")
+                    .agg(F.max("rho").alias("m_j")))
 
     def est(regs, keys):
         sums = regs.groupBy(*keys).agg(
@@ -1431,9 +1407,8 @@ def hll_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
     base = ev.select(day.alias("day"), "user_id",
                      bucket.alias("bucket"), rho.alias("rho"))
-    regs = (base.groupBy("day", "bucket")
-            .agg(F.max("rho").alias("m_j")).persist())
-    _PERSISTED.append(regs)
+    regs = persist(base.groupBy("day", "bucket")
+                   .agg(F.max("rho").alias("m_j")))
     days = regs.select("day").distinct()
     win = (days.alias("d")
            .join(regs.alias("r"),
@@ -1542,19 +1517,15 @@ def countsketch_point_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered candidate set broadcast-joined against it. Everything
     is exact int64; no floats anywhere.
     """
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
     # persisted: tc feeds one signed-cell branch per sketch row plus
     # the exact top-N probe (the cms_heavy_hitters reasoning)
-    tc = (_tokens(docs)
-          .select(F.unhex(F.md5("gram")).alias("gk"), "gram")
-          .groupBy("gk")
-          .agg(F.count(F.lit(1)).alias("exact_count"),
-               F.min("gram").alias("gram"))
-          .select("gram", "exact_count")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(tc)
+    tc = persist(_tokens(docs)
+                 .select(F.unhex(F.md5("gram")).alias("gk"), "gram")
+                 .groupBy("gk")
+                 .agg(F.count(F.lit(1)).alias("exact_count"),
+                      F.min("gram").alias("gram"))
+                 .select("gram", "exact_count"))
     cells = None
     for row, salt in enumerate(CS_SALTS):
         part = tc.select(

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 
 
 # --------------------------------------------------------------------------
@@ -1228,14 +1228,12 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     `div` on non-negative cents, so truncation == floor.
 
     Scale: per-customer aggregate is one keyed shuffle (persisted,
-    released via unpersist_cached — three score branches and the
+    released via tables.release — three score branches and the
     final join reuse it); each score is a map-side-combinable bucket
     count plus a bucket-partitioned window; scores rejoin on the
     customer key. The only single-partition stages are the final
     1-row reduces fed by aggregates (AUDIT single_part=2, bounded
     by construction); no fact-scale stage is ever single-task."""
-    from pyspark import StorageLevel
-
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr("unix_micros(cast(o_orderdate as timestamp))"
@@ -1246,12 +1244,11 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.count(F.lit(1)).alias("frequency"),
                      F.sum("price_c").alias("monetary_c")))
     maxday = per_cust.agg(F.max("last_day").alias("max_day"))
-    base = (per_cust.join(F.broadcast(maxday))
-            .select("o_custkey",
-                    (F.col("max_day") - F.col("last_day")).alias("recency_d"),
-                    "frequency", "monetary_c")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _SHAP_PERSISTED.append(base)
+    base = persist(
+        per_cust.join(F.broadcast(maxday))
+        .select("o_custkey",
+                (F.col("max_day") - F.col("last_day")).alias("recency_d"),
+                "frequency", "monetary_c"))
     total = base.agg(F.count(F.lit(1)).cast("long").alias("nn"))
 
     def quint(metric_col, asc, name, bucket_width=None):
@@ -2829,16 +2826,10 @@ def markov_next_event_accuracy(spark: SparkSession,
     # pairs feeds four plan branches (counts, model, base, scored):
     # persist or the lead-window pass re-executes per branch
     # (CLAUDE.md multi-branch hazard)
-    from pyspark import StorageLevel
-
-    from ..operators import similarity as _sim
-
-    pairs = (ev.select("user_id",
-                       F.col("event_type").alias("from_type"),
-                       F.lead("event_type").over(w).alias("to_type"))
-             .where(F.col("to_type").isNotNull())
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _sim._PERSISTED.append(pairs)
+    pairs = persist(ev.select("user_id",
+                              F.col("event_type").alias("from_type"),
+                              F.lead("event_type").over(w).alias("to_type"))
+                    .where(F.col("to_type").isNotNull()))
     train = pairs.where(F.col("user_id") % 5 != 0)
     test = pairs.where(F.col("user_id") % 5 == 0)
     counts = (train.groupBy("from_type", "to_type")
@@ -4494,18 +4485,14 @@ def chi2_cell_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side aggregate to |types| x 7 cells, marginals
     derived from the cell frame (persisted; released via
-    unpersist_cached()).
+    tables.release()).
     """
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         F.expr("(unix_micros(cast(ts as timestamp)) div 86400000000"
                " + 4) % 7").alias("dow"))
-    cells = (ev.groupBy("event_type", "dow")
-             .agg(F.count(F.lit(1)).alias("o"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _SHAP_PERSISTED.append(cells)
+    cells = persist(ev.groupBy("event_type", "dow")
+                    .agg(F.count(F.lit(1)).alias("o")))
     rows_ = cells.groupBy("event_type").agg(F.sum("o").alias("rt"))
     cols_ = cells.groupBy("dow").agg(F.sum("o").alias("ct"))
     tot = cells.agg(F.sum("o").alias("nn"))
@@ -4548,17 +4535,6 @@ JOIN rows_ r USING (event_type)
 JOIN cols_ cl USING (dow)
 CROSS JOIN tot t
 """
-
-# cells-persist ledger shared with the shapley query's module scope
-_SHAP_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_SHAP_PERSISTED)
-    while _SHAP_PERSISTED:
-        _SHAP_PERSISTED.pop().unpersist()
-    return n
 
 
 QUERIES["chi2_cell_residuals"] = (chi2_cell_residuals, _CHI2_CELLS_SQL)

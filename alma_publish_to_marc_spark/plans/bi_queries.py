@@ -18,20 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..epochs import US_PER_DAY, day_col, sql_day
-from ..tables import load
+from ..tables import load, persist
 
 QUERIES: dict = {}
-
-# Persisted frames released via unpersist_cached() (repo convention)
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 # --------------------------------------------------------------------------
@@ -249,8 +238,7 @@ def heavy_hitter_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both half-tops read the per-user counts — persist so the events
     # scan runs once (multi-branch rule); the K-row rank windows and
     # the K-row full-outer join are bounded by construction
-    counts = counts.persist()
-    _PERSISTED.append(counts)
+    counts = persist(counts)
 
     def top(col):
         t = (counts.select("user_id", F.col(col).alias("cnt"))

@@ -31,16 +31,17 @@ authoritative inventory). Landmarks by sub-family:
 
 Scale notes are on each query; nothing collects to the driver in a hot
 path (greedy coverage's 1-row-per-round argmax is the sanctioned
-k-means idiom), and persisted frames release via unpersist_cached().
+k-means idiom), and persisted frames release via tables.release().
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import fan_out, load
+from ..tables import fan_out, load, on_release, persist
 
 NGRAM = 8  # words per span; 8 keeps the sf0.01 corpus (10-99 words/doc) honest
 
@@ -183,7 +184,7 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ONE gram-key shuffle (``count() OVER (PARTITION BY gram_key)``
     replaces the old aggregate-then-join that exploded the corpus
     twice; VERDICT r06 item 1), the split docs frame persisted
-    (tracked, released via :func:`unpersist_cached`) so the rewrite
+    (tracked, released via :func:`tables.release`) so the rewrite
     branch reads the cached split instead of re-scanning/re-splitting
     documents — plus one doc_id-keyed aggregation collecting each doc's
     duplicated span STARTS (bounded by words/doc, not corpus size).
@@ -195,10 +196,8 @@ def duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     order never matters (pure membership test), so collect_list's
     nondeterministic order is safe.
     """
-    docs = load(spark, sf_dir, "documents") \
-        .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(docs)
+    docs = persist(load(spark, sf_dir, "documents")
+                .select("doc_id", F.split(F.trim("text"), r"\s+").alias("w")))
     spans = span_keys(docs)
     dup_starts = (spans
                   .withColumn("cnt", F.count(F.lit(1))
@@ -485,8 +484,6 @@ SELECT s.source, s.n_docs, s.total_chars, s.avg_chars,
        s.short_doc_share
 FROM stats s JOIN dominant d USING (source)
 """
-
-
 
 
 def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1977,20 +1974,6 @@ QUERIES["covariate_shift_weights"] = (covariate_shift_weights, _CSW_SQL)
 
 COV_K = 5
 
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries (and drop the
-    suffix-chain memo, whose entries point at those persists)."""
-    _SFX_CHAIN.clear()
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
 
 def greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Submodular data selection: pick K documents that greedily
@@ -2009,7 +1992,7 @@ def greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL alike).
 
     Scale: the (doc, key) incidence is built ONCE and persisted
-    (released via unpersist_cached()); each greedy round is one
+    (released via tables.release()); each greedy round is one
     anti-join of that frame against the covered-key set (the keys of
     <=K picked docs — broadcast-sized at any corpus scale) plus a
     map-side-combinable count and a 1-row argmax collect — the
@@ -2020,8 +2003,6 @@ def greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     this shape at sf0.1; recomputing covered from the CACHED dt wins
     at K = 5.)
     """
-    from pyspark import StorageLevel
-
     # fan_out: the split+bigram explode+md5 incidence build fuses into
     # the single-row-group scan (guide §2.5 input skew; no-op at scale).
     docs = fan_out(load(spark, sf_dir, "documents"), "doc_id").select(
@@ -2032,11 +2013,9 @@ def greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
            .otherwise(F.array().cast("array<int>"))
     grams = F.transform(idx, lambda i: F.concat_ws(
         " ", F.element_at(F.col("w"), i), F.element_at(F.col("w"), i + 1)))
-    dt = (docs.select("doc_id", F.explode(grams).alias("g"))
-          .select("doc_id", F.unhex(F.md5("g")).alias("k"))
-          .distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(dt)
+    dt = persist(docs.select("doc_id", F.explode(grams).alias("g"))
+                 .select("doc_id", F.unhex(F.md5("g")).alias("k"))
+                 .distinct())
     total = dt.select("k").distinct().count()
 
     picks: list[int] = []
@@ -2145,18 +2124,14 @@ def empirical_bayes_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable aggregate to K source rows
     (persisted — the grand/MS aggregates and the final projection both
-    read it; released via unpersist_cached()); everything after is
+    read it; released via tables.release()); everything after is
     K-row algebra.
     """
-    from pyspark import StorageLevel
-
     d = load(spark, sf_dir, "documents").select("source", "n_chars")
-    g = (d.groupBy("source")
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum("n_chars").alias("sy"),
-              F.sum(F.col("n_chars") * F.col("n_chars")).alias("syy"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(g)
+    g = persist(d.groupBy("source")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.sum("n_chars").alias("sy"),
+                     F.sum(F.col("n_chars") * F.col("n_chars")).alias("syy")))
     # within/between double sums go through an explicit source-sorted
     # left fold (CLAUDE.md float-reduction rule — engine-default SUM
     # order over doubles is not portable)
@@ -2822,7 +2797,7 @@ def _suffix_levels(spark: SparkSession,
     share the block-key partitioning); level-(L+1) input is only the
     hot tail of level L, so work shrinks geometrically on natural text.
     Every level's windowed frame and finalized frame PERSIST (tracked,
-    released via unpersist_cached): the chain is self-referential
+    released via tables.release): the chain is self-referential
     (level L+1 branches off level L) and the finalized frames feed two
     candidate branches each — unpersisted, the interpreted LCP folds
     re-pay the whole chain per branch (CLAUDE.md multi-branch rule;
@@ -2843,12 +2818,10 @@ def _suffix_levels(spark: SparkSession,
         cur = part.select("doc_id", "i", "key", bl.alias("bl"))
         wcnt = Window.partitionBy("bl")
         wsort = Window.partitionBy("bl").orderBy("key", "doc_id", "i")
-        cur = (cur
-               .withColumn("n", F.count(F.lit(1)).over(wcnt))
-               .withColumn("nkey", F.lead("key").over(wsort))
-               .withColumn("pkey", F.lag("key").over(wsort))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-        _PERSISTED.append(cur)
+        cur = persist(cur
+                      .withColumn("n", F.count(F.lit(1)).over(wcnt))
+                      .withColumn("nkey", F.lead("key").over(wsort))
+                      .withColumn("pkey", F.lag("key").over(wsort)))
         if all_sfx is None:
             # level 2's windowed frame still holds EVERY suffix (the
             # hot-tail filter only applies from the next level on) —
@@ -2879,13 +2852,11 @@ def _suffix_levels(spark: SparkSession,
                         F.expr(_SFX_LCP_EXPR).cast("int").alias("plcp")))
         grant = (F.least(F.lit(lvl - 1), F.size("ka")) if lvl > 2
                  else F.lit(0))
-        fin_frame = prev.select(
+        fin_frame = persist(prev.select(
             "doc_id", "i", "key", "ka", "lcp",
             F.greatest(F.coalesce("lcp", F.lit(0)),
                        F.coalesce("plcp", F.lit(0)),
-                       grant).cast("int").alias("best")) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(fin_frame)
+                       grant).cast("int").alias("best")))
         out.append(fin_frame)
         if not is_final:
             part = (cur.where(F.col("n") > _SFX_CAP)
@@ -2899,10 +2870,9 @@ def _suffix_levels(spark: SparkSession,
 # driver pass running several of them rebuilt and re-persisted the
 # multi-level shuffle chain per key (27.5 s + 34.2 s at sf1, r11
 # VERDICT item 3). The memo holds lazy persisted DataFrames (never
-# collected results) and is cleared by unpersist_cached() together with
-# the persists it points at, so the bench's per-key
-# registry.release_caches() keeps every benched key computing from the
-# parquet inputs alone.
+# collected results); each entry is evicted by tables.release() together
+# with the persists it points at, so the bench's per-key release keeps
+# every benched key computing from the parquet inputs alone.
 _SFX_CHAIN: dict = {}
 
 
@@ -2916,6 +2886,7 @@ def _suffix_chain(spark: SparkSession,
     hit = _SFX_CHAIN.get(key)
     if hit is None:
         hit = _SFX_CHAIN[key] = _suffix_levels(spark, sf_dir)
+        on_release(partial(_SFX_CHAIN.pop, key, None))
     return hit
 
 

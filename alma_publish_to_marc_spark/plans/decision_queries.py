@@ -22,20 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..epochs import US_PER_DAY, day_col, sql_day
-from ..tables import load
+from ..tables import load, persist
 
 QUERIES: dict = {}
-
-# Persisted frames released via unpersist_cached() (repo convention)
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 # --------------------------------------------------------------------------
@@ -223,8 +212,7 @@ def abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.length(F.bin("rev_c")).alias("bucket")))
     # parts feeds the within-bucket window, the bucket walk, and the
     # total — persist so lineitem scans once (multi-branch rule)
-    parts = parts.persist()
-    _PERSISTED.append(parts)
+    parts = persist(parts)
     w_in = (Window.partitionBy("bucket")
             .orderBy(F.col("rev_c").desc(), F.col("l_partkey").asc())
             .rowsBetween(Window.unboundedPreceding, -1))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import EVENT_TYPES, load
+from ..tables import EVENT_TYPES, load, persist
 
 
 def _stack(agg: DataFrame, table: str,
@@ -1455,19 +1455,6 @@ QUERIES["consistent_hash_rebalance_audit"] = (
     consistent_hash_rebalance_audit, _REBALANCE_SQL)
 
 
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
-
 # ---------------------------------------------------------------------------
 # Wasserstein-1 distribution shift per source (exact integer 1-D EMD)
 # ---------------------------------------------------------------------------
@@ -1497,21 +1484,18 @@ def wasserstein_source_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable); everything after runs on that tiny frame —
     overall totals, per-source totals, and the pooled CDF all DERIVE
     from it rather than re-scanning the corpus (multi-branch hazard:
-    the aggregate is persisted, released via unpersist_cached()).
+    the aggregate is persisted, released via tables.release()).
     Headroom: 1e6 * buckets * Ns * N must stay < 2^63 — fine to
     Ns*N < 4.6e11; past that lift the gap sum to double (both engines'
     sums stay exact integers well beyond any real corpus first).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents").select(
         "source",
         F.expr(f"least(n_chars div {WASS_WIDTH},"
                f" {WASS_BUCKETS - 1})").alias("b"))
-    c = (d.groupBy("source", "b").agg(F.count(F.lit(1)).alias("n"))
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(c)
+    c = persist(d.groupBy("source", "b").agg(F.count(F.lit(1)).alias("n")))
     srcs = c.select("source").distinct()
     buckets = spark.range(WASS_BUCKETS).select(F.col("id").alias("b"))
     dense = (srcs.crossJoin(F.broadcast(buckets))

@@ -26,17 +26,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
-
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
+from ..tables import load, persist
 
 
 # --------------------------------------------------------------------------
@@ -95,24 +85,21 @@ def _retrieval_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings are md5-keyed distinct tokens, built ONCE and persisted
     (they feed both the panel extraction and the corpus side of the
     match join — without the persist the corpus explode+distinct
-    would run twice; released via unpersist_cached); one shuffle to
+    would run twice; released via tables.release); one shuffle to
     group (qid, doc) match counts; the per-qid top-10 window
     partitions on qid (panel-bounded, never the corpus). 100 TB:
     panel broadcast unchanged; the postings join is the same shape
     as bm25_topk.
     """
-    from pyspark import StorageLevel
-
     docs = load(spark, sf_dir, "documents")
     meta = docs.select("doc_id", "source", "lang")
-    toks = (docs.select("doc_id",
-                        F.explode(F.split(F.trim(F.lower(F.col("text"))),
-                                          r"\s+")).alias("w"))
-            .where(F.col("w") != "")
-            .select("doc_id", F.unhex(F.md5("w")).alias("wk"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(toks)
+    toks = persist(
+        docs.select("doc_id",
+                    F.explode(F.split(F.trim(F.lower(F.col("text"))),
+                                      r"\s+")).alias("w"))
+        .where(F.col("w") != "")
+        .select("doc_id", F.unhex(F.md5("w")).alias("wk"))
+        .distinct())
     qdocs = (meta.where(F.col("doc_id") % 101 == 0)
              .orderBy("doc_id").limit(_RANK_NQ))
     qtoks = (toks.join(F.broadcast(qdocs.select("doc_id")), "doc_id")
@@ -1209,16 +1196,14 @@ def _cardinality_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-row grid is PERSISTED because it feeds four plan branches
     (tot/rf/ls/rows — without the persist each branch re-scans the
     fact table, the CLAUDE.md multi-branch hazard); released via
-    unpersist_cached.
+    tables.release.
     """
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity")
     qty_sums = [F.sum((F.col("l_quantity") >= q).cast("long"))
                 .alias(f"t{q}") for q in _CARD_QTY]
-    grid = (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).alias("n_cell"), *qty_sums)
-            .persist())
-    _PERSISTED.append(grid)
+    grid = persist(li.groupBy("l_returnflag", "l_linestatus")
+                   .agg(F.count(F.lit(1)).alias("n_cell"), *qty_sums))
     tot = grid.agg(
         F.sum("n_cell").alias("n"),
         *[F.sum(f"t{q}").alias(f"g{q}") for q in _CARD_QTY])

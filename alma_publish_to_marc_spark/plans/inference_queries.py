@@ -45,21 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 
 QUERIES: dict = {}
-
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 DAY_US = 86_400_000_000
@@ -780,13 +768,10 @@ def _huber_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to the broadcast |types|-row mu frame — the kmeans shape;
     no driver collect, no growing state.
     """
-    from pyspark import StorageLevel
-
-    ev = load(spark, sf_dir, "events").select(
+    # K+2 consumers: base + each round + final
+    ev = persist(load(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("cast(round(value * 100, 0) as bigint)").alias("c")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(ev)  # K+2 consumers: base + each round + final
+        F.expr("cast(round(value * 100, 0) as bigint)").alias("c")))
     base = ev.groupBy("event_type").agg(
         F.sum("c").alias("s"), F.count(F.lit(1)).alias("n"))
     # Spark `div` and DuckDB integer `//` both truncate toward zero

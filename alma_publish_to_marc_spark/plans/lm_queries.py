@@ -30,26 +30,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..tables import fan_out, load
+from ..tables import fan_out, load, persist
 
 # Laplace add-one smoothing over the observed vocabulary: an unseen
 # continuation of word a scores 1 / (c(a) + V). Constant chosen over
 # interpolation because it is exactly reproducible in integer-ratio
 # space (both engines compute (cb+1)/(cu+V) as a single BIGINT/BIGINT
 # double division — bit-identical inputs to ln()).
-
-# Frames persisted by queries in this module because they feed several
-# plan branches (the interpreted-fold/reused-frame convention of
-# operators/dedup.py); released via unpersist_cached, which
-# registry.release_caches discovers generically.
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 def ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,8 +66,6 @@ def ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-sensitive only below ~1e-12 relative, 8 decimal digits under
     the round(·, 4) contract.
     """
-    from pyspark import StorageLevel
-
     # fan_out: the tokenize + explode + double-md5 passes below are the
     # per-row-heavy work, and a single-file scan would run them in one
     # task (guide §2.5; no-op on many-split inputs)
@@ -89,13 +74,11 @@ def ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persisted: uni feeds the model's denominator join AND the
     # vocabulary-size aggregate — unpersisted, the corpus token explode
-    # + hash + count ran once per branch (released via the module's
-    # unpersist_cached hook)
-    uni = (docs.select(F.explode("w").alias("tok"))
-           .groupBy(F.unhex(F.md5("tok")).alias("uk"))
-           .agg(F.count(F.lit(1)).alias("uc"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(uni)
+    # + hash + count ran once per branch (released via
+    # tables.release)
+    uni = persist(docs.select(F.explode("w").alias("tok"))
+                  .groupBy(F.unhex(F.md5("tok")).alias("uk"))
+                  .agg(F.count(F.lit(1)).alias("uc")))
     vstats = uni.agg(F.count(F.lit(1)).alias("v_size"))
 
     idx = F.when(F.size("w") >= 2, F.sequence(F.lit(1), F.size("w") - 1)) \
@@ -105,16 +88,15 @@ def ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bigram explode + two md5 hashes per pair ran twice (the two
     # consumers hash-partition on different keys, so ReuseExchange
     # cannot dedup them)
-    pairs = (docs
-             .select("doc_id", F.explode(F.transform(idx, lambda i: F.struct(
-                 F.element_at(F.col("w"), i).alias("a"),
-                 F.element_at(F.col("w"), i + 1).alias("b")))).alias("p"))
-             .select("doc_id",
-                     F.unhex(F.md5("p.a")).alias("uk"),
-                     F.unhex(F.md5(F.concat_ws("\x1f", "p.a", "p.b")))
-                      .alias("bk"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(pairs)
+    pairs = persist(
+        docs
+        .select("doc_id", F.explode(F.transform(idx, lambda i: F.struct(
+            F.element_at(F.col("w"), i).alias("a"),
+            F.element_at(F.col("w"), i + 1).alias("b")))).alias("p"))
+        .select("doc_id",
+                F.unhex(F.md5("p.a")).alias("uk"),
+                F.unhex(F.md5(F.concat_ws("\x1f", "p.a", "p.b")))
+                 .alias("bk")))
     # model build: bigram counts, then the vocab-sized denominator join
     # (uk is functionally dependent on bk, so it rides the groupBy key)
     model = (pairs.groupBy("bk", "uk")

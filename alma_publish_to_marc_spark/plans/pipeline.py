@@ -26,6 +26,7 @@ from ..functions.scalars import (format_number_dashes, format_oclc,
                                  suppress_flag)
 from ..operators import upsert as U
 from ..sources import publish as P
+from ..tables import release
 from .publish_split import split_publish
 
 WAREHOUSE_TABLES = ("bib_brief", "holding_brief", "item", "bib_part",
@@ -283,6 +284,7 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
 
     counters = metrics.run_counters(out, records)
     counters["cnt_deletes"] = deletes.count()
+    release()  # the split's persisted rows have served every consumer
     return counters
 
 

@@ -58,26 +58,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alma_publish_to_marc_spark.tables import load
+from alma_publish_to_marc_spark.tables import load, persist
 
 QUERIES: dict = {}
 
 _N_ANNOTATORS = 3
 _BT_ROUNDS = 6
 _BT_SCALE = 1_000_000_000_000  # e12: e6-strengths -> e6-scaled terms
-
-# Module persist-release convention (operators/clustering.py contract).
-# The BT rounds run driver-side on the collected win matrix, so this
-# family currently persists nothing; the hook stays for uniformity.
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    """Release any frames persisted by this family."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 def _noise_sql(cmp_id: str, h: str) -> str:
@@ -572,10 +559,8 @@ def preference_transitivity_audit(spark: SparkSession,
     Scale: ONE corpus pass reduces to <=|models|^2 majority-edge
     rows, persisted (it feeds four branches: edges, tie stats, model
     census, and the triad joins — the CLAUDE.md multi-branch
-    re-execution hazard) and released via unpersist_cached(); the
+    re-execution hazard) and released via tables.release(); the
     triple self-join runs on that broadcast-sized frame."""
-    from pyspark import StorageLevel
-
     v = _votes(spark, sf_dir).where(F.col("src_a") != F.col("src_b"))
     canon = v.select(
         F.least("src_a", "src_b").alias("m1"),
@@ -584,11 +569,9 @@ def preference_transitivity_audit(spark: SparkSession,
                (F.col("src_a") < F.col("src_b")).cast("long"))
          .otherwise((F.col("src_b") < F.col("src_a")).cast("long"))
          .alias("win1"))
-    pairs = (canon.groupBy("m1", "m2")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("win1").alias("w1"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(pairs)
+    pairs = persist(canon.groupBy("m1", "m2")
+                    .agg(F.count(F.lit(1)).alias("n"),
+                         F.sum("win1").alias("w1")))
     edges = (pairs
              .select(F.when(2 * F.col("w1") > F.col("n"), F.col("m1"))
                       .when(2 * F.col("w1") < F.col("n"), F.col("m2"))
@@ -746,11 +729,9 @@ def preference_qa_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: BT's one corpus aggregate + driver-paced rounds; the edge
     census is the same <=|models|^2 majority-pair aggregate as the
     transitivity audit (persisted — it feeds both union sides —
-    released via unpersist_cached()); kappa is one aggregate to 3
+    released via tables.release()); kappa is one aggregate to 3
     rows. Joins run on |models| rows.
     """
-    from pyspark import StorageLevel
-
     bt = bradley_terry_strength(spark, sf_dir)
     v = _votes(spark, sf_dir).where(F.col("src_a") != F.col("src_b"))
     canon = v.select(
@@ -760,11 +741,9 @@ def preference_qa_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
                (F.col("src_a") < F.col("src_b")).cast("long"))
          .otherwise((F.col("src_b") < F.col("src_a")).cast("long"))
          .alias("win1"))
-    pairs = (canon.groupBy("m1", "m2")
-             .agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("win1").alias("w1"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(pairs)
+    pairs = persist(canon.groupBy("m1", "m2")
+                    .agg(F.count(F.lit(1)).alias("n"),
+                         F.sum("win1").alias("w1")))
     sides = (pairs.select(F.col("m1").alias("model"),
                           (2 * F.col("w1") > F.col("n")).cast("long")
                           .alias("win"),
@@ -1031,11 +1010,9 @@ def dawid_skene_label_model(spark: SparkSession,
     rounds stay two scans each; parameters always drive as broadcast
     1-row frames (the raking/weiszfeld idiom).
     """
-    f = (_flags(spark, sf_dir)
-         .select("cmp_id", "p0", "p1", "p2")
-         .withColumn("q", F.expr(f"({_DS_S} * (p0 + p1 + p2)) div 3"))
-         .persist())
-    _PERSISTED.append(f)
+    f = persist(_flags(spark, sf_dir)
+                .select("cmp_id", "p0", "p1", "p2")
+                .withColumn("q", F.expr(f"({_DS_S} * (p0 + p1 + p2)) div 3")))
     for _ in range(_DS_ROUNDS):
         aggs = [F.sum("q").cast("long").alias("sq"),
                 F.sum(F.expr(f"{_DS_S} - q")).cast("long").alias("s1q"),

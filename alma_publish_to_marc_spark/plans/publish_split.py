@@ -46,6 +46,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, StringType,
 
 from ..functions import marc as M
 from ..schemas import CONTROL_FIELD, DATA_FIELD
+from ..tables import persist
 
 _GROUPS_T = ArrayType(ArrayType(CONTROL_FIELD))
 _CUR_T = ArrayType(CONTROL_FIELD)
@@ -278,9 +279,7 @@ def split_publish_catalyst(records: DataFrame) -> dict[str, DataFrame]:
     # expression-heavy staged columns; HOF expressions are interpreted
     # (CodegenFallback), so recomputing them per branch is the dominant
     # cost — persist once, serve four.
-    from pyspark import StorageLevel
-
-    staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
+    staged = persist(staged)
     ok = staged.where(F.col("error").isNull())
 
     bibs = (ok.select(

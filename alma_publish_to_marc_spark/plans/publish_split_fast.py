@@ -26,6 +26,7 @@ from pyspark.sql.types import (ArrayType, StringType, StructField, StructType)
 
 from ..functions.scalars import INSTITUTION_SUFFIXES
 from ..schemas import (CONTROL_FIELD, DATA_FIELD, ITEM_STRUCT, PUBLISH_RECORD)
+from ..tables import persist
 
 HOLDING_PREFIX = "22"
 
@@ -244,9 +245,7 @@ def split_rows(records: DataFrame) -> DataFrame:
 
 def split_publish_fast(records: DataFrame) -> dict[str, DataFrame]:
     """Drop-in equivalent of publish_split.split_publish."""
-    from pyspark import StorageLevel
-
-    rows = split_rows(records).persist(StorageLevel.MEMORY_AND_DISK)
+    rows = persist(split_rows(records))
     ok = rows.where(F.col("error").isNull())
     bibs = (ok.select(F.col("bib.*"), F.col("source_file"))
             .dropDuplicates(["mms_id"]))

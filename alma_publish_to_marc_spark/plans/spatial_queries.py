@@ -51,24 +51,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import fan_out, load
+from ..tables import fan_out, load, persist
 
 SP_CELL = 16            # grid-cell edge == neighbor radius
 SP_R2 = SP_CELL * SP_CELL
 SP_OCC = 16             # target mean points-per-cell (density bound)
 SP_NBR_BUCKET = 8       # histogram bucket width for neighbor counts
-
-# Frames persisted because they feed several plan branches (the
-# operators/dedup.py convention); released via unpersist_cached, which
-# registry.release_caches discovers generically.
-_PERSISTED: list[DataFrame] = []
-
-
-def unpersist_cached() -> int:
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
 
 
 def _coord(seed: str, key: str) -> str:
@@ -112,16 +100,11 @@ def _pts_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two per-row md5 coordinate derivations and the side-frame count
     aggregate once per branch. fan_out spreads the derivation off the
     single-row-group driver scan (r11 profile: 2.6 s single-task stage;
-    no-op on many-split inputs). Released via unpersist_cached."""
-    from pyspark import StorageLevel
-
-    pts = fan_out(_points(spark, sf_dir), "event_id").select(
+    no-op on many-split inputs). Released via tables.release."""
+    return persist(fan_out(_points(spark, sf_dir), "event_id").select(
         "event_id", "x", "y",
         F.expr(f"x div {SP_CELL}").alias("cx"),
-        F.expr(f"y div {SP_CELL}").alias("cy")).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pts)
-    return pts
+        F.expr(f"y div {SP_CELL}").alias("cy")))
 
 
 def _probe_3x3(pts: DataFrame) -> DataFrame:
@@ -416,7 +399,6 @@ LIMIT {HOT_TOPK}
 """
 
 
-
 # ---------------------------------------------------------------------------
 # boruvka_lightest_edges: round 1 of Borůvka MST on the proximity graph
 # ---------------------------------------------------------------------------
@@ -500,8 +482,6 @@ GROUP BY 1
 """
 
 
-
-
 # ---------------------------------------------------------------------------
 # two_hop_reachability: bounded BFS frontier expansion from a seed panel
 # ---------------------------------------------------------------------------
@@ -524,32 +504,26 @@ def two_hop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier-at-a-time BFS shape — each hop is a join against the edge
     list keyed on the frontier.
     """
-    from pyspark import StorageLevel
-
     pts = _pts_cells(spark, sf_dir)
     probe = _probe_3x3(pts)
     a, b = probe.alias("a"), pts.alias("b")
     # persisted: both hop joins probe the same edge list (the oracle
     # marks its twin CTE MATERIALIZED for the same reason)
-    edges = (a.join(b, ["cx", "cy"])
-             .where((F.col("a.event_id") != F.col("b.event_id"))
-                    & ((F.col("a.x") - F.col("b.x"))
-                       * (F.col("a.x") - F.col("b.x"))
-                       + (F.col("a.y") - F.col("b.y"))
-                       * (F.col("a.y") - F.col("b.y")) <= SP_R2))
-             .select(F.col("a.event_id").alias("u"),
-                     F.col("b.event_id").alias("v"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(edges)
+    edges = persist(a.join(b, ["cx", "cy"])
+                    .where((F.col("a.event_id") != F.col("b.event_id"))
+                           & ((F.col("a.x") - F.col("b.x"))
+                              * (F.col("a.x") - F.col("b.x"))
+                              + (F.col("a.y") - F.col("b.y"))
+                              * (F.col("a.y") - F.col("b.y")) <= SP_R2))
+                    .select(F.col("a.event_id").alias("u"),
+                            F.col("b.event_id").alias("v")))
     seeds = (pts.where(F.col("event_id") % HOP_SEED_MOD == 0)
              .select(F.col("event_id").alias("seed"))
              .orderBy("seed").limit(HOP_SEED_CAP))
     # persisted: h1 feeds the hop-2 expansion, its own distinct count
     # and the union (panel-bounded — |seeds|·deg rows)
-    h1 = (edges.join(F.broadcast(seeds), edges.u == seeds.seed)
-          .select("seed", F.col("v").alias("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(h1)
+    h1 = persist(edges.join(F.broadcast(seeds), edges.u == seeds.seed)
+                 .select("seed", F.col("v").alias("n")))
     h2 = (h1.join(edges, h1.n == edges.u)
           .where(F.col("v") != F.col("seed"))
           .select("seed", F.col("v").alias("n")))
@@ -645,14 +619,10 @@ def geometric_median_weiszfeld(spark: SparkSession,
     Scale: rounds × one map-side-combinable integer aggregate; no
     state beyond the 2-long center.
     """
-    from pyspark import StorageLevel
-
     # persisted: every Weiszfeld round re-aggregates the same point
     # frame — unpersisted, each round re-paid the events scan + md5
     # coordinate derivation (the oracle's twin CTE is MATERIALIZED)
-    pts = _points(spark, sf_dir).select("x", "y").persist(
-        StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(pts)
+    pts = persist(_points(spark, sf_dir).select("x", "y"))
     r0 = pts.agg(F.sum("x").alias("sx"), F.sum("y").alias("sy"),
                  F.count(F.lit(1)).alias("n")).collect()[0]
     n = int(r0["n"])
@@ -738,26 +708,20 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree table on each endpoint (two shuffles on node id) and one
     conditional aggregate emits all thresholds in a single pass.
     """
-    from pyspark import StorageLevel
-
     pts = _pts_cells(spark, sf_dir)
     probe = _probe_3x3(pts)
     a, b = probe.alias("a"), pts.alias("b")
     # persisted: edges feeds the degree aggregate and the two-endpoint
     # threshold join; deg feeds both endpoint joins and the node census
-    edges = (a.join(b, ["cx", "cy"])
-             .where((F.col("a.event_id") != F.col("b.event_id"))
-                    & ((F.col("a.x") - F.col("b.x"))
-                       * (F.col("a.x") - F.col("b.x"))
-                       + (F.col("a.y") - F.col("b.y"))
-                       * (F.col("a.y") - F.col("b.y")) <= SP_R2))
-             .select(F.col("a.event_id").alias("u"),
-                     F.col("b.event_id").alias("v"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(edges)
-    deg = (edges.groupBy("u").agg(F.count(F.lit(1)).alias("du"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(deg)
+    edges = persist(a.join(b, ["cx", "cy"])
+                    .where((F.col("a.event_id") != F.col("b.event_id"))
+                           & ((F.col("a.x") - F.col("b.x"))
+                              * (F.col("a.x") - F.col("b.x"))
+                              + (F.col("a.y") - F.col("b.y"))
+                              * (F.col("a.y") - F.col("b.y")) <= SP_R2))
+                    .select(F.col("a.event_id").alias("u"),
+                            F.col("b.event_id").alias("v")))
+    deg = persist(edges.groupBy("u").agg(F.count(F.lit(1)).alias("du")))
     ed = (edges.join(deg, "u")
           .join(deg.select(F.col("u").alias("v"),
                            F.col("du").alias("dv")), "v"))

@@ -22,27 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..epochs import US_PER_DAY, day_col as _day, sql_day as _sql_day
-from ..tables import load
+from ..tables import load, on_release, persist
 
 QUERIES: dict = {}
 
-# Persisted frames released via unpersist_cached() (repo convention);
-# staged-parquet dirs (partition_pruning_roundtrip) release there too.
-_PERSISTED: list = []
-_STAGED_DIRS: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries and staged
-    partition directories (after callers consumed the frames)."""
-    import shutil
-
-    n = len(_PERSISTED) + len(_STAGED_DIRS)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    while _STAGED_DIRS:
-        shutil.rmtree(_STAGED_DIRS.pop(), ignore_errors=True)
-    return n
 
 # --------------------------------------------------------------------------
 # First-fit-decreasing compaction bin packing (per source)
@@ -449,8 +432,7 @@ def partition_size_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("row_bytes").alias("key_bytes"))
     # per_key feeds both the plan rows and the mean — persist so the
     # events scan runs once (multi-branch persist rule, CLAUDE.md)
-    per_key = per_key.persist()
-    _PERSISTED.append(per_key)
+    per_key = persist(per_key)
     mean = F.broadcast(
         per_key.agg(F.expr("sum(key_bytes) div count(1)")
                     .alias("mean_bytes")))
@@ -817,9 +799,11 @@ def partition_pruning_roundtrip(spark: SparkSession,
 
     Scale: one partitioned write (5 hash-partition dirs — at 100 TB
     the partition column would be (event_type, day)), one pruned scan,
-    one keyed aggregate. Staged files release via unpersist_cached().
+    one keyed aggregate. Staged files are removed by tables.release().
     """
+    import shutil
     import uuid
+    from functools import partial
     from urllib.parse import urlparse
 
     base = spark.conf.get("spark.sql.warehouse.dir")
@@ -834,7 +818,7 @@ def partition_pruning_roundtrip(spark: SparkSession,
         .alias("day"))
     ev.write.mode("overwrite").partitionBy("event_type").parquet(workdir)
     if local_dir is not None:
-        _STAGED_DIRS.append(local_dir)
+        on_release(partial(shutil.rmtree, local_dir, ignore_errors=True))
     staged = spark.read.parquet(workdir)
     return (staged.where(F.col("event_type") == "purchase")
             .groupBy("day")

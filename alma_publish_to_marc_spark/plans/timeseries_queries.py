@@ -27,7 +27,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from alma_publish_to_marc_spark.tables import EVENT_TYPES, load
+from alma_publish_to_marc_spark.tables import EVENT_TYPES, load, persist
 
 QUERIES: dict = {}
 
@@ -690,14 +690,10 @@ def _forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus collapses to the (type, day) daily matrix in one
     map-side-combinable aggregate (persisted — it feeds the bounds,
     the type census, and the dense grid; released via
-    unpersist_cached()); lags and the backtest run on types x days
+    tables.release()); lags and the backtest run on types x days
     rows.
     """
-    from pyspark import StorageLevel
-
-    daily = (_daily_counts(spark, sf_dir)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(daily)
+    daily = persist(_daily_counts(spark, sf_dir))
     b = daily.agg(F.min("day").alias("mind"), F.max("day").alias("maxd"))
     types = daily.select("event_type").distinct()
     days = b.select(F.explode(F.sequence("mind", "maxd")).alias("day"),
@@ -789,19 +785,6 @@ FROM agg
 """
 
 
-# Persisted frames released via unpersist_cached() (the
-# operators/clustering.py contract).
-_PERSISTED: list = []
-
-
-def unpersist_cached() -> int:
-    """Release frames persisted by this module's queries."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-    return n
-
-
 QUERIES["forecast_backtest_mase"] = (_forecast_backtest_mase, _MASE_SQL)
 
 
@@ -834,23 +817,19 @@ def _timeseries_motif_discovery(spark: SparkSession,
 
     Scale: the corpus collapses to the (type, day) matrix in one
     map-side-combinable aggregate (persisted — grid, moments and dot
-    branches all read it; released via unpersist_cached()); windows
+    branches all read it; released via tables.release()); windows
     are (days-4) rows per series and the pair join is O(windows^2 x
     W) on that tiny frame — days, not corpus rows, bound it.
     """
-    from pyspark import StorageLevel
-
     daily = _daily_counts(spark, sf_dir)
     b = daily.agg(F.min("day").alias("mind"), F.max("day").alias("maxd"))
     types = daily.select("event_type").distinct()
     days = b.select(F.explode(F.sequence("mind", "maxd")).alias("day"),
                     "mind", "maxd")
-    dense = (types.crossJoin(F.broadcast(days))
-             .join(daily, ["event_type", "day"], "left")
-             .select("event_type", "day", "mind", "maxd",
-                     F.coalesce("x", F.lit(0)).alias("x"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(dense)
+    dense = persist(types.crossJoin(F.broadcast(days))
+                    .join(daily, ["event_type", "day"], "left")
+                    .select("event_type", "day", "mind", "maxd",
+                            F.coalesce("x", F.lit(0)).alias("x")))
     starts = (dense.where(F.col("day") <= F.col("maxd") - (_MOTIF_W - 1))
               .select("event_type", F.col("day").alias("s"), "mind")
               .distinct())
@@ -1029,21 +1008,17 @@ def _binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     N-candidate scan run on days-sized frames under a per-series
     window.
     """
-    from pyspark import StorageLevel
-
     daily = _daily_counts(spark, sf_dir)
     b = daily.agg(F.min("day").alias("mind"), F.max("day").alias("maxd"))
     types = daily.select("event_type").distinct()
     days = b.select(F.explode(F.sequence("mind", "maxd")).alias("day"),
                     "mind", "maxd")
-    dense = (types.crossJoin(F.broadcast(days))
-             .join(daily, ["event_type", "day"], "left")
-             .select("event_type",
-                     (F.col("day") - F.col("mind")).alias("d"),
-                     (F.col("maxd") - F.col("mind") + 1).alias("nn"),
-                     F.coalesce("x", F.lit(0)).alias("x"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(dense)
+    dense = persist(types.crossJoin(F.broadcast(days))
+                    .join(daily, ["event_type", "day"], "left")
+                    .select("event_type",
+                            (F.col("day") - F.col("mind")).alias("d"),
+                            (F.col("maxd") - F.col("mind") + 1).alias("nn"),
+                            F.coalesce("x", F.lit(0)).alias("x")))
     w = (Window.partitionBy("event_type").orderBy("d")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     pre = dense.select("event_type", "d", "nn",
@@ -1172,18 +1147,14 @@ def _dtw_series_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, bound the work. For month-scale horizons that is 900 integer
     ops per pair; a Sakoe-Chiba band would cap longer horizons.
     """
-    from pyspark import StorageLevel
-
     daily = _daily_counts(spark, sf_dir)
     b = daily.agg(F.min("day").alias("mind"), F.max("day").alias("maxd"))
     types = daily.select("event_type").distinct()
     days = b.select(F.explode(F.sequence("mind", "maxd")).alias("day"))
-    dense = (types.crossJoin(F.broadcast(days))
-             .join(daily, ["event_type", "day"], "left")
-             .select("event_type", "day",
-                     F.coalesce("x", F.lit(0)).alias("x"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(dense)
+    dense = persist(types.crossJoin(F.broadcast(days))
+                    .join(daily, ["event_type", "day"], "left")
+                    .select("event_type", "day",
+                            F.coalesce("x", F.lit(0)).alias("x")))
     ser = (dense.groupBy("event_type")
            .agg(F.transform(
                F.array_sort(F.collect_list(F.struct("day", "x"))),
@@ -1854,15 +1825,11 @@ def _mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (days × types) is a calendar-bounded reduction of the raw 100 TB
     stream, so ~366² ≈ 134k sign pairs per series regardless of corpus
     size. The daily aggregate feeds FOUR plan branches (both sides of
-    the sign join, n_days, ties), so it is persisted (tracked in
-    _PERSISTED, released via unpersist_cached()) — one scan of the raw
+    the sign join, n_days, ties), so it is persisted (tracked by
+    tables.persist, released via tables.release()) — one scan of the raw
     stream total. int64 headroom: |S| ≤ n² ≈ 1.3e5.
     """
-    from pyspark import StorageLevel
-
-    daily = (_daily_counts(spark, sf_dir)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _PERSISTED.append(daily)
+    daily = persist(_daily_counts(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     s = (a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
                 & (F.col("a.day") < F.col("b.day")))

@@ -28,19 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import load, persist
 
 QUERIES: dict = {}
-
-_CACHED: list = []
-
-
-def unpersist_cached() -> int:
-    n = 0
-    while _CACHED:
-        _CACHED.pop().unpersist()
-        n += 1
-    return n
 
 
 _BAL_C = "cast(round(c_acctbal * 100, 0) as bigint)"
@@ -63,16 +53,15 @@ def _raking_ipf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory is bit-identical across engines by construction.
 
     Scale: ONE corpus shuffle builds the ≤125-cell table (persisted —
-    4 margin steps reuse it; released via unpersist_cached); every
+    4 margin steps reuse it; released via tables.release); every
     sweep is a groupBy + broadcast join on that bounded table. At
     100 TB only the first aggregate grows; the IPF loop cost is fixed
     by the margin cardinalities.
     """
-    cells = (load(spark, sf_dir, "customer")
-             .groupBy(F.col("c_mktsegment").alias("seg"),
-                      F.col("c_nationkey").alias("nat"))
-             .agg(F.count(F.lit(1)).alias("cnt"))).persist()
-    _CACHED.append(cells)
+    cells = persist(load(spark, sf_dir, "customer")
+                    .groupBy(F.col("c_mktsegment").alias("seg"),
+                             F.col("c_nationkey").alias("nat"))
+                    .agg(F.count(F.lit(1)).alias("cnt")))
     total = cells.agg(F.sum("cnt").alias("t"))
     w = (cells.crossJoin(F.broadcast(total))
          .select("seg", "nat", "cnt", "t",
@@ -609,16 +598,15 @@ def _median_polish_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole currency units (integer quotient).
 
     Scale: one corpus shuffle to the ≤125-cell table (persisted, 4
-    median steps reuse it; released via unpersist_cached); each sweep
+    median steps reuse it; released via tables.release); each sweep
     is a bounded groupBy + broadcast join. Output: the full polished
     table.
     """
-    cells = (load(spark, sf_dir, "customer")
-             .groupBy(F.col("c_mktsegment").alias("seg"),
-                      F.col("c_nationkey").alias("nat"))
-             .agg(F.expr(f"sum(({_BAL_C}) div 100) div count(1)")
-                  .alias("v"))).persist()
-    _CACHED.append(cells)
+    cells = persist(load(spark, sf_dir, "customer")
+                    .groupBy(F.col("c_mktsegment").alias("seg"),
+                             F.col("c_nationkey").alias("nat"))
+                    .agg(F.expr(f"sum(({_BAL_C}) div 100) div count(1)")
+                         .alias("v")))
     lower_med = ("element_at(array_sort(collect_list(r)),"
                  " cast((count(1) + 1) div 2 as int))")
     r = cells.select("seg", "nat", "v", F.col("v").alias("r"))

@@ -163,22 +163,3 @@ def queries() -> dict[str, QueryFn]:
 def oracle_sql() -> dict[str, str]:
     return {name: sql for name, (_, sql) in _collect().items() if sql is not None}
 
-
-def release_caches() -> int:
-    """Invoke every query module's ``unpersist_cached()`` hook —
-    releases tracked persists AND deferred staged-parquet directories
-    (ktruss_prune's last round). Harness loops (check_parity,
-    explain_audit, bench) call this between queries so a 465-key run
-    can't accumulate cache or staging on disk."""
-    import importlib
-
-    n = 0
-    for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(mod_name)
-        except ModuleNotFoundError:
-            continue
-        hook = getattr(mod, "unpersist_cached", None)
-        if hook is not None:
-            n += hook()
-    return n

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..functions import text as T
+from ..tables import persist, release
 
 QUALITY_MIN = 0.5
 JACCARD_THRESHOLD = 0.5
@@ -128,17 +129,6 @@ def _dup_vs_index(batch_sigs: DataFrame, batch_bands: DataFrame,
 
 _EMPTY_GRAMS = "gram_key binary, cnt long"
 
-# Frames persisted during one curate_batch pass, released in its
-# finally block (same contract as operators/dedup._PERSISTED).
-_BATCH_PERSISTED: list[DataFrame] = []
-
-
-def _release_batch_caches() -> int:
-    n = len(_BATCH_PERSISTED)
-    while _BATCH_PERSISTED:
-        _BATCH_PERSISTED.pop().unpersist()
-    return n
-
 
 def _span_clean_vs_index(batch_kept: DataFrame,
                          gram_index: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -151,18 +141,15 @@ def _span_clean_vs_index(batch_kept: DataFrame,
     gram keys and never reshuffles (same probe shape as the band
     index); the rewrite is the scan-fused array filter of
     ``plans/corpus_queries.duplicate_span_removal``."""
-    from pyspark import StorageLevel
-
     from ..plans.corpus_queries import NGRAM, span_keys
 
     docs = batch_kept.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w"))
     # persisted: the delta aggregate and the dup-start collection both
     # consume the exploded span keys — unpersisted, each branch re-paid
-    # the split + 8-gram explode + md5 over the batch (released via
-    # curate_batch's finally -> _release_batch_caches)
-    spans = span_keys(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    _BATCH_PERSISTED.append(spans)
+    # the split + 8-gram explode + md5 over the batch (released by
+    # curate_batch's finally -> tables.release)
+    spans = persist(span_keys(docs))
     deltas = spans.groupBy("gram_key").agg(F.count(F.lit(1)).alias("cnt"))
     idx_hits = (gram_index
                 .join(F.broadcast(deltas.select("gram_key")), "gram_key")
@@ -218,18 +205,16 @@ def curate_batch(spark: SparkSession, batch: DataFrame, state_dir: str,
     # persisted: the batch lineage (landing read + dedup SHUFFLE) feeds
     # the audit materialization, the survivor check, and the shard
     # write — unpersisted, each action re-paid the read + exchange
-    # (r11 profile; released via the finally -> _release_batch_caches).
+    # (r11 profile; released by the finally -> tables.release).
     # The cache cut sits ABOVE the lang/quality scoring (r12): scalars
     # feeds both the sigs/bands chain and the verdict, so caching the
     # raw batch instead re-paid the full regex scoring pass once per
     # consumer — caching the scored frame costs two extra small columns
     # and computes lang_id + quality_score exactly once per batch.
-    scalars = (batch.dropDuplicates(["doc_id"])
-               .select("doc_id", "text",
-                       T.lang_id(F.col("text")).alias("lang_pred"),
-                       T.quality_score(F.col("text")).alias("quality"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    _BATCH_PERSISTED.append(scalars)
+    scalars = persist(batch.dropDuplicates(["doc_id"])
+                      .select("doc_id", "text",
+                              T.lang_id(F.col("text")).alias("lang_pred"),
+                              T.quality_score(F.col("text")).alias("quality")))
     usable = scalars.where(
         (F.col("lang_pred") != "und") & (F.col("quality") >= quality_min))
 
@@ -319,26 +304,28 @@ def curate_batch(spark: SparkSession, batch: DataFrame, state_dir: str,
                 os.path.join(state_dir, "shards", f"batch_id={batch_id}"))
             _write_state(deltas, state_dir, "gram_counts", batch_id)
 
-        # The four write chains are independent actions over frames the
-        # counting aggregate above already materialized (verdict cache +
-        # the persisted sigs), so run them from a driver thread pool
-        # (guide §2.6): the three O(1)-task state writes back-fill cores
-        # while the heavy span-clean + shard chain runs, instead of each
-        # action paying its scheduling/commit latency serially. Replay
-        # safety is unchanged — every write still overwrites its own
-        # batch_id partition, so any subset committed by a crashed
+        # The audit partition commits first, so an abandoned batch never
+        # leaves index or shard partitions without its audit trail. The
+        # other three write chains are independent actions over frames
+        # the counting aggregate above already materialized (verdict
+        # cache + the persisted sigs), so they run from a driver thread
+        # pool (guide §2.6): the two O(1)-task state writes back-fill
+        # cores while the heavy span-clean + shard chain runs, instead of
+        # each action paying its scheduling/commit latency serially.
+        # Replay safety is unchanged — every write still overwrites its
+        # own batch_id partition, so any subset committed by a crashed
         # attempt is rewritten identically on retry; a failure in any
         # chain re-raises here and fails the batch.
+        _w_audit()
         from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=4) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             for fut in [pool.submit(w) for w in
-                        (_w_shards_and_grams, _w_audit, _w_bands, _w_sigs)]:
+                        (_w_shards_and_grams, _w_bands, _w_sigs)]:
                 fut.result()
     finally:
         if verdict is not None:
             verdict.unpersist()
-        _release_batch_caches()
-        D.unpersist_cached()
+        release()
 
 
 def run_incremental_curation(spark: SparkSession, landing_dir: str,

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..plans.publish_split import split_publish
 from ..schemas import PUBLISH_RECORD
 from ..sources import marclib
+from ..tables import release
 
 
 def stream_publish_records(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -78,14 +79,13 @@ def run_incremental_ingest(spark: SparkSession, landing_dir: str,
     records = stream_publish_records(spark, landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = split_publish(batch_df)
-        for name in ("bibs", "holdings", "items", "errors"):
-            df = out[name]
-            if name in ("bibs", "holdings"):
-                # nested arrays → keep as parquet-compatible columns
-                df = df
-            (df.write.mode("append")
-               .parquet(os.path.join(out_dir, name)))
+        try:
+            out = split_publish(batch_df)
+            for name in ("bibs", "holdings", "items", "errors"):
+                out[name].write.mode("append").parquet(
+                    os.path.join(out_dir, name))
+        finally:
+            release()  # the micro-batch's persisted split rows
 
     (records.writeStream
      .foreachBatch(process)

@@ -2,16 +2,25 @@
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings. Schemas are fixed by the driver; we read them as-is
-(parquet carries the schema — no inference cost) and never widen the scan:
-callers select the columns they need so Catalyst prunes the parquet read.
+and never widen the scan: callers select the columns they need so Catalyst
+prunes the parquet read. ``spark.read.parquet`` is given no schema, so each
+:func:`load` call runs one schema-inference Spark job over the footer.
+
+This module also holds the one persist ledger: :func:`persist` pins a
+reused frame, :func:`on_release` records any other deferred cleanup, and
+:func:`release` runs every recorded action once nothing tracked is still
+in use (between harness keys, at the end of a publish run, an ingest
+micro-batch or a curation batch).
 """
 
 from __future__ import annotations
 
 import functools
 import os
+from collections.abc import Callable
 
 import pyarrow.parquet as pq
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -97,6 +106,33 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     if keys:
         return df.repartition(target, *[F.col(k) for k in keys])
     return df.repartition(target)
+
+
+# Deferred cleanups (unpersists, staged-dir removals, memo evictions),
+# run in reverse order by release().
+_RELEASE: list[Callable[[], object]] = []
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist a reused frame at MEMORY_AND_DISK and record its unpersist
+    for :func:`release`. Returns the frame."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _RELEASE.append(df.unpersist)
+    return df
+
+
+def on_release(fn: Callable[[], object]) -> None:
+    """Record a cleanup other than an unpersist for :func:`release`."""
+    _RELEASE.append(fn)
+
+
+def release() -> int:
+    """Run and clear every recorded cleanup; returns how many ran."""
+    n = 0
+    while _RELEASE:
+        _RELEASE.pop()()
+        n += 1
+    return n
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -231,7 +231,7 @@ def main() -> None:
     head = (HEADLINE[:CORE_16]
             if os.environ.get("SPARK_GRAFT_BENCH_CORE_ONLY") else HEADLINE)
     names = [n for n in head if n in qs]
-    from alma_publish_to_marc_spark import registry
+    from alma_publish_to_marc_spark import tables
 
     meter = _ContentionMeter()
     ext_load: dict[str, float] = {}
@@ -239,7 +239,7 @@ def main() -> None:
         # drop blocks persisted by the previous query (minhash sigs etc.)
         # and deferred staged-parquet dirs (ktruss_prune)
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         # two runs, report the min: first run pays JIT/codegen warmup and
         # page-cache misses; steady state is what a resident cluster sees
         best = float("inf")
@@ -267,7 +267,7 @@ def main() -> None:
         """Fresh best-of-2 of one key (same protocol as the main loop),
         for adjudicating flags at the end of the suite."""
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         best, best_ext = float("inf"), 0.0
         for _ in range(2):
             meter.start()

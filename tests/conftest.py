@@ -9,6 +9,11 @@ sys.path.insert(0, "/root/repo")
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the JVM currently holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from alma_publish_to_marc_spark.session import get_spark

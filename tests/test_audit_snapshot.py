@@ -25,6 +25,8 @@ import sys
 
 import pytest
 
+from alma_publish_to_marc_spark import tables
+
 _HERE = os.path.dirname(os.path.abspath(__file__))
 SNAP_PATH = os.path.join(_HERE, "audit_snapshot.json")
 
@@ -43,7 +45,7 @@ def test_core_plan_counters_match_snapshot(spark, name):
     props = explain_audit.summarize(spark, df)
     props.pop("_plan")
     spark.catalog.clearCache()
-    registry.release_caches()
+    tables.release()
     expect = SNAPSHOT[name]
     diffs = {k: (expect.get(k), props.get(k))
              for k in set(expect) | set(props)

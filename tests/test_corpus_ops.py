@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from alma_publish_to_marc_spark import tables
 from alma_publish_to_marc_spark.plans import corpus_queries as C
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -263,18 +264,19 @@ def test_curriculum_order_bands_and_density(spark):
         assert r["band"] == want, (r["doc_id"], s)
 
 
-def test_minhash_unpersist_cached_releases_tracked_frames(spark):
+def test_minhash_persist_is_released_by_tables_release(spark):
     from alma_publish_to_marc_spark.operators import dedup as D
 
-    D.unpersist_cached()  # clean slate
+    tables.release()  # clean slate
     df = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta " + str(i % 3))
          for i in range(12)], ["doc_id", "text"])
     D.minhash_lsh_pairs(df, "doc_id", "text", n=5).count()
-    assert len(D._PERSISTED) == 1 and D._PERSISTED[0].is_cached
-    frame = D._PERSISTED[0]
-    assert D.unpersist_cached() == 1
-    assert not D._PERSISTED and not frame.is_cached
+    assert len(tables._RELEASE) == 1
+    frame = tables._RELEASE[0].__self__  # the recorded df.unpersist
+    assert frame.is_cached
+    assert tables.release() == 1
+    assert not tables._RELEASE and not frame.is_cached
 
 
 def test_span_removal_hand_case(spark, tmp_path):

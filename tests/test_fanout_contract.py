@@ -20,6 +20,7 @@ import os
 
 import pytest
 
+from alma_publish_to_marc_spark import tables
 from tools.explain_audit import summarize
 
 from .conftest import SF_SMOKE
@@ -47,12 +48,12 @@ def test_no_fanout_plan_shape(spark, name, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_FANOUT", "off")
     spark.catalog.clearCache()
-    registry.release_caches()
+    tables.release()
     try:
         p = summarize(spark, registry.queries()[name](spark, SF_SMOKE))
     finally:
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
     shuffles, scans = _AT_SCALE[name]
     assert p["shuffles"] == shuffles, (
         f"{name}: at-scale (FANOUT=off) plan grew a shuffle "

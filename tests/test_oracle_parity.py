@@ -25,10 +25,11 @@ import re
 
 import pytest
 
+from alma_publish_to_marc_spark import tables
 from tools.check_parity import compare
 from tools.explain_audit import summarize
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, persisted_rdd_ids
 
 # cardinality-bounded leaf operators (see module docstring)
 _BOUNDED_LEAVES = {"aggregate", "take_ordered", "limit", "local_table",
@@ -62,12 +63,12 @@ def _params():
 @pytest.mark.parametrize("name", _params())
 def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as e
-    from alma_publish_to_marc_spark import registry
 
     # a prior test's lingering persist would replace subtrees with
     # opaque InMemoryTableScans and blind the feeder classifier
     spark.catalog.clearCache()
-    registry.release_caches()
+    tables.release()
+    before = persisted_rdd_ids(spark)
     df = e.queries()[name](spark, SF_SMOKE)
     feeders = summarize(spark, df)["bounded_stage_feeders"]
     bad = [t for t in feeders if _leaves(t) - _BOUNDED_LEAVES]
@@ -76,16 +77,20 @@ def test_query_matches_oracle(spark, duck, name):
         "an unpartitioned window / single-partition exchange must be fed "
         "by aggregate/take_ordered/limit/local_table/range (or "
         "joins/explodes of those); see tools/explain_audit.py")
-    sdf = df.toPandas()
+    sdf = df.toPandas()  # rows-only check for non-SQL-expressible ops
     oracles = e.oracle_sql()
-    if name not in oracles:
-        assert len(sdf) >= 0  # rows-only check for non-SQL-expressible ops
-        return
-    ddf = duck.execute(oracles[name]).fetchdf()
-    problems = compare(name, sdf, ddf)
-    hard = [p for p in problems
-            if "APPROX" in p or "rowcount" in p or "columns" in p]
-    assert not hard, problems
+    if name in oracles:
+        ddf = duck.execute(oracles[name]).fetchdf()
+        problems = compare(name, sdf, ddf)
+        hard = [p for p in problems
+                if "APPROX" in p or "rowcount" in p or "columns" in p]
+        assert not hard, problems
+    # leak gate: every persist the key made is on the tables ledger, so
+    # releasing it (no clearCache in between) restores the pre-key set
+    tables.release()
+    after = persisted_rdd_ids(spark)
+    assert after == before, (
+        f"{name}: untracked persisted RDDs {sorted(after - before)}")
 
 
 def test_entry_smoke(spark):

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import pytest
 
+from alma_publish_to_marc_spark import tables
+
 SF = "/root/testdata/sf0.001"
 
 # Queries whose outputs pass through doubles / folds / driver-paced
@@ -65,7 +67,7 @@ def test_result_is_partition_count_invariant(spark, name):
     def run() -> list:
         rows = fn(spark, SF).collect()
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         return sorted(tuple(r) for r in rows)
 
     # Pin BOTH sides explicitly: relying on the session default for the

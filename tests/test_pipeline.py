@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from alma_publish_to_marc_spark.plans import pipeline as PL
 from alma_publish_to_marc_spark.sources import marclib
 
+from .conftest import persisted_rdd_ids
 from .fixtures_publish import GOOD_RECORD, HID_A, HID_B
 
 
@@ -152,6 +153,24 @@ def test_bib_parts_replaced_per_published_bib(spark, tmp_path, location_dim):
     got2 = {(r["mms_id"], r["part_mms_id"]) for r in
             spark.read.parquet(wh + "/bib_part").collect()}
     assert got2 == {("9910008651", "9930008651")}
+
+
+def test_publish_run_and_ingest_release_their_persists(spark, tmp_path,
+                                                       location_dim):
+    # the split persists each drop's rows for its four consumers; a
+    # publish run and an ingest micro-batch must release them when done
+    from alma_publish_to_marc_spark.streaming import ingest
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _write_drop(landing, [GOOD_RECORD])
+    before = persisted_rdd_ids(spark)
+    PL.run_publish_pipeline(spark, str(landing) + "/*", str(tmp_path / "wh"),
+                            datetime(2024, 6, 1), location_dim)
+    assert not persisted_rdd_ids(spark) - before
+    ingest.run_incremental_ingest(spark, str(landing), str(tmp_path / "out"))
+    assert spark.read.parquet(str(tmp_path / "out" / "bibs")).count() == 1
+    assert not persisted_rdd_ids(spark) - before
 
 
 def test_list_ids(spark, tmp_path):

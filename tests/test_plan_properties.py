@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from alma_publish_to_marc_spark import tables
 from tools.explain_audit import summarize
 
 from .conftest import SF_SMOKE
@@ -15,7 +16,6 @@ from .conftest import SF_SMOKE
 @pytest.fixture(scope="module")
 def props(spark):
     import __spark_entry__ as e
-    from alma_publish_to_marc_spark import registry
 
     qs = e.queries()
 
@@ -23,7 +23,7 @@ def props(spark):
         # stale persists from earlier tests would swap subtrees for
         # InMemoryTableScans and make structural counts order-dependent
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         return summarize(spark, qs[name](spark, SF_SMOKE))
 
     return get
@@ -127,8 +127,7 @@ def test_mmr_result_is_fully_severed(props, spark):
     assert p["scans"] == 0
     assert p["shuffles"] == 0
     assert p["broadcast_nl_joins"] == 0
-    from alma_publish_to_marc_spark.operators import similarity as sim
-    assert sim.unpersist_cached() >= 1  # the pool was tracked
+    assert tables.release() >= 1  # the pool was tracked
 
 
 def test_walk_pmi_pairs_feed_branches_from_cache(props, spark):
@@ -137,8 +136,7 @@ def test_walk_pmi_pairs_feed_branches_from_cache(props, spark):
     # join chain (CLAUDE.md multi-branch hazard, r04 weak #2).
     p = props("walk_pmi_similarity")
     assert p["in_memory_scans"] >= 4
-    from alma_publish_to_marc_spark.operators import similarity as sim
-    assert sim.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_random_walks_persist_every_round(props, spark):
@@ -149,8 +147,7 @@ def test_random_walks_persist_every_round(props, spark):
     from alma_publish_to_marc_spark.operators.graph_queries import WALK_STEPS
     p = props("graph_random_walks")
     assert p["in_memory_scans"] >= WALK_STEPS
-    from alma_publish_to_marc_spark.operators import similarity as sim
-    assert sim.unpersist_cached() >= WALK_STEPS
+    assert tables.release() >= WALK_STEPS
 
 
 def test_boilerplate_removal_broadcasts_the_template_set(props, spark):
@@ -267,8 +264,7 @@ def test_preference_transitivity_reads_pairs_from_cache(props, spark):
     p = props("preference_transitivity_audit")
     assert p["in_memory_scans"] >= 4
     assert p["scans"] <= 3  # docs twice (self-join) + max(doc_id)
-    from alma_publish_to_marc_spark.plans import preference_queries as P
-    assert P.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_preference_aggregates_are_single_shuffle(props, spark):
@@ -286,8 +282,6 @@ def test_trained_classifier_consumers_scan_corpus_once(props, spark):
     # every consumer's plan must read parquet exactly once and serve
     # every other branch from cache (before the fix: 24 scans in the
     # fairness audit).
-    from alma_publish_to_marc_spark.operators import learning as L
-
     for name in ("logreg_calibration_bins", "isotonic_calibration",
                  "brier_decomposition", "roc_curve_points",
                  "fairness_group_audit"):
@@ -295,35 +289,29 @@ def test_trained_classifier_consumers_scan_corpus_once(props, spark):
         assert p["scans"] <= 1, name
         assert p["in_memory_scans"] >= 4, name
         assert p["sort_merge_joins"] == 0, name
-    assert L.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_round5c_aggregate_shapes(props, spark):
     # One parquet scan, no global sorts, no sort-merge joins: these
     # queries collapse the corpus in a single map-side-combinable
     # aggregate and do all remaining work on tiny derived frames.
-    from alma_publish_to_marc_spark.plans import dq_queries as DQ
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     for name in ("wasserstein_source_shift", "map_ops_suite",
                  "forecast_backtest_mase", "negative_sampling_table"):
         p = props(name)
         assert p["scans"] <= 1, name
         assert p["range_shuffles"] == 0, name
         assert p["sort_merge_joins"] == 0, name
-    DQ.unpersist_cached()
-    TS.unpersist_cached()
+    tables.release()
 
 
 def test_greedy_coverage_returns_local_result(props, spark):
     # Driver-paced greedy (BPE/MMR shape): the returned frame is a
     # local relation; the incidence frame it consumed was persisted.
-    from alma_publish_to_marc_spark.plans import corpus_queries as CQ
-
     p = props("greedy_coverage_selection")
     assert p["scans"] == 0
     assert p["shuffles"] == 0
-    assert CQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_round5d_single_aggregate_shapes(props, spark):
@@ -342,26 +330,22 @@ def test_round5d_single_aggregate_shapes(props, spark):
 
 
 def test_round5d_iteratives_have_no_range_exchange(props, spark):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     for name in ("personalized_pagerank", "timeseries_motif_discovery",
                  "binseg_changepoint", "prf_query_expansion",
                  "kendall_tau_rankings"):
         p = props(name)
         assert p["range_shuffles"] == 0, name
-    TS.unpersist_cached()
+    tables.release()
 
 
 def test_round5b_new_queries_plan_contracts(props):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     # mann-kendall persists the daily matrix: ONE raw-stream scan
     p = props("mann_kendall_trend")
     assert p["scans"] == 1
     assert p["range_shuffles"] == 0
     # release the persisted daily frame so later tests' plan-shape
     # assertions don't see InMemoryRelation substituted (ADVICE r05)
-    TS.unpersist_cached()
+    tables.release()
     # readability is scan-fused per-row math: zero exchanges
     p = props("readability_scores")
     assert p["shuffles"] == 0
@@ -380,8 +364,6 @@ def test_round5b_new_queries_plan_contracts(props):
 
 
 def test_round6_eval_queries_plan_contracts(props):
-    from alma_publish_to_marc_spark.plans import eval_queries as EQ
-
     # none of the eval family may range-partition (driver sorts rows)
     for name in ("retrieval_ranking_metrics", "rouge_overlap_eval",
                  "bleu_ngram_eval", "viterbi_state_decode",
@@ -413,7 +395,6 @@ def test_round6_eval_queries_plan_contracts(props):
     assert props("pipe_syntax_report")["range_shuffles"] == 0
     # sketch cube: the cell registers persist and feed all three
     # rollup levels from cache
-    from alma_publish_to_marc_spark.operators import sketches as SK
     p = props("hll_cube_rollup")
     assert p["range_shuffles"] == 0
     assert p["in_memory_scans"] >= 3
@@ -422,7 +403,7 @@ def test_round6_eval_queries_plan_contracts(props):
     p = props("hll_rolling_distinct")
     assert p["range_shuffles"] == 0
     assert p["in_memory_scans"] >= 2
-    SK.unpersist_cached()
+    tables.release()
     # constellation match: snippet fingerprints broadcast into the
     # corpus hash join; no range exchange, no sort-merge join
     p = props("audio_constellation_match")
@@ -436,8 +417,7 @@ def test_round6_eval_queries_plan_contracts(props):
         assert props(name)["range_shuffles"] == 0, name
     # FIM is pure per-row array surgery — zero shuffles
     assert props("fim_transform")["shuffles"] == 0
-    from alma_publish_to_marc_spark.operators import similarity as S2
-    S2.unpersist_cached()
+    tables.release()
     # ranking: query panel rides broadcast joins; the token postings
     # are persisted and reused (in-memory scans, not re-explodes)
     p = props("retrieval_ranking_metrics")
@@ -458,7 +438,7 @@ def test_round6_eval_queries_plan_contracts(props):
         assert p["scans"] == 1, name
     # contrastive builds batches with window leads — NO self-joins
     assert props("contrastive_pair_batches")["sort_merge_joins"] == 0
-    EQ.unpersist_cached()
+    tables.release()
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +451,6 @@ def test_span_family_one_scan_one_gram_shuffle(props):
     # short docs in-flow, no doc_id re-scan), dup counts via
     # count-over-Window.partitionBy(gram_key) — never the old
     # aggregate-then-join that exploded the corpus twice.
-    from alma_publish_to_marc_spark.plans import corpus_queries as C
     p = props("duplicate_ngram_spans")
     assert p["scans"] == 1
     assert p["shuffles"] <= 2          # gram-key window + doc_id agg
@@ -485,7 +464,7 @@ def test_span_family_one_scan_one_gram_shuffle(props):
     assert p["in_memory_scans"] >= 1
     assert p["unpartitioned_windows"] == 0
     assert p["range_shuffles"] == 0
-    assert C.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_sorted_neighborhood_sweep_is_partitioned(props):
@@ -494,17 +473,16 @@ def test_sorted_neighborhood_sweep_is_partitioned(props):
     # Defined` scale-killer), zero range exchanges; the only
     # single-partition exchange allowed is the 1-row max(doc_id)
     # offset aggregate of the augmented corpus.
-    from alma_publish_to_marc_spark.operators import dedup_queries as DQ
     # release frames a prior test (oracle parity) left persisted: a
     # cached subtree substituted into this plan adds a SinglePartition
     # exchange for the 1-row offset aggregate and breaks the contract
-    DQ.unpersist_cached()
+    tables.release()
     p = props("sorted_neighborhood_pairs")
     assert p["unpartitioned_windows"] == 0
     assert p["range_shuffles"] == 0
     assert p["single_part"] <= 1
     assert p["in_memory_scans"] >= 1   # led persisted across 3 branches
-    assert DQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
     p = props("fellegi_sunter_scoring")
     assert p["unpartitioned_windows"] == 0
     assert p["range_shuffles"] == 0
@@ -550,7 +528,6 @@ def test_round7_ir_queries_plan_shapes(props):
 
 
 def test_round7_inference_queries_plan_shapes(props):
-    from alma_publish_to_marc_spark.plans import inference_queries as IQ
     # run-table statistics: the single corpus-scale shuffle is the
     # distinct-value/day/bin aggregation; every window after runs on
     # that bounded frame
@@ -569,7 +546,7 @@ def test_round7_inference_queries_plan_shapes(props):
     assert p["in_memory_scans"] >= 7
     assert p["scans"] <= 1
     assert p["broadcast_joins"] >= 6
-    assert IQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
     # QTE: both arms reduce to run tables; probes ride broadcasts
     p = props("quantile_treatment_effect")
     assert p["unpartitioned_windows"] == 0
@@ -622,13 +599,12 @@ def test_round7_storage_queries_plan_shapes(props):
         assert p["range_shuffles"] == 0, name
     # planner: the persisted per-key stats feed both branches — the
     # events scan runs once, the mean rides a broadcast
-    from alma_publish_to_marc_spark.plans import storage_queries as STQ
     p = props("partition_size_planner")
     assert p["scans"] + p["in_memory_scans"] >= 2
     assert p["scans"] <= 1
     assert p["broadcast_joins"] + p["broadcast_nl_joins"] >= 1
     assert p["range_shuffles"] == 0
-    assert STQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_round7_embedding_ood_plan_shapes(props):
@@ -707,7 +683,6 @@ def test_round7_governance_queries_plan_shapes(props):
 
 
 def test_round7_decision_queries_plan_shapes(props):
-    from alma_publish_to_marc_spark.plans import decision_queries as DQ
     # VaR/CVaR: windows partition by segment — never a global sort
     p = props("var_cvar_risk")
     assert p["unpartitioned_windows"] == 0
@@ -724,7 +699,7 @@ def test_round7_decision_queries_plan_shapes(props):
     assert p["scans"] <= 1
     assert p["in_memory_scans"] >= 3
     assert p["range_shuffles"] == 0
-    assert DQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_round7_python_surface_plan_shapes(props):
@@ -784,7 +759,6 @@ def test_round7_stockout_plan_shape(props):
 
 
 def test_round7_heavy_hitter_drift_plan_shape(props):
-    from alma_publish_to_marc_spark.plans import bi_queries as BIQ
     # persisted per-user counts feed both half-tops off ONE events
     # scan; tops are TakeOrdered; the only windows/joins after run on
     # K-row frames (bounded by construction)
@@ -793,7 +767,7 @@ def test_round7_heavy_hitter_drift_plan_shape(props):
     assert p["scans"] <= 2
     assert p["in_memory_scans"] >= 2
     assert p["range_shuffles"] == 0
-    assert BIQ.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_round7_exact_percentile_plan_shape(props):

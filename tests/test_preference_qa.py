@@ -16,6 +16,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from alma_publish_to_marc_spark import tables
+
 from .conftest import SF_SMOKE
 
 
@@ -27,19 +29,13 @@ def q(spark):
     return lambda name: qs[name](spark, SF_SMOKE)
 
 
-def _release():
-    from alma_publish_to_marc_spark.plans import preference_queries as P
-
-    P.unpersist_cached()
-
-
 def test_bradley_terry_recovers_length_signal(spark, q):
     # Votes are generated as len_a + noise > len_b, so a source's true
     # strength is monotone in its mean document length. The fitted
     # top-5 mean length must exceed the bottom-5 mean length — BT
     # recovering the planted signal, not noise.
     rows = q("bradley_terry_strength").collect()
-    _release()
+    tables.release()
     from alma_publish_to_marc_spark.tables import load
 
     mean_len = dict(load(spark, SF_SMOKE, "documents")
@@ -53,7 +49,7 @@ def test_bradley_terry_recovers_length_signal(spark, q):
 
 def test_bradley_terry_normalization_and_games(spark, q):
     rows = q("bradley_terry_strength").collect()
-    _release()
+    tables.release()
     k = len(rows)
     # mean-1e6 renormalization: floor errors lose < 1 unit per model
     assert k * 1_000_000 - k <= sum(r["strength_e6"] for r in rows) \
@@ -101,7 +97,7 @@ def test_length_bias_monotone_signal(spark, q):
 
 def test_transitivity_triads_partition(spark, q):
     r = q("preference_transitivity_audit").collect()[0]
-    _release()
+    tables.release()
     # with the generator's strong length signal the majority
     # tournament is near-total-order: cyclic triads are a small
     # minority of decided triangles
@@ -127,9 +123,7 @@ def test_isotonic_calibration_matches_pava_and_is_monotone(spark, q):
     # and isotonic regression preserves total positive mass.
     rows = sorted(q("isotonic_calibration").collect(),
                   key=lambda r: r["bin"])
-    from alma_publish_to_marc_spark.operators import learning as L
-
-    L.unpersist_cached()
+    tables.release()
     iso = [r["iso_e6"] for r in rows]
     assert iso == sorted(iso)
     assert all(0 <= v <= 1_000_000 for v in iso)
@@ -180,7 +174,7 @@ def test_wasserstein_shift_bounds(spark, q):
     from alma_publish_to_marc_spark.plans import dq_queries as DQ
 
     rows = q("wasserstein_source_shift").collect()
-    DQ.unpersist_cached()
+    tables.release()
     assert len(rows) == 20
     for r in rows:
         assert 0 <= r["ks_e6"] <= 1_000_000
@@ -202,11 +196,9 @@ def test_brier_decomposition_identity_and_bounds(spark, q):
 
 
 def test_greedy_coverage_is_submodular(spark, q):
-    from alma_publish_to_marc_spark.plans import corpus_queries as CQ
-
     rows = sorted(q("greedy_coverage_selection").collect(),
                   key=lambda r: r["rank"])
-    CQ.unpersist_cached()
+    tables.release()
     gains = [r["gain"] for r in rows]
     assert gains == sorted(gains, reverse=True)  # diminishing returns
     cum = 0
@@ -237,10 +229,8 @@ def test_roc_curve_monotone_and_conserved(spark, q):
 
 
 def test_fairness_audit_gaps_cancel(spark, q):
-    from alma_publish_to_marc_spark.operators import learning as L
-
     rows = q("fairness_group_audit").collect()
-    L.unpersist_cached()
+    tables.release()
     assert len(rows) == 20
     nn = sum(r["n_docs"] for r in rows)
     for r in rows:
@@ -262,10 +252,8 @@ def test_map_ops_suite_consistent_with_counts(spark, q):
 
 
 def test_forecast_backtest_shapes(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     rows = q("forecast_backtest_mase").collect()
-    TS.unpersist_cached()
+    tables.release()
     assert len(rows) == 5  # one per event type
     for r in rows:
         assert r["n_test"] == 7
@@ -280,7 +268,7 @@ def test_forecast_backtest_shapes(spark, q):
 
 def test_preference_end2end_consistent_with_parts(spark, q):
     rows = q("preference_qa_end2end").collect()
-    _release()
+    tables.release()
     assert len(rows) == 20
     assert sorted(r["rank"] for r in rows) == list(range(1, 21))
     kmin = rows[0]["kappa_min_e6"]
@@ -354,10 +342,8 @@ def test_kendall_tau_bounds_and_pair_identity(spark, q):
 
 
 def test_motif_beats_discord(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     rows = q("timeseries_motif_discovery").collect()
-    TS.unpersist_cached()
+    tables.release()
     assert len(rows) == 5
     for r in rows:
         # the motif is the best pair anywhere, so it is at least as
@@ -369,10 +355,8 @@ def test_motif_beats_discord(spark, q):
 
 
 def test_eb_shrinkage_pulls_toward_grand_mean(spark, q):
-    from alma_publish_to_marc_spark.plans import corpus_queries as CQ
-
     rows = q("empirical_bayes_shrinkage").collect()
-    CQ.unpersist_cached()
+    tables.release()
     assert len(rows) == 20
     nn = sum(r["n_docs"] for r in rows)
     grand_e3 = sum(r["n_docs"] * r["raw_mean_e3"] for r in rows) // nn
@@ -444,11 +428,10 @@ def test_shapley_efficiency_axiom(spark, q):
 
 
 def test_binseg_split_is_exact_argmax(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
     from alma_publish_to_marc_spark.tables import load
 
     rows = {r["event_type"]: r for r in q("binseg_changepoint").collect()}
-    TS.unpersist_cached()
+    tables.release()
     # brute-force the same argmax in Python on the densified series
     ev = (load(spark, SF_SMOKE, "events")
           .select("event_type",
@@ -476,12 +459,11 @@ def test_binseg_split_is_exact_argmax(spark, q):
 
 
 def test_dtw_matches_reference_dp(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
     from alma_publish_to_marc_spark.tables import load
 
     rows = {(r["type_a"], r["type_b"]): r
             for r in q("dtw_series_distance").collect()}
-    TS.unpersist_cached()
+    tables.release()
     assert len(rows) == 10
     # rebuild the normalized series and check one pair against a
     # textbook O(n^2) DTW in Python
@@ -535,10 +517,8 @@ def test_aalen_johansen_identity(spark, q):
 
 
 def test_slo_alert_requires_both_windows(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     rows = q("slo_burn_rate_alerts").collect()
-    TS.unpersist_cached()
+    tables.release()
     assert len(rows) == 30
     for r in rows:
         assert r["alert"] == (r["burn1_e6"] > 1_000_000
@@ -558,10 +538,8 @@ def test_posting_gamma_beats_flat_for_frequent_terms(spark, q):
 
 
 def test_als_rank1_beats_global_mean(spark, q):
-    from alma_publish_to_marc_spark.operators import recsys_queries as RQ
-
     r = q("als_rank1_sweep").collect()[0]
-    RQ.unpersist_cached()
+    tables.release()
     assert r["n_ratings"] > 0
     # even rank-1 personalization must beat the global-mean predictor
     assert r["mse_model_e3"] < r["mse_baseline_e3"]
@@ -569,10 +547,8 @@ def test_als_rank1_beats_global_mean(spark, q):
 
 
 def test_silhouette_bounds_and_panel(spark, q):
-    from alma_publish_to_marc_spark.operators import clustering as CL
-
     rows = q("kmeans_silhouette_sampled").collect()
-    CL.unpersist_cached()
+    tables.release()
     assert len(rows) == 20  # 500 vecs / 25
     for r in rows:
         assert -1_000_000 <= r["silhouette_e6"] <= 1_000_000
@@ -583,10 +559,8 @@ def test_silhouette_bounds_and_panel(spark, q):
 
 
 def test_overdispersion_identity(spark, q):
-    from alma_publish_to_marc_spark.plans import timeseries_queries as TS
-
     rows = q("overdispersion_check").collect()
-    TS.unpersist_cached()
+    tables.release()
     assert len(rows) == 5
     for r in rows:
         assert r["dispersion_e6"] >= 0
@@ -594,10 +568,8 @@ def test_overdispersion_identity(spark, q):
 
 
 def test_chi2_residuals_marginals(spark, q):
-    from alma_publish_to_marc_spark.plans import behavior_queries as BQ
-
     rows = q("chi2_cell_residuals").collect()
-    BQ.unpersist_cached()
+    tables.release()
     assert len(rows) == 35  # 5 types x 7 dows
     n = sum(r["observed"] for r in rows)
     # expectations reproduce the total up to per-cell floor error

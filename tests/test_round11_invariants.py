@@ -23,6 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from alma_publish_to_marc_spark import tables  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -54,7 +56,7 @@ def test_suffix_family_cap_invariant(spark):
                        .sort_values("doc_id").reset_index(drop=True))
                 frames[(k, cap)] = pdf
             from alma_publish_to_marc_spark import registry
-            registry.release_caches()
+            tables.release()
             spark.catalog.clearCache()
         for k in keys:
             pd.testing.assert_frame_equal(frames[(k, 64)],
@@ -346,15 +348,15 @@ def test_gradient_noise_scale_moments(spark):
 def test_suffix_chain_memo_shares_and_releases(spark):
     """The r12 suffix-chain memo must (a) hand repeat callers the SAME
     persisted chain within a session/sf_dir, and (b) die with
-    unpersist_cached() so per-key bench/parity runs stand alone."""
+    tables.release() so per-key bench/parity runs stand alone."""
     from alma_publish_to_marc_spark.plans import corpus_queries as CQ
 
-    CQ.unpersist_cached()
+    tables.release()
     levels1, base1 = CQ._suffix_chain(spark, SF)
     levels2, base2 = CQ._suffix_chain(spark, SF)
     assert levels1 is levels2 and base1 is base2  # shared, not rebuilt
-    n = CQ.unpersist_cached()
+    n = tables.release()
     assert n >= len(levels1)  # the chain's persists were tracked
     levels3, _ = CQ._suffix_chain(spark, SF)
     assert levels3 is not levels1  # memo cleared with the persists
-    CQ.unpersist_cached()
+    tables.release()

@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from alma_publish_to_marc_spark import tables
+
 from .conftest import SF_SMOKE
 
 
@@ -42,7 +44,7 @@ def test_incremental_assign_equals_rebuild_on_merged_corpus(spark):
             .exceptAll(pieces.select("vec_id", "cell")))
     assert diff.count() == 0
     assert merged.count() == pieces.count()
-    CL.unpersist_cached()
+    tables.release()
 
 
 def test_incremental_census_conserves_vectors(spark, q):
@@ -58,8 +60,7 @@ def test_incremental_census_conserves_vectors(spark, q):
     for r in rows:
         assert r["n_base"] + r["n_new"] == r["n_total"]
         assert r["cell_drift"] == r["n_total"] - r["n_rebuild"]
-    from alma_publish_to_marc_spark.operators import clustering as CL
-    CL.unpersist_cached()
+    tables.release()
 
 
 def test_incremental_recall_bounded_and_consistent(q):
@@ -68,8 +69,7 @@ def test_incremental_recall_bounded_and_consistent(q):
         assert 0 <= r["rebuild_hits"] <= r["n_exact"]
         assert 0.0 <= r["inc_recall"] <= 1.0
         assert 0.0 <= r["rebuild_recall"] <= 1.0
-    from alma_publish_to_marc_spark.operators import clustering as CL
-    CL.unpersist_cached()
+    tables.release()
 
 
 def test_sq_codes_are_bytes_and_self_distance_zero(spark):
@@ -267,8 +267,7 @@ def test_modularity_global_sum_is_bounded_and_consistent(spark, q):
     assert abs(q_global) < 0.3
     for r in rows:
         assert r["q_num"] == 4 * m * r["e_intra"] - r["d_c"] ** 2
-    from alma_publish_to_marc_spark.operators import similarity as S
-    S.unpersist_cached()
+    tables.release()
 
 
 def test_lsh_precision_summary_is_coherent(q):
@@ -282,8 +281,7 @@ def test_lsh_precision_summary_is_coherent(q):
     # 16-perm estimates are coarse (1/16 granularity) but must stay a
     # sane distance from exact Jaccard on average
     assert 0 <= r["mae_e6"] <= 500_000
-    from alma_publish_to_marc_spark.operators import dedup as D
-    D.unpersist_cached()
+    tables.release()
 
 
 def test_new_vs_returning_conserves_users(spark, q):

@@ -11,6 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from alma_publish_to_marc_spark import tables
+
 from .conftest import SF_SMOKE
 
 
@@ -20,12 +22,6 @@ def q(spark):
 
     qs = e.queries()
     return lambda name: qs[name](spark, SF_SMOKE)
-
-
-def _cleanup():
-    from alma_publish_to_marc_spark.plans import eval_queries as EQ
-
-    EQ.unpersist_cached()
 
 
 def test_ranking_metrics_bounds(q):
@@ -40,7 +36,7 @@ def test_ranking_metrics_bounds(q):
         assert 0 <= r.p10_e6 <= 1_000_000
         assert r.dcg_e6 <= r.idcg_e6
         assert r.n_ranked <= 10
-    _cleanup()
+    tables.release()
 
 
 def test_rouge_f1_between_precision_and_recall(q):
@@ -248,6 +244,7 @@ def test_hll_cube_rollup_nodes_and_error(spark, q):
     # linear-counting regime's error at this cardinality.
     from alma_publish_to_marc_spark.tables import load
 
+    tables.release()  # clean slate: count only this key's persists
     rows = q("hll_cube_rollup").collect()
     kinds = {}
     for r in rows:
@@ -259,20 +256,19 @@ def test_hll_cube_rollup_nodes_and_error(spark, q):
     exact = (load(spark, SF_SMOKE, "events")
              .select("user_id").distinct().count())
     assert total.exact_n == exact
-    from alma_publish_to_marc_spark.operators import sketches as SK
-    assert SK.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_hll_rolling_window_dominates_daily(spark, q):
     # a 7-day window's exact distinct is >= any single day's, and the
     # estimate error stays in the linear-counting regime.
+    tables.release()  # clean slate: count only this key's persists
     rows = q("hll_rolling_distinct").collect()
     assert rows
     for r in rows:
         assert r.rel_err_e6 <= 150_000
         assert r.est > 0 and r.exact_n > 0
-    from alma_publish_to_marc_spark.operators import sketches as SK
-    assert SK.unpersist_cached() >= 1
+    assert tables.release() >= 1
 
 
 def test_constellation_self_retrieval_at_rank1(q):
@@ -354,8 +350,7 @@ def test_ann_label_vote_census(spark, q):
         assert r.n_correct <= r.n_classified <= r.n_vectors
         assert 0 <= r.acc_e6 <= 1_000_000
         assert r.majority_baseline_e6 == base
-    from alma_publish_to_marc_spark.operators import similarity as S2
-    S2.unpersist_cached()
+    tables.release()
 
 
 def test_unigram_segment_cost_bounds(q):

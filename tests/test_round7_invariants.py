@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 
+from alma_publish_to_marc_spark import tables
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -55,11 +57,11 @@ def test_equi_depth_buckets_partition_domain(spark):
 
 def test_abc_classes_cover_revenue(spark):
     from alma_publish_to_marc_spark.plans.decision_queries import (
-        abc_pareto_classes, unpersist_cached,
+        abc_pareto_classes,
     )
     rows = {r["abc_class"]: r for r in
             abc_pareto_classes(spark, SF).collect()}
-    unpersist_cached()
+    tables.release()
     assert "A" in rows
     total_share = sum(r["share_e4"] for r in rows.values())
     # integer floors can undercount a few e4 units, never overcount

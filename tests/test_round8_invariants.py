@@ -4,6 +4,8 @@ equality; these prove the answers make sense)."""
 
 from __future__ import annotations
 
+from alma_publish_to_marc_spark import tables
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -878,14 +880,13 @@ def test_partition_pruning_is_in_the_plan(spark):
         rows = df.collect()
         assert sum(r["n"] for r in rows) > 0
     finally:
-        SQ.unpersist_cached()
+        tables.release()
 
 
 def test_double_sweep_extends_eccentricity(spark):
     from alma_publish_to_marc_spark.operators.graph_queries import (
         DIAM_ROUNDS, graph_diameter_double_sweep,
     )
-    from alma_publish_to_marc_spark.operators import similarity as _sim
 
     r = graph_diameter_double_sweep(spark, SF).collect()[0]
     # the peripheral restart can never see a SMALLER eccentricity
@@ -894,8 +895,7 @@ def test_double_sweep_extends_eccentricity(spark):
     # both sweeps saturate the same connected component
     assert r["n_reached1"] == r["n_reached2"] > 1
     assert r["far_node"] != r["start_node"]
-    while _sim._PERSISTED:
-        _sim._PERSISTED.pop().unpersist()
+    tables.release()
 
 
 def test_rocchio_confusion_is_a_partition(spark):

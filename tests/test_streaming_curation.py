@@ -162,6 +162,42 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert texts == {doc}
 
 
+def test_audit_partition_commits_before_other_state(spark, tmp_path,
+                                                    monkeypatch):
+    """An abandoned batch must never leave index or shard partitions
+    without its audit partition: the audit write finishes before any
+    other state write of the batch starts."""
+    import threading
+
+    from alma_publish_to_marc_spark.plans import corpus_queries as CQ
+
+    events, lock = [], threading.Lock()
+
+    def recorded(name, fn):
+        def run(*args, **kwargs):
+            table = args[2] if name is None else name
+            with lock:
+                events.append(("start", table))
+            fn(*args, **kwargs)
+            with lock:
+                events.append(("end", table))
+        return run
+
+    monkeypatch.setattr(CU, "_write_state", recorded(None, CU._write_state))
+    monkeypatch.setattr(CQ, "write_training_shards",
+                        recorded("shards", CQ.write_training_shards))
+    batch = spark.createDataFrame([(1, GOOD_A), (2, GOOD_B)],
+                                  "doc_id long, text string")
+    CU.curate_batch(spark, batch, str(tmp_path / "state"), batch_id=0)
+
+    written = {t for _, t in events}
+    assert {"audit", "index_bands", "index_sigs", "shards",
+            "gram_counts"} <= written
+    audit_end = events.index(("end", "audit"))
+    assert all(events.index(("start", t)) > audit_end
+               for t in written - {"audit"}), events
+
+
 @pytest.mark.slow  # sf0.1 sweep; the sf0.001 idempotence gate above
 def test_batch_replay_idempotent_at_sf01(spark, tmp_path):
     """VERDICT r06 item 7: the OVERWRITE-partition idempotency claim,

@@ -97,7 +97,7 @@ EXTRA = (
 def capture(spark, names=None) -> dict:
     import bench
     import explain_audit
-    from alma_publish_to_marc_spark import registry
+    from alma_publish_to_marc_spark import registry, tables
 
     core = names or (list(bench.HEADLINE) + list(EXTRA))
     qs = registry.queries()
@@ -107,7 +107,7 @@ def capture(spark, names=None) -> dict:
         props = explain_audit.summarize(spark, df)
         props.pop("_plan")
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         out[name] = props
     return out
 

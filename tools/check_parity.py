@@ -131,11 +131,11 @@ def main() -> int:
         if ONLY and name not in ONLY:
             continue
         # queries that persist() intermediates (minhash, kmeans, ...)
-        # would otherwise pin blocks for the whole sweep; release_caches
+        # would otherwise pin blocks for the whole sweep; tables.release
         # also drops deferred staged-parquet dirs (ktruss_prune)
         spark.catalog.clearCache()
-        from alma_publish_to_marc_spark import registry
-        registry.release_caches()
+        from alma_publish_to_marc_spark import tables
+        tables.release()
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR).toPandas()

@@ -22,7 +22,7 @@ SUFFIX = os.environ.get("PLAN_SUFFIX", "before")
 
 def main() -> None:
     from alma_publish_to_marc_spark.session import get_spark
-    from alma_publish_to_marc_spark import registry
+    from alma_publish_to_marc_spark import registry, tables
     import bench
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,7 +35,7 @@ def main() -> None:
     for name in names:
         try:
             spark.catalog.clearCache()
-            registry.release_caches()
+            tables.release()
             df = qs[name](spark, SF_DIR)
             import contextlib
             import io

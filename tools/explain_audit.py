@@ -200,7 +200,7 @@ def summarize(spark, df) -> dict:
 
 def main() -> None:
     from alma_publish_to_marc_spark.session import get_spark
-    from alma_publish_to_marc_spark import registry
+    from alma_publish_to_marc_spark import registry, tables
 
     spark = get_spark("explain-audit")
     qs = registry.queries()
@@ -223,9 +223,9 @@ def main() -> None:
         plan = props.pop("_plan")
         # driver-paced queries persist frames during construction;
         # drop them so a full-registry audit doesn't accumulate cache
-        # (release_caches also sweeps deferred staged-parquet dirs)
+        # (tables.release also sweeps deferred staged-parquet dirs)
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         print(f"== {name}: " + " ".join(
             f"{k}={v}" for k, v in props.items()))
         if "-v" in sys.argv or os.environ.get("AUDIT_VERBOSE"):

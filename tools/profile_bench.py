@@ -2,7 +2,7 @@
 
 Usage: python tools/profile_bench.py [sf_dir] [query ...]
 
-For each query: clearCache, release_caches, setJobDescription(name),
+For each query: clearCache, tables.release, setJobDescription(name),
 noop-sink write (best of 2). Afterwards parses the event log and prints,
 per query, the stages sorted by executor run time with task counts and
 shuffle bytes — the guide §1 empirical loop without the UI.
@@ -31,7 +31,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from alma_publish_to_marc_spark.session import tune, DEFAULT_CPUS
-    from alma_publish_to_marc_spark import registry
+    from alma_publish_to_marc_spark import registry, tables
     import bench
 
     spark = (SparkSession.builder.appName("profile")
@@ -55,7 +55,7 @@ def main() -> None:
     walls: dict[str, float] = {}
     for name in names:
         spark.catalog.clearCache()
-        registry.release_caches()
+        tables.release()
         best = float("inf")
         for i in range(2):
             spark.sparkContext.setJobDescription(f"q::{name}::{i}")
