@@ -19,9 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .scalars import INSTITUTION_SUFFIXES, trim_punctuation_bounded
-
-HOLDING_PREFIX = "22"
+from .scalars import is_institution_holding_id, trim_punctuation_bounded
 
 
 # --- core accessors --------------------------------------------------------
@@ -64,13 +62,11 @@ def institution_subfield(field: Column, code: str = "8") -> Column:
     """OP-P4 (get_holding_id_subfield, alma_publish_parser.py:191-195):
     first subfield with the code whose value looks like an institution
     holding id (starts '22', ends with a known suffix)."""
-    suffix_re = "(" + "|".join(INSTITUTION_SUFFIXES) + ")$"
     return F.try_element_at(
         F.filter(
             field["subfields"],
             lambda s: (s["code"] == F.lit(code))
-            & s["value"].startswith(HOLDING_PREFIX)
-            & s["value"].rlike(suffix_re),
+            & is_institution_holding_id(s["value"]),
         ), F.lit(1))
 
 

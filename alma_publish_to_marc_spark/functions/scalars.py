@@ -186,3 +186,7 @@ INSTITUTION_SUFFIX_RE = "(" + "|".join(INSTITUTION_SUFFIXES) + ")$"
 
 def is_institution_holding_id(col: Column) -> Column:
     return col.startswith("22") & col.rlike(INSTITUTION_SUFFIX_RE)
+
+
+def is_institution_holding_id_py(v: str | None) -> bool:
+    return bool(v) and v.startswith("22") and v.endswith(INSTITUTION_SUFFIXES)

@@ -21,17 +21,16 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 
-def run_counters(split_outputs: dict[str, DataFrame],
-                 records: DataFrame | None = None) -> dict[str, int]:
-    """cnt_bibs/holdings/items/errors (+ files and records when the raw
-    record frame is supplied) in one pass per frame."""
+def run_counters(split_outputs: dict[str, DataFrame]) -> dict[str, int]:
+    """cnt_bibs/holdings/items/errors (+ records and files from the
+    split's per-record `records` rows) in one pass per frame."""
     out: dict[str, int] = {}
     for name, key in (("bibs", "cnt_bibs"), ("holdings", "cnt_holdings"),
                       ("items", "cnt_items"), ("errors", "cnt_errors")):
         if name in split_outputs:
             out[key] = split_outputs[name].count()
-    if records is not None:
-        agg = records.agg(
+    if "records" in split_outputs:
+        agg = split_outputs["records"].agg(
             F.count(F.lit(1)).alias("records"),
             F.countDistinct("source_file").alias("files")).collect()[0]
         out["cnt_records"] = agg["records"]

@@ -26,7 +26,7 @@ from ..functions.scalars import (format_number_dashes, format_oclc,
                                  suppress_flag)
 from ..operators import upsert as U
 from ..sources import publish as P
-from ..tables import release
+from ..tables import persist, release
 from .publish_split import split_publish
 
 WAREHOUSE_TABLES = ("bib_brief", "holding_brief", "item", "bib_part",
@@ -196,8 +196,7 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
     """One publish run. Returns the run counters (OP-A1)."""
     from .. import metrics
 
-    records = P.read_publish_records(spark, landing_dir)
-    out = split_publish(records)
+    out = split_publish(P.read_publish_records(spark, landing_dir))
 
     bibs = extract_bib_brief(out["bibs"], batch_ts)
     holdings = extract_holding_brief(out["holdings"], location, batch_ts)
@@ -247,8 +246,9 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
     merged_i = U.merge_upsert(stored_i, ts_col(items), ["pid"], "_ts")
     hist_h = hist_stale.unionByName(hist_items)
 
-    # delete manifests (SRC-6) cascade holding→item (OP-ST6)
-    deletes = P.read_delete_manifests(spark, landing_dir)
+    # delete manifests (SRC-6) cascade holding→item (OP-ST6); persisted,
+    # since five joins and the counter read them
+    deletes = persist(P.read_delete_manifests(spark, landing_dir))
     merged_b, hist_bib = U.delete_with_history(
         merged_b, deletes.select(F.col("mms_id")).where(F.col("mms_id").isNotNull()),
         "mms_id", "bib")
@@ -282,9 +282,9 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
     for name in ("bib_brief", "holding_brief", "item", "bib_part"):
         _swap_table(spark, warehouse_dir, name)
 
-    counters = metrics.run_counters(out, records)
+    counters = metrics.run_counters(out)
     counters["cnt_deletes"] = deletes.count()
-    release()  # the split's persisted rows have served every consumer
+    release()  # the split rows and deletes have served every consumer
     return counters
 
 

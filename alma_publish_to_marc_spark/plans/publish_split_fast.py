@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, StringType, StructField, StructType)
 
-from ..functions.scalars import INSTITUTION_SUFFIXES
+from ..functions.scalars import is_institution_holding_id_py
 from ..schemas import (CONTROL_FIELD, DATA_FIELD, ITEM_STRUCT, PUBLISH_RECORD)
-from ..tables import persist
-
-HOLDING_PREFIX = "22"
+from ..sources.publish import _iter
+from ..tables import fan_out, persist
 
 _BIB_T = StructType([
     StructField("mms_id", StringType()),
@@ -53,19 +52,9 @@ SPLIT_ROW = StructType([
 ])
 
 
-def _lst(v):
-    """None-safe sequence view (nested values arrive as numpy arrays,
-    whose truthiness is ambiguous — no `v or []`)."""
-    return () if v is None else v
-
-
-def _is_inst_id(v: str | None, prefix: str = HOLDING_PREFIX) -> bool:
-    return bool(v) and v.startswith(prefix) and v.endswith(INSTITUTION_SUFFIXES)
-
-
 def _hid_of(field: dict, code: str = "8") -> str | None:
-    for s in _lst(field.get("subfields")):
-        if s["code"] == code and _is_inst_id(s["value"]):
+    for s in _iter(field.get("subfields")):
+        if s["code"] == code and is_institution_holding_id_py(s["value"]):
             return s["value"]
     return None
 
@@ -95,7 +84,7 @@ def _control_groups(cf: list[dict]) -> tuple[list[list[dict]], set[int]]:
 
 
 def _first_sub(field: dict, code: str) -> str | None:
-    for s in _lst(field.get("subfields")):
+    for s in _iter(field.get("subfields")):
         if s["code"] == code:
             return s["value"]
     return None
@@ -132,13 +121,13 @@ def split_record(rec: dict) -> dict:
         out["error"] = "missing 001/mms_id"
         return out
 
-    cf = list(_lst(rec.get("control_fields")))
+    cf = list(_iter(rec.get("control_fields")))
     cf = ([f for f in cf if f["tag"] == "001"]
           + [f for f in cf if f["tag"] != "001"])        # 001 first
     groups, taken = _control_groups(cf)
     bib_ctrl = [f for i, f in enumerate(cf) if i not in taken]
 
-    fields = list(_lst(rec.get("fields")))
+    fields = list(_iter(rec.get("fields")))
     u852: list[tuple[str, dict]] = []
     seen: set[str] = set()
     for f in fields:
@@ -179,7 +168,7 @@ def split_record(rec: dict) -> dict:
         ctrl += [{"tag": "008", "data": c["data"]}
                  for c in group if c["tag"] == "003"]
         hfields = []
-        if f001 and not _is_inst_id(f001):
+        if f001 and not is_institution_holding_id_py(f001):
             if f001.isdigit() and len(f001) < 9:
                 hfields.append({"tag": "035", "ind1": " ", "ind2": " ",
                                 "subfields": [{"code": "a", "value":
@@ -193,9 +182,10 @@ def split_record(rec: dict) -> dict:
             if _hid_of(f) == hid:
                 hfields.append({
                     "tag": f["tag"], "ind1": f["ind1"], "ind2": f["ind2"],
-                    "subfields": [s for s in f["subfields"]
-                                  if not (s["code"] == "8"
-                                          and _is_inst_id(s["value"]))]})
+                    "subfields": [
+                        s for s in f["subfields"]
+                        if not (s["code"] == "8"
+                                and is_institution_holding_id_py(s["value"]))]})
         holdings.append({"holding_id": hid, "leader": leader,
                          "control_fields": ctrl, "fields": hfields})
 
@@ -225,14 +215,8 @@ def split_rows(records: DataFrame) -> DataFrame:
 
     # AQE coalesces by byte estimate and routinely lands nested-record
     # frames on ONE partition, serializing this Python stage (measured
-    # 60 s → 3 s at sf0.1 after spreading). Fan back out to the session
-    # parallelism when the upstream came in narrower.
-    try:
-        target = records.sparkSession.sparkContext.defaultParallelism
-        if records.rdd.getNumPartitions() < target:
-            records = records.repartition(target)
-    except Exception:
-        pass  # streaming frames have no .rdd; batch sizing applies there
+    # 60 s → 3 s at sf0.1 after spreading).
+    records = fan_out(records)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in SPLIT_ROW]
@@ -262,4 +246,4 @@ def split_publish_fast(records: DataFrame) -> dict[str, DataFrame]:
     errors = (rows.where(F.col("error").isNotNull())
               .select("mms_id", "source_file", "error"))
     return {"bibs": bibs, "holdings": holdings, "items": items,
-            "errors": errors}
+            "errors": errors, "records": rows.select("mms_id", "source_file")}

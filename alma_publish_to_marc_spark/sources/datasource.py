@@ -1,121 +1,29 @@
-"""Spark 4 Python DataSource for Alma publish drops: after
-``register(spark)``, ``spark.read.format("marcpublish").load(glob)``
-yields the same nested-record frame as
-``publish.read_publish_records`` (SRC-1/2 + SRC-6 routing,
-`alma_publish_parser.py:197-238,291-292`).
+"""Spark 4 Python DataSource sink for binary MARC: after
+``register(spark)``, ``df.write.format("marcpublish").save(dir)``
+writes a nested-record frame (schemas.PUBLISH_RECORD) as ISO 2709 part
+files — the engine's only .mrc file sink (SRC-15,
+`alma_publish_to_marc.py:16-24,36-37`).
 
-Why both exist: the binaryFile+mapInPandas path composes with other
-DataFrame sources and inherits Spark's file-split scheduling; the
-DataSource form is the catalog-friendly packaging (usable from pure SQL
-via ``CREATE TABLE ... USING marcpublish``) and carries its own
-partition planning — one input partition per publish file, the same
-parallelism unit as the reference's per-file ThreadPool tasks.
+Why a DataSource: the other sinks are column serializers
+(`publish.with_serialized_marc`) feeding ordinary writers, but ISO 2709
+is a concatenated-record file format with no Spark writer. The
+DataSource gives it the usual file-sink protocol: per-task part files,
+a driver-side ``_SUCCESS`` commit and abort cleanup. There is no read
+side; publish drops are read by ``publish.read_publish_records``
+(batch) and ``streaming.ingest.stream_publish_records`` (streaming),
+which share one parse stage.
 
-Scale: partition planning is a driver-side listing (cheap metadata);
-each partition streams one file through the tar/XML codec on an
-executor, so a 100 TB backlog scales with file count exactly like the
-mapInPandas path. No shuffle anywhere.
+Scale: each task serializes its own partition on an executor; the
+driver only collects (path, count) commit messages. No shuffle.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader,
-                                    DataSourceWriter, InputPartition)
+from pyspark.sql.datasource import DataSource, DataSourceWriter
 
-from ..schemas import PUBLISH_RECORD
 from . import marclib
-from .publish import _extract_xml_payloads
-
-
-def _rec_tuple(rec: dict) -> tuple:
-    """Nested dict → schema-ordered tuples (the DataSource row form)."""
-    return (
-        rec.get("mms_id"),
-        rec.get("leader"),
-        [(cf.get("tag"), cf.get("data"))
-         for cf in rec.get("control_fields") or []],
-        [(f.get("tag"), f.get("ind1"), f.get("ind2"),
-          [(s.get("code"), s.get("value")) for s in f.get("subfields") or []])
-         for f in rec.get("fields") or []],
-        rec.get("source_file"),
-    )
-
-
-def _upsert_files(path: str) -> list[str]:
-    """Sorted upsert files under a path/glob (SRC-4 lexicographic
-    order; delete manifests route elsewhere)."""
-    pattern = path
-    if os.path.isdir(pattern):
-        pattern = os.path.join(pattern, "*")
-    return sorted(
-        p for p in _glob.glob(pattern)
-        if os.path.isfile(p) and "delete" not in os.path.basename(p))
-
-
-def _read_file(path: str):
-    """Executor-side: stream one publish file into record tuples."""
-    with open(path, "rb") as fh:
-        content = fh.read()
-    try:
-        for payload in _extract_xml_payloads(path, content):
-            for rec in marclib.from_marcxml(payload, source_file=path):
-                yield _rec_tuple(rec)
-    except Exception:
-        # log-and-continue per file (parse_file semantics): a
-        # null-mms_id row routes to split_publish's error stream
-        yield _rec_tuple(marclib.new_record(source_file=path))
-
-
-class MarcPublishReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        self.path = options.get("path") or ""
-
-    def partitions(self):  # driver-side: one partition per upsert file
-        return [InputPartition(p) for p in _upsert_files(self.path)]
-
-    def read(self, partition):
-        yield from _read_file(partition.value)
-
-
-class MarcPublishStreamReader(DataSourceStreamReader):
-    """Micro-batch incremental reader over the publish landing dir —
-    the streaming form of the same source: each trigger picks up files
-    that arrived since the last committed offset.
-
-    The offset is the lexicographically-largest file name processed so
-    far, which is exactly the contract the batch surface already relies
-    on (SRC-4: drops are timestamped, names arrive in order —
-    `alma_publish_parser.py:197-238`'s sorted listing). Offsets are
-    tiny (one name), replayable (``partitions(start, end)`` re-derives
-    the file set from the two bounds, so a failed batch re-reads the
-    same files — exactly-once with a checkpointed sink), and partition
-    planning stays a driver-side listing with one partition per new
-    file, read executor-side like the batch reader."""
-
-    def __init__(self, options: dict) -> None:
-        self.path = options.get("path") or ""
-
-    def initialOffset(self) -> dict:
-        return {"last": ""}
-
-    def latestOffset(self) -> dict:
-        files = _upsert_files(self.path)
-        return {"last": files[-1] if files else ""}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start.get("last", ""), end.get("last", "")
-        return [InputPartition(p) for p in _upsert_files(self.path)
-                if lo < p <= hi]
-
-    def read(self, partition):
-        yield from _read_file(partition.value)
-
-    def commit(self, end: dict) -> None:
-        pass  # processed files stay in place; the offset is the cursor
 
 
 class MarcPublishWriter(DataSourceWriter):
@@ -183,15 +91,6 @@ class MarcPublishDataSource(DataSource):
     def name(cls) -> str:
         return "marcpublish"
 
-    def schema(self):
-        return PUBLISH_RECORD
-
-    def reader(self, schema) -> MarcPublishReader:
-        return MarcPublishReader(self.options)
-
-    def streamReader(self, schema) -> MarcPublishStreamReader:
-        return MarcPublishStreamReader(self.options)
-
     def writer(self, schema, overwrite: bool) -> MarcPublishWriter:
         # overwrite must clear prior parts at plan time (driver-side):
         # a glob reader over *.mrc would otherwise re-ingest stale
@@ -206,36 +105,8 @@ class MarcPublishDataSource(DataSource):
         return MarcPublishWriter(self.options)
 
 
-def _register_by_value() -> None:
-    """Make the pickled DataSource self-contained.
-
-    Executors see this package via ``addPyFile`` (session.tune), but the
-    STREAMING planner process (`python_streaming_source_runner.py`) that
-    unpickles the DataSource during micro-batch planning does not add
-    Python includes to its path — on a real cluster driver (or any
-    driver whose cwd isn't the repo) a by-reference pickle of the reader
-    class raises ModuleNotFoundError before the first offset is read.
-    Registering the module graph for cloudpickle by-value serialization
-    embeds the class and its helpers in the pickle itself, so planning
-    works wherever pyspark+pandas are importable.
-    """
-    try:
-        from pyspark import cloudpickle
-    except ImportError:  # pragma: no cover - cloudpickle always bundled
-        return
-    if not hasattr(cloudpickle, "register_pickle_by_value"):
-        return
-    from .. import schemas
-    from . import publish
-    import sys
-
-    for mod in (sys.modules[__name__], publish, marclib, schemas):
-        cloudpickle.register_pickle_by_value(mod)
-
-
 def register(spark) -> None:
     from ..session import tune
 
-    tune(spark)  # ships the package so executors can unpickle the reader
-    _register_by_value()  # streaming planner unpickles with no includes
+    tune(spark)  # ships the package so executors can unpickle the writer
     spark.dataSource.register(MarcPublishDataSource)

@@ -26,9 +26,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, IntegerType, StringType,
+from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
 
+from ..functions.scalars import is_institution_holding_id_py
 from ..schemas import PUBLISH_RECORD
 from . import marclib
 
@@ -52,22 +53,24 @@ def _extract_xml_payloads(path: str, content: bytes) -> list[bytes]:
     return [content]
 
 
-def read_publish_records(spark: SparkSession, path: str) -> DataFrame:
-    """SRC-1/2: Alma publish XML (optionally inside .tar.gz) → nested
-    records. Upsert files only — delete files are routed separately
-    (SRC-6); the `delete` filename test matches the reference's."""
-    files = (spark.read.format("binaryFile").load(path)
-             .select("path", "content"))
-    files = files.where(~F.col("path").contains("delete"))
+def _file_records(path: str, content: bytes) -> Iterator[dict]:
+    """One publish file → its nested records; the only place publish
+    files are untarred and parsed."""
+    for payload in _extract_xml_payloads(path, content):
+        yield from marclib.from_marcxml(payload, source_file=path)
 
+
+def parse_upsert_files(files: DataFrame) -> DataFrame:
+    """binaryFile rows → nested records, upsert files only — delete
+    files are routed separately (SRC-6); the `delete` filename test
+    matches the reference's. The same stage serves a batch
+    (`spark.read`) and a streaming (`spark.readStream`) file frame."""
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for p, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    for payload in _extract_xml_payloads(p, bytes(content)):
-                        for rec in marclib.from_marcxml(payload, source_file=p):
-                            rows.append(rec)
+                    rows.extend(_file_records(p, bytes(content)))
                 except Exception:
                     # log-and-continue per file (parse_file's try/except,
                     # alma_publish_parser.py:197-238): a null-mms_id row
@@ -75,7 +78,15 @@ def read_publish_records(spark: SparkSession, path: str) -> DataFrame:
                     rows.append(marclib.new_record(source_file=p))
             yield pd.DataFrame(rows, columns=[f.name for f in PUBLISH_RECORD])
 
-    return files.mapInPandas(parse, PUBLISH_RECORD)
+    return (files.select("path", "content")
+            .where(~F.col("path").contains("delete"))
+            .mapInPandas(parse, PUBLISH_RECORD))
+
+
+def read_publish_records(spark: SparkSession, path: str) -> DataFrame:
+    """SRC-1/2: Alma publish XML (optionally inside .tar.gz) → nested
+    records."""
+    return parse_upsert_files(spark.read.format("binaryFile").load(path))
 
 
 def read_binary_marc(spark: SparkSession, path: str) -> DataFrame:
@@ -100,7 +111,8 @@ def read_binary_marc(spark: SparkSession, path: str) -> DataFrame:
 def read_delete_manifests(spark: SparkSession, path: str) -> DataFrame:
     """SRC-6 (process_delete_file, alma_publish_parser.py:341-380):
     files with 'delete' in the name; each record deletes its 001 bib and
-    at most one 852$8 holding (the reference breaks after the first)."""
+    at most one 852$8 holding (the reference breaks after the first).
+    A corrupt manifest fails the read rather than skipping deletes."""
     files = (spark.read.format("binaryFile").load(path)
              .select("path", "content")
              .where(F.col("path").contains("delete")))
@@ -109,34 +121,18 @@ def read_delete_manifests(spark: SparkSession, path: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for p, content in zip(pdf["path"], pdf["content"]):
-                for payload in _extract_xml_payloads(p, bytes(content)):
-                    for rec in marclib.from_marcxml(payload, source_file=p):
-                        holding_id = None
-                        for f in rec["fields"]:
-                            if f["tag"] != "852":
-                                continue
-                            for s in f["subfields"]:
-                                v = s["value"] or ""
-                                if (s["code"] == "8" and v.startswith("22")
-                                        and v.endswith(tuple(
-                                            _institution_suffixes()))):
-                                    holding_id = v
-                                    break
-                            if holding_id:
-                                break
-                        rows.append({"mms_id": rec["mms_id"],
-                                     "holding_id": holding_id,
-                                     "source_file": p})
-            yield pd.DataFrame(rows, columns=["mms_id", "holding_id",
-                                              "source_file"])
+                for rec in _file_records(p, bytes(content)):
+                    holding_id = next(
+                        (s["value"] for f in rec["fields"] if f["tag"] == "852"
+                         for s in f["subfields"]
+                         if s["code"] == "8"
+                         and is_institution_holding_id_py(s["value"])), None)
+                    rows.append({"mms_id": rec["mms_id"],
+                                 "holding_id": holding_id,
+                                 "source_file": p})
+            yield pd.DataFrame(rows, columns=[f.name for f in DELETE_ROW])
 
     return files.mapInPandas(parse, DELETE_ROW)
-
-
-def _institution_suffixes() -> tuple[str, ...]:
-    from ..functions.scalars import INSTITUTION_SUFFIXES
-
-    return INSTITUTION_SUFFIXES
 
 
 # --- serialization columns (SRC-15/16) -------------------------------------

@@ -21,9 +21,10 @@
 
 The warehouse is a parquet directory per table; `foreachBatch` rewrites
 merged tables (on Delta this becomes MERGE — same plan shape). Batch and
-streaming share every transform: `split_publish` and the merge are
-called identically from both paths, which is what keeps the two
-codepaths semantically equal (tested in tests/test_streaming.py).
+streaming share every transform: the file parse
+(`sources.publish.parse_upsert_files`), `split_publish` and the merge
+are called identically from both paths, which is what keeps the two
+codepaths semantically equal (tested in tests/test_upsert_streaming.py).
 """
 
 from __future__ import annotations
@@ -34,39 +35,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.publish_split import split_publish
-from ..schemas import PUBLISH_RECORD
-from ..sources import marclib
+from ..sources.publish import parse_upsert_files
 from ..tables import release
 
 
 def stream_publish_records(spark: SparkSession, landing_dir: str) -> DataFrame:
     """Streaming nested-record source over a landing directory of
-    publish XML files (delete files excluded, SRC-6 routing)."""
-    import pandas as pd
-    from collections.abc import Iterator
-
+    publish XML files: the batch reader's parse stage over a streaming
+    file frame. The file source remembers every file it has read, so a
+    drop that lands late under an earlier-sorting name is still read."""
     binary_file_schema = ("path string, modificationTime timestamp, "
                           "length long, content binary")
-    files = (spark.readStream.format("binaryFile")
-             .schema(binary_file_schema)
-             .load(landing_dir)
-             .where(~F.col("path").contains("delete"))
-             .select("path", "content"))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.publish import _extract_xml_payloads
-
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for payload in _extract_xml_payloads(p, bytes(content)):
-                        rows.extend(marclib.from_marcxml(payload, source_file=p))
-                except Exception:
-                    rows.append(marclib.new_record(source_file=p))
-            yield pd.DataFrame(rows, columns=[f.name for f in PUBLISH_RECORD])
-
-    return files.mapInPandas(parse, PUBLISH_RECORD)
+    return parse_upsert_files(spark.readStream.format("binaryFile")
+                              .schema(binary_file_schema)
+                              .load(landing_dir))
 
 
 def run_incremental_ingest(spark: SparkSession, landing_dir: str,

@@ -140,7 +140,7 @@ def test_run_counters(spark):
 
     records = spark.createDataFrame(ALL_RECORDS, PUBLISH_RECORD)
     out = split_publish(records)
-    counters = metrics.run_counters(out, records)
+    counters = metrics.run_counters(out)
     assert counters == {"cnt_bibs": 1, "cnt_holdings": 2, "cnt_items": 3,
                         "cnt_errors": 2, "cnt_records": 4, "cnt_files": 2}
     assert metrics.throughput(100, 4.0) == 25.0

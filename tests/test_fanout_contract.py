@@ -39,6 +39,9 @@ _AT_SCALE = {
     "ann_index_incremental": (2, 1),
     "kmeans_fixed_point": (1, 1),
     "distinct_ngram_diversity": (3, 1),
+    # the publish-split synthesis: split_rows' Arrow stage fans out
+    # through tables.fan_out, so FANOUT=off adds no exchange there
+    "publish_split_bibs": (3, 3),
 }
 
 
@@ -60,3 +63,22 @@ def test_no_fanout_plan_shape(spark, name, monkeypatch):
         f"({p['shuffles']} != {shuffles}) — a real exchange is hiding "
         f"under the fan_out")
     assert p["scans"] == scans, name
+
+
+def test_split_rows_honours_fanout_off(spark, monkeypatch):
+    """split_rows fans out through tables.fan_out, so FANOUT=off leaves a
+    one-partition input unshuffled. The `_AT_SCALE` counts above cannot
+    see this: `summarize` counts hash exchanges, and split_rows' fan-out
+    is a round-robin one."""
+    from alma_publish_to_marc_spark.plans.publish_split_fast import split_rows
+    from alma_publish_to_marc_spark.schemas import PUBLISH_RECORD
+
+    from .fixtures_publish import ALL_RECORDS
+
+    records = spark.createDataFrame(ALL_RECORDS, PUBLISH_RECORD).coalesce(1)
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "off")
+    plan = split_rows(records)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "auto")
+    plan = split_rows(records)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan

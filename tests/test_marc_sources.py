@@ -111,85 +111,13 @@ def test_binary_marc_source(spark, tmp_path):
     assert rows[0]["mms_id"] == rec["mms_id"]
 
 
-def test_marcpublish_datasource_matches_mapinpandas(spark, publish_dir):
-    """The Python DataSource and the binaryFile+mapInPandas reader must
-    produce identical nested records for the same drop directory."""
-    from alma_publish_to_marc_spark.sources import datasource
-
-    datasource.register(spark)
-    via_ds = (spark.read.format("marcpublish")
-              .load(publish_dir + "/*").collect())
-    via_mip = publish.read_publish_records(spark, publish_dir + "/*").collect()
-
-    def key(r):
-        return (r["mms_id"], r["source_file"])
-
-    assert len(via_ds) == len(via_mip) == 2
-    for a, b in zip(sorted(via_ds, key=key), sorted(via_mip, key=key)):
-        assert a["mms_id"] == b["mms_id"]
-        assert a["leader"] == b["leader"]
-        assert a["control_fields"] == b["control_fields"]
-        assert a["fields"] == b["fields"]
-
-
-def _write_upsert(d, name, n_records=2):
-    """One tar.gz upsert drop holding a collection of n records."""
-    rec = _as_plain_dict(GOOD_RECORD)
-    collection = ('<collection xmlns="http://www.loc.gov/MARC21/slim">'
-                  + marclib.to_marcxml(rec, namespace=False) * n_records
-                  + "</collection>").encode()
-    buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode="w:gz") as tar:
-        info = tarfile.TarInfo("publish_new_1.xml")
-        info.size = len(collection)
-        tar.addfile(info, io.BytesIO(collection))
-    (d / name).write_bytes(buf.getvalue())
-
-
-def test_marcpublish_stream_reader_incremental(spark, tmp_path):
-    """The streaming DataSource picks up only files beyond the
-    committed offset: first drain reads drop 1, second drain (same
-    checkpoint) reads only the later-named drop 2."""
-    from alma_publish_to_marc_spark.sources import datasource
-
-    datasource.register(spark)
-    src = tmp_path / "landing"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    def drain():
-        stream = (spark.readStream.format("marcpublish")
-                  .load(str(src)))
-
-        def sink(batch_df, _batch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (stream.writeStream.foreachBatch(sink)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    _write_upsert(src, "incremental-20240101_new_1.tar.gz", n_records=2)
-    drain()
-    first = spark.read.parquet(out).collect()
-    assert len(first) == 2
-    assert all("20240101" in r["source_file"] for r in first)
-
-    _write_upsert(src, "incremental-20240102_new_1.tar.gz", n_records=3)
-    drain()
-    both = spark.read.parquet(out).collect()
-    assert len(both) == 5
-    assert sum("20240102" in r["source_file"] for r in both) == 3
-
-
 def test_marcpublish_datasource_writer_roundtrip(spark, publish_dir, tmp_path):
     """format('marcpublish') write path: records -> ISO2709 part files
     + _SUCCESS manifest; read back through the binary MARC source."""
     from alma_publish_to_marc_spark.sources import datasource
 
     datasource.register(spark)
-    records = spark.read.format("marcpublish").load(publish_dir + "/*")
+    records = publish.read_publish_records(spark, publish_dir + "/*")
     out = str(tmp_path / "mrc_out")
     records.write.format("marcpublish").mode("append").save(out)
 
@@ -209,7 +137,7 @@ def test_marcpublish_writer_overwrite_clears_stale_parts(spark, publish_dir,
     from alma_publish_to_marc_spark.sources import datasource
 
     datasource.register(spark)
-    records = spark.read.format("marcpublish").load(publish_dir + "/*")
+    records = publish.read_publish_records(spark, publish_dir + "/*")
     out = str(tmp_path / "mrc_ow")
     records.write.format("marcpublish").mode("overwrite").save(out)
     records.write.format("marcpublish").mode("overwrite").save(out)

@@ -21,7 +21,8 @@ def _canon(rows):
         key=str)
 
 
-@pytest.mark.parametrize("output", ["bibs", "holdings", "items", "errors"])
+@pytest.mark.parametrize("output", ["bibs", "holdings", "items", "errors",
+                                    "records"])
 def test_fast_equals_catalyst(spark, output):
     df = spark.createDataFrame(ALL_RECORDS, PUBLISH_RECORD)
     fast = split_publish_fast(df)[output]

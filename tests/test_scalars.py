@@ -85,3 +85,6 @@ def test_institution_id_predicate(spark):
     out = [r["m"] for r in
            df.select(SC.is_institution_holding_id(F.col("s")).alias("m")).collect()]
     assert out == [True, True, False, False]
+    assert [SC.is_institution_holding_id_py(r["s"])
+            for r in df.collect()] == out
+    assert not SC.is_institution_holding_id_py(None)

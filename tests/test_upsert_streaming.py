@@ -98,11 +98,14 @@ def test_stale_holdings_anti_join(spark):
     assert [r["holding_id"] for r in stale.collect()] == ["h2"]
 
 
-def test_streaming_ingest_equals_batch(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
+def _land_drop(landing, name, mms_id):
+    """One tar.gz upsert drop holding GOOD_RECORD under `mms_id`."""
     rec = {k: GOOD_RECORD[k]
            for k in ("mms_id", "leader", "control_fields", "fields")}
+    rec["mms_id"] = mms_id
+    rec["control_fields"] = [
+        {"tag": "001", "data": mms_id} if c["tag"] == "001" else c
+        for c in rec["control_fields"]]
     collection = ('<collection xmlns="http://www.loc.gov/MARC21/slim">'
                   + marclib.to_marcxml(rec, namespace=False)
                   + "</collection>").encode()
@@ -111,7 +114,13 @@ def test_streaming_ingest_equals_batch(spark, tmp_path):
         info = tarfile.TarInfo("p.xml")
         info.size = len(collection)
         tar.addfile(info, io.BytesIO(collection))
-    (landing / "incremental-1_new_1.tar.gz").write_bytes(buf.getvalue())
+    (landing / name).write_bytes(buf.getvalue())
+
+
+def test_streaming_ingest_equals_batch(spark, tmp_path):
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _land_drop(landing, "incremental-1_new_1.tar.gz", GOOD_RECORD["mms_id"])
 
     out = tmp_path / "warehouse"
     ingest.run_incremental_ingest(spark, str(landing), str(out))
@@ -119,9 +128,17 @@ def test_streaming_ingest_equals_batch(spark, tmp_path):
     items = spark.read.parquet(str(out / "items"))
     assert bibs.count() == 1
     assert items.count() == 3
-    # drain again with same checkpoint: nothing new → no duplicates
+    # a drop that lands late under an earlier-sorting name is still read,
+    # and only its records are added (same checkpoint: no replays)
+    _land_drop(landing, "incremental-0_new_1.tar.gz", "9940008651")
     ingest.run_incremental_ingest(spark, str(landing), str(out))
-    assert spark.read.parquet(str(out / "bibs")).count() == 1
+    bibs = spark.read.parquet(str(out / "bibs")).collect()
+    assert sorted(r["mms_id"] for r in bibs) == ["9910008651", "9940008651"]
+    src = {r["mms_id"]: r["source_file"] for r in bibs}
+    assert src["9940008651"].endswith("incremental-0_new_1.tar.gz")
+    items = spark.read.parquet(str(out / "items")).collect()
+    assert sorted(r["mms_id"] for r in items) == (
+        ["9910008651"] * 3 + ["9940008651"] * 3)
 
 
 def test_analytics_tsv_pipeline(spark, tmp_path):
