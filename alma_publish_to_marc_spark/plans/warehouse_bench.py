@@ -16,13 +16,18 @@ write time, the steady-state read is exchange-free.
 Bench protocol note: the bucketed build happens on the first call for
 a given sf (bench.py runs each headliner twice and reports the min, so
 the recorded number is the steady-state join, exactly like a resident
-warehouse)."""
+warehouse). A later call only looks up the catalog and reads parquet
+footers to confirm the build is current, so building its frame launches
+no Spark job."""
 
 from __future__ import annotations
 
+import glob
 import os
 import re
+import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +46,8 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
     bucketed + sorted by pid, shared bucket count) from the sf tables.
     Idempotent per sf: rebuilt only when a table is missing or the
     source row count changed (a different dataset under the same name).
+    The check launches no Spark job: catalog lookups plus parquet footer
+    row counts of the orders file and the bucketed item files.
     """
     db = _db_name(sf_dir)
     # pin the location inside the repo: the default warehouse dir is
@@ -48,12 +55,15 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
     loc = os.path.join(os.path.dirname(os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))), "spark-warehouse", db)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-    orders = load(spark, sf_dir, "orders")
-    existing = {t.name for t in spark.catalog.listTables(db)}
-    if {"item", "item_base_status", "item_data"} <= existing:
-        n = spark.table(f"{db}.item").count()
-        if n == orders.count():
+    names = ("item", "item_base_status", "item_data")
+    if all(spark.catalog.tableExists(f"{db}.{name}") for name in names):
+        n_orders = pq.read_metadata(
+            os.path.join(sf_dir, "orders.parquet")).num_rows
+        n_items = sum(pq.read_metadata(f).num_rows for f in
+                      glob.glob(os.path.join(loc, "item", "*.parquet")))
+        if n_items == n_orders:
             return db
+    orders = load(spark, sf_dir, "orders")
     item = orders.select(
         F.col("o_orderkey").cast("string").alias("pid"),
         F.col("o_custkey").cast("string").alias("holding_id"),
@@ -65,26 +75,17 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> str:
             .groupBy(F.col("l_orderkey").cast("string").alias("pid"))
             .agg(F.count(F.lit(1)).alias("n_lines"),
                  F.sum("l_quantity").alias("sum_qty")))
-    for name, df in (("item", item), ("item_base_status", status),
-                     ("item_data", data)):
+    for name, df in zip(names, (item, status, data)):
         # bucketing metadata lives in the (session-local) catalog; a new
         # session may find the files of a previous build without the
         # table entry — clear both before writing
         spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        _rm_stale_location(spark, db, name)
+        shutil.rmtree(os.path.join(loc, name), ignore_errors=True)
         (df.write.mode("overwrite")
          .bucketBy(BUCKETS, "pid").sortBy("pid")
          .format("parquet")
          .saveAsTable(f"{db}.{name}"))
     return db
-
-
-def _rm_stale_location(spark: SparkSession, db: str, name: str) -> None:
-    import shutil
-    from urllib.parse import urlparse
-
-    loc = urlparse(spark.catalog.getDatabase(db).locationUri).path
-    shutil.rmtree(f"{loc}/{name}", ignore_errors=True)
 
 
 def bucketed_item_info_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,8 +3,12 @@
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings. Schemas are fixed by the driver; we read them as-is
 and never widen the scan: callers select the columns they need so Catalyst
-prunes the parquet read. ``spark.read.parquet`` is given no schema, so each
-:func:`load` call runs one schema-inference Spark job over the footer.
+prunes the parquet read. :func:`load` launches no Spark job: it reads the
+file's parquet footer on the driver, once per file version, and hands the
+resulting schema to ``spark.read.schema``. That schema is the one Spark
+would infer (TIMESTAMP(NANOS) as long under nanosAsLong, INT96 as
+timestamp, micros timestamps without a UTC flag as timestamp_ntz, every
+field nullable), so plans are the same as with inference.
 
 This module also holds the one persist ledger: :func:`persist` pins a
 reused frame, :func:`on_release` records any other deferred cleanup, and
@@ -19,10 +23,13 @@ import functools
 import os
 from collections.abc import Callable
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 # The events table's closed type domain (driver generator). Pinning it
 # in one place keeps pivot columns and drift-probability columns in
@@ -37,26 +44,37 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-@functools.lru_cache(maxsize=None)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark reads as
-    long under spark.sql.legacy.parquet.nanosAsLong. Detected once per
-    file from parquet metadata (driver-side, O(footer))."""
-    import pyarrow as pa
-
-    schema = pq.read_schema(path)
-    return tuple(
-        f.name for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    )
+@functools.lru_cache(maxsize=256)
+def _footer(path: str, mtime_ns: int,
+            size: int) -> tuple[StructType, tuple[str, ...]]:
+    """Spark's read schema of one parquet file and its TIMESTAMP(NANOS)
+    columns, from one driver-side footer read. ``mtime_ns`` and ``size``
+    are part of the memo key only, so a file rewritten in place is read
+    again instead of served a stale schema."""
+    schema = pq.read_metadata(path).schema
+    int96 = {schema.column(i).path for i in range(len(schema))
+             if schema.column(i).physical_type == "INT96"}
+    fields, nanos = [], []
+    for f in schema.to_arrow_schema():
+        if f.name in int96:  # pyarrow reports INT96 as timestamp[ns]
+            t = TimestampType()
+        elif pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            nanos.append(f.name)
+            t = LongType()
+        else:
+            t = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        fields.append(StructField(f.name, t))
+    return StructType(fields), tuple(nanos)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for c in _nanos_ts_columns(path):
+    st = os.stat(path)
+    schema, nanos = _footer(path, st.st_mtime_ns, st.st_size)
+    df = spark.read.schema(schema).parquet(path)
+    for c in nanos:
         # nanos since epoch (long) → microsecond timestamp, truncating —
         # same truncation DuckDB applies when reading nanos into its
         # microsecond TIMESTAMP, so oracle comparisons stay exact.

@@ -42,6 +42,13 @@ _AT_SCALE = {
     # the publish-split synthesis: split_rows' Arrow stage fans out
     # through tables.fan_out, so FANOUT=off adds no exchange there
     "publish_split_bibs": (3, 3),
+    # the fan_out sites added in r12: the sketch family's shared
+    # `_tokens` shingle stream, ngram_lm's tokenized documents and the
+    # spatial `_pts_cells` point frame (fanout-on adds 1, 2 and 1
+    # shuffles to these)
+    "kmv_distinct_estimate": (2, 1),
+    "ngram_lm_perplexity": (4, 3),
+    "two_hop_reachability": (6, 2),
 }
 
 

@@ -8,6 +8,8 @@ import pytest
 from alma_publish_to_marc_spark.warehouse_ddl import (
     WAREHOUSE_TABLES, bootstrap_catalog, cluster_key, ddl_statements)
 
+from .conftest import SF_SMOKE, jobs_launched
+
 EXPECTED_TABLES = {
     "bib_brief", "bib_marc", "bib_marc_xml", "bib_part", "circ_desk",
     "code_table_value", "deleted_record", "holding_brief", "holding_marc",
@@ -129,3 +131,41 @@ def test_bucketed_item_info_join_only_shuffles_the_aggregate(spark):
     assert plan.count("SortMergeJoin") >= 2, plan
     rows = df.collect()
     assert rows and sum(r["n_items"] for r in rows) > 0
+
+
+def test_second_bucketed_call_launches_no_job(spark):
+    """Once the bucketed tables are current, building the headliner's
+    frame is a catalog lookup plus footer reads: no Spark job."""
+    from alma_publish_to_marc_spark.plans import warehouse_bench as WB
+
+    WB.bucketed_item_info_join(spark, SF_SMOKE)
+    assert jobs_launched(
+        spark, lambda: WB.bucketed_item_info_join(spark, SF_SMOKE)) == []
+
+
+def test_bucketed_tables_rebuilt_when_orders_row_count_changes(spark, tmp_path):
+    """A different dataset under the same sf name (a changed orders row
+    count) rebuilds the bucketed tables instead of reusing them."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from alma_publish_to_marc_spark.plans import warehouse_bench as WB
+
+    sf = tmp_path / "bucketed_rebuild_sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_SMOKE}/lineitem.parquet", sf)
+    orders = pq.read_table(f"{SF_SMOKE}/orders.parquet")
+    line_keys = pq.read_table(f"{SF_SMOKE}/lineitem.parquet",
+                              columns=["l_orderkey"])["l_orderkey"]
+    db = WB._db_name(str(sf))
+    try:
+        for n in (100, 60):
+            subset = orders.slice(0, n)
+            pq.write_table(subset, str(sf / "orders.parquet"))
+            want = pc.sum(pc.is_in(subset["o_orderkey"], line_keys)).as_py()
+            rows = WB.bucketed_item_info_join(spark, str(sf)).collect()
+            assert sum(r["n_items"] for r in rows) == want
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
