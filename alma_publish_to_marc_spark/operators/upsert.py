@@ -34,13 +34,12 @@ AUDIT = ("create_date_time", "update_date_time", "version")
 
 
 def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
-                 ts_col: str, guard: bool = True,
-                 tiebreak: Sequence[str] = ()) -> DataFrame:
+                 ts_col: str, tiebreak: Sequence[str] = ()) -> DataFrame:
     """Batch MERGE: returns the post-merge table.
 
     - new keys insert with version=1, create=update=incoming ts
-    - matched keys update only when incoming is strictly newer (guard) —
-      version increments, create_date_time is preserved
+    - matched keys update only when incoming is strictly newer (the
+      temporal guard) — version increments, create_date_time is preserved
     - unmatched stored rows pass through
     """
     incoming = latest_per_key(incoming, keys, ts_col, tiebreak)
@@ -55,8 +54,7 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
     is_insert = F.col(ts_col).isNull()          # no stored row
     in_ts = F.col(f"_in_{ts_col}")
     has_incoming = in_ts.isNotNull()
-    newer = in_ts > F.col(ts_col) if guard else F.lit(True)
-    take_incoming = is_insert | (has_incoming & newer)
+    take_incoming = is_insert | (has_incoming & (in_ts > F.col(ts_col)))
 
     out_cols = [F.col(k) for k in keys]
     for c in value_cols:

@@ -30,8 +30,7 @@ def _stored_incoming(spark: SparkSession, sf_dir: str):
 
 def _versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored, incoming = _stored_incoming(spark, sf_dir)
-    return U.merge_upsert(stored, incoming, ["user_id"], "ts",
-                          guard=True, tiebreak=[])
+    return U.merge_upsert(stored, incoming, ["user_id"], "ts")
 
 
 _MERGE_SQL = """

@@ -95,8 +95,8 @@ def run_backfill(spark: SparkSession, warehouse_dir: str, table: str,
     from .pipeline import _stage_table, _swap_table
 
     current = spark.read.parquet(os.path.join(warehouse_dir, table))
-    _stage_table(transform(current), warehouse_dir, table)
-    _swap_table(spark, warehouse_dir, table)
+    _swap_table(_stage_table(transform(current), warehouse_dir, table),
+                warehouse_dir, table)
 
 
 # --------------------------------------------------------------------------

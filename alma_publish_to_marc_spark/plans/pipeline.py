@@ -16,7 +16,9 @@ per-table overwrite (MERGE on Delta).
 from __future__ import annotations
 
 import os
+import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -152,7 +154,11 @@ def _read_table(spark: SparkSession, warehouse_dir: str, name: str,
     path = os.path.join(warehouse_dir, name)
     try:
         stored = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        # only a table not written yet reads as empty: an unreadable one
+        # must fail the run, not be overwritten with the drop's rows alone
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return template.limit(0)
     # Schema evolution: a warehouse written by an older engine version
     # may lack columns added since (e.g. holding_brief gained
@@ -171,29 +177,30 @@ def _read_table(spark: SparkSession, warehouse_dir: str, name: str,
     return stored.select(aligned)
 
 
-def _stage_table(df: DataFrame, warehouse_dir: str, name: str) -> None:
+def _stage_table(df: DataFrame, warehouse_dir: str, name: str) -> DataFrame:
     """Phase 1 of the rewrite: materialize the merged table NEXT TO the
-    current one. Every merge plan lazily reads the tables it replaces
-    (and other tables' plans may reference this one), so nothing may
-    overwrite a source path until ALL staged writes have completed."""
-    df.write.mode("overwrite").parquet(
-        os.path.join(warehouse_dir, name + "._staged"))
+    current one and return a frame over the staged copy. Every merge plan
+    lazily reads the tables it replaces (and other tables' plans may
+    reference this one), so nothing may overwrite a source path until ALL
+    staged writes have completed."""
+    path = os.path.join(warehouse_dir, name + "._staged")
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
-def _swap_table(spark: SparkSession, warehouse_dir: str, name: str) -> None:
-    """Phase 2: staged → final (reads only the staged copy)."""
-    import shutil
-
+def _swap_table(staged: DataFrame, warehouse_dir: str, name: str) -> None:
+    """Phase 2: write the final table from a plan that reads only the
+    staged copy, then drop the copy."""
     path = os.path.join(warehouse_dir, name)
-    tmp = path + "._staged"
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    staged.write.mode("overwrite").parquet(path)
+    shutil.rmtree(path + "._staged", ignore_errors=True)
 
 
-def run_publish_pipeline(spark: SparkSession, landing_dir: str,
+def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
                          warehouse_dir: str, batch_ts,
                          location: DataFrame | None = None) -> dict[str, int]:
-    """One publish run. Returns the run counters (OP-A1)."""
+    """One publish run over a landing path (or a list of paths, e.g. one
+    publish set's files). Returns the run counters (OP-A1)."""
     from .. import metrics
 
     out = split_publish(P.read_publish_records(spark, landing_dir))
@@ -246,20 +253,6 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
     merged_i = U.merge_upsert(stored_i, ts_col(items), ["pid"], "_ts")
     hist_h = hist_stale.unionByName(hist_items)
 
-    # delete manifests (SRC-6) cascade holding→item (OP-ST6); persisted,
-    # since five joins and the counter read them
-    deletes = persist(P.read_delete_manifests(spark, landing_dir))
-    merged_b, hist_bib = U.delete_with_history(
-        merged_b, deletes.select(F.col("mms_id")).where(F.col("mms_id").isNotNull()),
-        "mms_id", "bib")
-    doomed_h = deletes.select("holding_id").where(F.col("holding_id").isNotNull())
-    merged_h, merged_i, hist_cascade = U.cascade_delete_holdings(
-        merged_h, merged_i, doomed_h)
-
-    history = (hist_h.unionByName(hist_bib).unionByName(hist_cascade)
-               .withColumn("create_date_time",
-                           F.lit(batch_ts).cast("timestamp_ntz")))
-
     # bib_part: wholesale replace per published bib (the reference
     # deletes every published mms_id's edges, then re-inserts; no FK, so
     # delete manifests do NOT cascade here — data_sync_db.sql:363-364)
@@ -270,17 +263,33 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str,
                       "mms_id", "left_anti")
                 .unionByName(parts))
 
-    # stage everything (reads originals), then swap — see _stage_table
-    _stage_table(merged_b, warehouse_dir, "bib_brief")
-    _stage_table(merged_h, warehouse_dir, "holding_brief")
-    _stage_table(merged_i, warehouse_dir, "item")
-    _stage_table(merged_p, warehouse_dir, "bib_part")
+    # stage every merge (reads originals) — see _stage_table
+    staged_b = _stage_table(merged_b, warehouse_dir, "bib_brief")
+    staged_h = _stage_table(merged_h, warehouse_dir, "holding_brief")
+    staged_i = _stage_table(merged_i, warehouse_dir, "item")
+    staged_p = _stage_table(merged_p, warehouse_dir, "bib_part")
+
+    # delete manifests (SRC-6) apply after the upserts, to the staged
+    # rows, cascading holding→item (OP-ST6); persisted, since the final
+    # writes, the history and the counter all read them
+    deletes = persist(P.read_delete_manifests(spark, landing_dir))
+    final_b, hist_bib = U.delete_with_history(
+        staged_b, deletes.select(F.col("mms_id")).where(F.col("mms_id").isNotNull()),
+        "mms_id", "bib")
+    doomed_h = deletes.select("holding_id").where(F.col("holding_id").isNotNull())
+    final_h, final_i, hist_cascade = U.cascade_delete_holdings(
+        staged_h, staged_i, doomed_h)
+
+    history = (hist_h.unionByName(hist_bib).unionByName(hist_cascade)
+               .withColumn("create_date_time",
+                           F.lit(batch_ts).cast("timestamp_ntz")))
     history.write.mode("append").parquet(
         os.path.join(warehouse_dir, "deleted_record"))
     out["errors"].write.mode("append").parquet(
         os.path.join(warehouse_dir, "errors"))
-    for name in ("bib_brief", "holding_brief", "item", "bib_part"):
-        _swap_table(spark, warehouse_dir, name)
+    for name, final in (("bib_brief", final_b), ("holding_brief", final_h),
+                        ("item", final_i), ("bib_part", staged_p)):
+        _swap_table(final, warehouse_dir, name)
 
     counters = metrics.run_counters(out)
     counters["cnt_deletes"] = deletes.count()

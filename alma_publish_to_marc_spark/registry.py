@@ -135,10 +135,7 @@ def _collect() -> dict[str, tuple[QueryFn, str | None]]:
 
     merged: dict[str, tuple[QueryFn, str | None]] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(mod_name)
-        except ModuleNotFoundError:
-            continue  # module not built yet; registry grows as operators land
+        mod = importlib.import_module(mod_name)
         for name, pair in getattr(mod, "QUERIES", {}).items():
             if name in merged:
                 raise ValueError(f"duplicate query name {name!r} in {mod_name}")

@@ -60,11 +60,10 @@ def _file_records(path: str, content: bytes) -> Iterator[dict]:
         yield from marclib.from_marcxml(payload, source_file=path)
 
 
-def parse_upsert_files(files: DataFrame) -> DataFrame:
-    """binaryFile rows → nested records, upsert files only — delete
-    files are routed separately (SRC-6); the `delete` filename test
-    matches the reference's. The same stage serves a batch
-    (`spark.read`) and a streaming (`spark.readStream`) file frame."""
+def read_publish_records(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """SRC-1/2: Alma publish XML (optionally inside .tar.gz) → nested
+    records, upsert files only — delete files are routed separately
+    (SRC-6); the `delete` filename test matches the reference's."""
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -78,15 +77,10 @@ def parse_upsert_files(files: DataFrame) -> DataFrame:
                     rows.append(marclib.new_record(source_file=p))
             yield pd.DataFrame(rows, columns=[f.name for f in PUBLISH_RECORD])
 
-    return (files.select("path", "content")
+    return (spark.read.format("binaryFile").load(path)
+            .select("path", "content")
             .where(~F.col("path").contains("delete"))
             .mapInPandas(parse, PUBLISH_RECORD))
-
-
-def read_publish_records(spark: SparkSession, path: str) -> DataFrame:
-    """SRC-1/2: Alma publish XML (optionally inside .tar.gz) → nested
-    records."""
-    return parse_upsert_files(spark.read.format("binaryFile").load(path))
 
 
 def read_binary_marc(spark: SparkSession, path: str) -> DataFrame:
@@ -108,7 +102,8 @@ def read_binary_marc(spark: SparkSession, path: str) -> DataFrame:
     return files.mapInPandas(parse, PUBLISH_RECORD)
 
 
-def read_delete_manifests(spark: SparkSession, path: str) -> DataFrame:
+def read_delete_manifests(spark: SparkSession,
+                          path: str | list[str]) -> DataFrame:
     """SRC-6 (process_delete_file, alma_publish_parser.py:341-380):
     files with 'delete' in the name; each record deletes its 001 bib and
     at most one 852$8 holding (the reference breaks after the first).

@@ -1,76 +1,70 @@
 """Structured Streaming ingest (SURVEY.md §2.9).
 
 - OP-ST1: the reference drains timestamped `incremental-*` SFTP drops
-  per run; here the landing dir is a streaming file source with
+  per run; here the landing dir is a `binaryFile` stream with
   `trigger(availableNow=True)` — one run drains everything pending,
-  checkpointed so replays are exactly-once.
-- OP-ST5: publish sets are processed in per-batch order inside
-  foreachBatch; deletes in a batch apply after upserts determine the
-  stale set, deterministically, mirroring the reference's
-  delete-on-main-thread ordering.
-- OP-ST3: the timestamp-guarded merge (operators/upsert.merge_upsert)
-  makes replays and out-of-order batches idempotent.
-- OP-ST4: cross-file dedup state is per-batch dropDuplicates + the
-  idempotent merge — replay-safe without a global state store.
-- OP-ST7: webhook-fed event tables (record_update, item_base_status,
-  request_event) use the same readStream → foreachBatch → merge path;
-  the HTTP endpoint itself is out of scope (SURVEY.md §2.9).
+  checkpointed so each file is applied once, including a drop that lands
+  late under an earlier-sorting name. The stream reads only each file's
+  path and modification time; the content column is pruned.
+- OP-ST5: each micro-batch's files are grouped into publish sets by
+  name prefix (SRC-5), and each set is applied by the nightly sync
+  itself, `plans.pipeline.run_publish_pipeline`, one set at a time in
+  name order. Within a set, its delete manifests (SRC-6) apply after
+  its upserts, as in the reference.
+- OP-ST3: a set's `batch_ts` is its latest file modification time, so
+  a replayed batch merges with the same timestamps, and the strict
+  timestamp guard of `operators.upsert.merge_upsert` makes the replay
+  change nothing.
+- OP-ST4: duplicates within a set collapse to the latest per key in
+  the merge; across sets the guarded merge keeps the newest.
 - OP-ST2 (SFTP stability gate) is unnecessary for local/HDFS sources —
   file-source listing is atomic; a driver-side gate stays in front only
   when pulling from SFTP (sources beyond Spark's reach).
 
-The warehouse is a parquet directory per table; `foreachBatch` rewrites
-merged tables (on Delta this becomes MERGE — same plan shape). Batch and
-streaming share every transform: the file parse
-(`sources.publish.parse_upsert_files`), `split_publish` and the merge
-are called identically from both paths, which is what keeps the two
-codepaths semantically equal (tested in tests/test_upsert_streaming.py).
+The stream and the nightly run share one code path, so they write the
+same warehouse from the same sets (tested in
+tests/test_upsert_streaming.py).
 """
 
 from __future__ import annotations
 
 import os
+import re
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.publish_split import split_publish
-from ..sources.publish import parse_upsert_files
-from ..tables import release
-
-
-def stream_publish_records(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """Streaming nested-record source over a landing directory of
-    publish XML files: the batch reader's parse stage over a streaming
-    file frame. The file source remembers every file it has read, so a
-    drop that lands late under an earlier-sorting name is still read."""
-    binary_file_schema = ("path string, modificationTime timestamp, "
-                          "length long, content binary")
-    return parse_upsert_files(spark.readStream.format("binaryFile")
-                              .schema(binary_file_schema)
-                              .load(landing_dir))
+from ..plans.pipeline import run_publish_pipeline
 
 
 def run_incremental_ingest(spark: SparkSession, landing_dir: str,
-                           out_dir: str, checkpoint_dir: str | None = None
-                           ) -> None:
-    """Drain the landing dir once (availableNow) into per-entity parquet
-    under out_dir. Each micro-batch runs the full split; outputs append
-    (the downstream merge dedups by key — replay-safe)."""
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    records = stream_publish_records(spark, landing_dir)
+                           warehouse_dir: str,
+                           checkpoint_dir: str | None = None,
+                           location: DataFrame | None = None) -> None:
+    """Drain the landing dir once (availableNow) into the warehouse,
+    one publish set at a time through `run_publish_pipeline`."""
+    checkpoint_dir = checkpoint_dir or os.path.join(warehouse_dir,
+                                                    "_checkpoint")
+    files = (spark.readStream.format("binaryFile")
+             .schema("path string, modificationTime timestamp, "
+                     "length long, content binary")
+             .load(landing_dir)
+             .select("path", "modificationTime"))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            out = split_publish(batch_df)
-            for name in ("bibs", "holdings", "items", "errors"):
-                out[name].write.mode("append").parquet(
-                    os.path.join(out_dir, name))
-        finally:
-            release()  # the micro-batch's persisted split rows
+    def apply_sets(batch_df: DataFrame, batch_id: int) -> None:
+        sets = defaultdict(list)
+        for path, mtime in batch_df.collect():
+            # file_prefix (alma_publish_parser.py:310-312)
+            prefix = re.sub(r"_[a-z]+_\d+\.[^/]*$", "", path)
+            sets[prefix].append((path, mtime))
+        for prefix in sorted(sets):
+            paths, mtimes = zip(*sets[prefix])
+            run_publish_pipeline(spark, list(paths), warehouse_dir,
+                                 max(mtimes), location)
 
-    (records.writeStream
-     .foreachBatch(process)
+    (files.writeStream
+     .foreachBatch(apply_sets)
      .option("checkpointLocation", checkpoint_dir)
      .trigger(availableNow=True)
      .start()

@@ -1,8 +1,14 @@
 """Hand-built publish-record fixtures exercising the split semantics
 (FIXTURES.md §1): dual-009 and leader-only control groups, relocated
-fields, ITM items, cross-file duplicates, and invariant violations."""
+fields, ITM items, cross-file duplicates, and invariant violations —
+and a writer that lands records as a tar.gz publish file."""
 
 from __future__ import annotations
+
+import io
+import tarfile
+
+from alma_publish_to_marc_spark.sources import marclib
 
 
 def cf(tag, data):
@@ -104,3 +110,19 @@ BAD_LEADER_RECORD = {
 }
 
 ALL_RECORDS = [GOOD_RECORD, DUP_RECORD, MISMATCH_RECORD, BAD_LEADER_RECORD]
+
+
+def write_drop(dirpath, records, name="incremental-1_new_1.tar.gz"):
+    """One tar.gz publish file `name` under `dirpath` holding `records`."""
+    collection = ('<collection xmlns="http://www.loc.gov/MARC21/slim">'
+                  + "".join(marclib.to_marcxml(
+                      {k: r[k] for k in ("mms_id", "leader",
+                                         "control_fields", "fields")},
+                      namespace=False) for r in records)
+                  + "</collection>").encode()
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w:gz") as tar:
+        info = tarfile.TarInfo("p.xml")
+        info.size = len(collection)
+        tar.addfile(info, io.BytesIO(collection))
+    (dirpath / name).write_bytes(buf.getvalue())

@@ -6,8 +6,6 @@ anti-join, cascade history."""
 from __future__ import annotations
 
 import copy
-import io
-import tarfile
 from datetime import datetime
 
 import pytest
@@ -17,22 +15,7 @@ from alma_publish_to_marc_spark.plans import pipeline as PL
 from alma_publish_to_marc_spark.sources import marclib
 
 from .conftest import persisted_rdd_ids
-from .fixtures_publish import GOOD_RECORD, HID_A, HID_B
-
-
-def _write_drop(dirpath, records, name="incremental-1_new_1.tar.gz"):
-    collection = ('<collection xmlns="http://www.loc.gov/MARC21/slim">'
-                  + "".join(marclib.to_marcxml(
-                      {k: r[k] for k in ("mms_id", "leader",
-                                         "control_fields", "fields")},
-                      namespace=False) for r in records)
-                  + "</collection>").encode()
-    buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode="w:gz") as tar:
-        info = tarfile.TarInfo("p.xml")
-        info.size = len(collection)
-        tar.addfile(info, io.BytesIO(collection))
-    (dirpath / name).write_bytes(buf.getvalue())
+from .fixtures_publish import GOOD_RECORD, HID_A, HID_B, write_drop
 
 
 @pytest.fixture()
@@ -49,7 +32,7 @@ def test_two_run_lifecycle(spark, tmp_path, location_dim):
     # --- run 1: initial load -------------------------------------------
     run1 = tmp_path / "run1"
     run1.mkdir()
-    _write_drop(run1, [GOOD_RECORD])
+    write_drop(run1, [GOOD_RECORD])
     c1 = PL.run_publish_pipeline(spark, str(run1) + "/*", wh,
                                  datetime(2024, 6, 1), location_dim)
     assert c1["cnt_bibs"] == 1 and c1["cnt_holdings"] == 2
@@ -87,7 +70,7 @@ def test_two_run_lifecycle(spark, tmp_path, location_dim):
 
     run2 = tmp_path / "run2"
     run2.mkdir()
-    _write_drop(run2, [rec2], name="incremental-2_new_1.tar.gz")
+    write_drop(run2, [rec2], name="incremental-2_new_1.tar.gz")
     # delete manifest for an unrelated bib
     del_rec = marclib.new_record(mms_id="9977778651")
     del_rec["control_fields"] = [{"tag": "001", "data": "9977778651"}]
@@ -129,7 +112,7 @@ def test_bib_parts_replaced_per_published_bib(spark, tmp_path, location_dim):
     wh = str(tmp_path / "wh")
     run1 = tmp_path / "run1"
     run1.mkdir()
-    _write_drop(run1, [GOOD_RECORD])
+    write_drop(run1, [GOOD_RECORD])
     PL.run_publish_pipeline(spark, str(run1) + "/*", wh,
                             datetime(2024, 7, 5), location_dim)
     got = {(r["mms_id"], r["part_mms_id"]) for r in
@@ -147,7 +130,7 @@ def test_bib_parts_replaced_per_published_bib(spark, tmp_path, location_dim):
                        for f in GOOD_RECORD["fields"]]}
     run2 = tmp_path / "run2"
     run2.mkdir()
-    _write_drop(run2, [rec2], name="incremental-2_new_1.tar.gz")
+    write_drop(run2, [rec2], name="incremental-2_new_1.tar.gz")
     PL.run_publish_pipeline(spark, str(run2) + "/*", wh,
                             datetime(2024, 7, 6), location_dim)
     got2 = {(r["mms_id"], r["part_mms_id"]) for r in
@@ -163,20 +146,20 @@ def test_publish_run_and_ingest_release_their_persists(spark, tmp_path,
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    _write_drop(landing, [GOOD_RECORD])
+    write_drop(landing, [GOOD_RECORD])
     before = persisted_rdd_ids(spark)
     PL.run_publish_pipeline(spark, str(landing) + "/*", str(tmp_path / "wh"),
                             datetime(2024, 6, 1), location_dim)
     assert not persisted_rdd_ids(spark) - before
     ingest.run_incremental_ingest(spark, str(landing), str(tmp_path / "out"))
-    assert spark.read.parquet(str(tmp_path / "out" / "bibs")).count() == 1
+    assert spark.read.parquet(str(tmp_path / "out" / "bib_brief")).count() == 1
     assert not persisted_rdd_ids(spark) - before
 
 
 def test_list_ids(spark, tmp_path):
     run1 = tmp_path / "drop"
     run1.mkdir()
-    _write_drop(run1, [GOOD_RECORD])
+    write_drop(run1, [GOOD_RECORD])
     ids = PL.list_record_ids(spark, str(run1) + "/*").collect()
     assert ids[0]["mms_id"] == GOOD_RECORD["mms_id"]
 
@@ -242,7 +225,7 @@ def test_pipeline_upgrades_old_warehouse_schema(spark, tmp_path, location_dim):
     wh = str(tmp_path / "wh")
     run1 = tmp_path / "run1"
     run1.mkdir()
-    _write_drop(run1, [GOOD_RECORD])
+    write_drop(run1, [GOOD_RECORD])
     PL.run_publish_pipeline(spark, str(run1) + "/*", wh,
                             dt(2024, 6, 1), location_dim)
 
@@ -255,9 +238,32 @@ def test_pipeline_upgrades_old_warehouse_schema(spark, tmp_path, location_dim):
 
     run2 = tmp_path / "run2"
     run2.mkdir()
-    _write_drop(run2, [GOOD_RECORD])
+    write_drop(run2, [GOOD_RECORD])
     PL.run_publish_pipeline(spark, str(run2) + "/*", wh,
                             dt(2024, 6, 2), location_dim)
     rows = spark.read.parquet(wh + "/holding_brief").collect()
     assert rows
     assert "voyager_holding_id" in rows[0].asDict()
+
+
+def test_unreadable_table_fails_the_run(spark, tmp_path, location_dim):
+    """Only a table not written yet reads as empty: a table that exists
+    but cannot be read must fail the run and be left as it was, not be
+    overwritten with the drop's rows alone."""
+    wh = tmp_path / "wh"
+    run1 = tmp_path / "run1"
+    run1.mkdir()
+    write_drop(run1, [GOOD_RECORD])
+    PL.run_publish_pipeline(spark, str(run1) + "/*", str(wh),
+                            datetime(2024, 6, 1), location_dim)
+
+    table = wh / "holding_brief"
+    for f in table.iterdir():
+        f.unlink()
+    (table / "part-00000.parquet").write_bytes(b"not a parquet file")
+    before = {f.name: f.read_bytes() for f in table.iterdir()}
+    with pytest.raises(Exception):
+        PL.run_publish_pipeline(spark, str(run1) + "/*", str(wh),
+                                datetime(2024, 6, 2), location_dim)
+    assert {f.name: f.read_bytes() for f in table.iterdir()} == before
+

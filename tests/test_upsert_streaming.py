@@ -1,10 +1,11 @@
 """Write-path + streaming tests: merge semantics on hand-built frames,
-streaming availableNow ingest ≡ batch ingest, analytics TSV pipeline."""
+streaming availableNow ingest ≡ the batch publish run applied set by
+set, analytics TSV pipeline."""
 
 from __future__ import annotations
 
-import io
-import tarfile
+import copy
+import os
 from datetime import datetime
 
 import pytest
@@ -12,10 +13,11 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from alma_publish_to_marc_spark.operators import upsert as U
+from alma_publish_to_marc_spark.plans import pipeline as PL
 from alma_publish_to_marc_spark.sources import marclib
 from alma_publish_to_marc_spark.streaming import ingest
 
-from .fixtures_publish import GOOD_RECORD
+from .fixtures_publish import GOOD_RECORD, HID_A, HID_B, write_drop
 
 
 def ts(s):
@@ -98,47 +100,129 @@ def test_stale_holdings_anti_join(spark):
     assert [r["holding_id"] for r in stale.collect()] == ["h2"]
 
 
-def _land_drop(landing, name, mms_id):
-    """One tar.gz upsert drop holding GOOD_RECORD under `mms_id`."""
-    rec = {k: GOOD_RECORD[k]
-           for k in ("mms_id", "leader", "control_fields", "fields")}
+def _publish_file(path, records, mtime):
+    """A tar.gz publish file holding `records`, modified at `mtime`."""
+    write_drop(path.parent, records, path.name)
+    os.utime(path, (mtime, mtime))
+
+
+def _manifest(path, deletes, mtime):
+    """A delete manifest: one record per (mms_id, holding_id or None)."""
+    recs = []
+    for mms_id, holding_id in deletes:
+        rec = marclib.new_record(mms_id=mms_id)
+        rec["control_fields"] = [{"tag": "001", "data": mms_id}]
+        if holding_id:
+            rec["fields"] = [{"tag": "852", "ind1": " ", "ind2": " ",
+                              "subfields": [{"code": "8",
+                                             "value": holding_id}]}]
+        recs.append(marclib.to_marcxml(rec, namespace=False))
+    path.write_bytes(('<collection xmlns="http://www.loc.gov/MARC21/slim">'
+                      + "".join(recs) + "</collection>").encode())
+    os.utime(path, (mtime, mtime))
+
+
+def _bare_bib(mms_id, part):
+    """A bib with no holdings and one 774 constituent edge."""
+    rec = copy.deepcopy(GOOD_RECORD)
     rec["mms_id"] = mms_id
-    rec["control_fields"] = [
-        {"tag": "001", "data": mms_id} if c["tag"] == "001" else c
-        for c in rec["control_fields"]]
-    collection = ('<collection xmlns="http://www.loc.gov/MARC21/slim">'
-                  + marclib.to_marcxml(rec, namespace=False)
-                  + "</collection>").encode()
-    buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode="w:gz") as tar:
-        info = tarfile.TarInfo("p.xml")
-        info.size = len(collection)
-        tar.addfile(info, io.BytesIO(collection))
-    (landing / name).write_bytes(buf.getvalue())
+    rec["control_fields"] = [{"tag": "001", "data": mms_id}]
+    rec["fields"] = [
+        f if f["tag"] != "774" else
+        {**f, "subfields": [{"code": "w", "value": part}]}
+        for f in rec["fields"] if f["tag"] in ("245", "BIB", "774")]
+    return rec
+
+
+def _newer_good_record():
+    """GOOD_RECORD republished with a newer update date."""
+    rec = copy.deepcopy(GOOD_RECORD)
+    for f in rec["fields"]:
+        if f["tag"] == "BIB":
+            f["subfields"][2]["value"] = "2024-07-05 11:00:00 US/Eastern"
+    return rec
+
+
+def _snapshot(spark, wh):
+    """Keys and versions of the merged tables, bib_part edges and the
+    history rows."""
+    def rows(name, *cols):
+        return sorted(tuple(r) for r in
+                      spark.read.parquet(f"{wh}/{name}").select(*cols)
+                      .collect())
+    return {
+        "bib_brief": rows("bib_brief", "mms_id", "version",
+                          "update_date_time"),
+        "holding_brief": rows("holding_brief", "holding_id", "version"),
+        "item": rows("item", "pid", "version"),
+        "bib_part": rows("bib_part", "mms_id", "part_mms_id"),
+        "deleted_record": rows("deleted_record", "record_type", "mms_id",
+                               "record_id", "create_date_time"),
+    }
 
 
 def test_streaming_ingest_equals_batch(spark, tmp_path):
+    # three drains: a drop; a later drop under an earlier-sorting name
+    # (the first bib republished, newer, plus a new bib); then a delete
+    # manifest (the new bib, and holding B with its item)
+    drops = tmp_path / "drops"
+    drops.mkdir()
+    names = ["incremental-1_new_1.tar.gz", "incremental-0_new_1.tar.gz",
+             "incremental-2_delete_1.xml"]
+    t0 = 1_700_000_000
+    _publish_file(drops / names[0], [GOOD_RECORD], t0)
+    _publish_file(drops / names[1], [_newer_good_record(),
+                                      _bare_bib("9940008651", "9950008651")],
+                  t0 + 100)
+    # (a holding's delete record carries the holding id in its 001)
+    _manifest(drops / names[2], [("9940008651", None), (HID_B, HID_B)],
+              t0 + 200)
+
     landing = tmp_path / "landing"
     landing.mkdir()
-    _land_drop(landing, "incremental-1_new_1.tar.gz", GOOD_RECORD["mms_id"])
+    wh = str(tmp_path / "warehouse")
+    for name in names:
+        os.replace(drops / name, landing / name)
+        ingest.run_incremental_ingest(spark, str(landing), wh)
+    streamed = _snapshot(spark, wh)
 
-    out = tmp_path / "warehouse"
-    ingest.run_incremental_ingest(spark, str(landing), str(out))
-    bibs = spark.read.parquet(str(out / "bibs"))
-    items = spark.read.parquet(str(out / "items"))
-    assert bibs.count() == 1
-    assert items.count() == 3
-    # a drop that lands late under an earlier-sorting name is still read,
-    # and only its records are added (same checkpoint: no replays)
-    _land_drop(landing, "incremental-0_new_1.tar.gz", "9940008651")
-    ingest.run_incremental_ingest(spark, str(landing), str(out))
-    bibs = spark.read.parquet(str(out / "bibs")).collect()
-    assert sorted(r["mms_id"] for r in bibs) == ["9910008651", "9940008651"]
-    src = {r["mms_id"]: r["source_file"] for r in bibs}
-    assert src["9940008651"].endswith("incremental-0_new_1.tar.gz")
-    items = spark.read.parquet(str(out / "items")).collect()
-    assert sorted(r["mms_id"] for r in items) == (
-        ["9910008651"] * 3 + ["9940008651"] * 3)
+    batch_wh = str(tmp_path / "batch")
+    for i, name in enumerate(names):
+        PL.run_publish_pipeline(spark, str(landing / name), batch_wh,
+                                datetime.fromtimestamp(t0 + 100 * i))
+    assert streamed == _snapshot(spark, batch_wh)
+
+    assert [r[:2] for r in streamed["bib_brief"]] == [("9910008651", 2)]
+    assert [r[0] for r in streamed["holding_brief"]] == [HID_A]
+    assert "23111138651" not in {r[0] for r in streamed["item"]}
+    assert streamed["bib_part"] == [("9910008651", "9920008651"),
+                                    ("9940008651", "9950008651")]
+    assert sorted(r[:3] for r in streamed["deleted_record"]) == [
+        ("bib", "9940008651", "9940008651"),
+        ("holding", "9910008651", HID_B),
+        ("item", "9910008651", "23111138651")]
+
+    # a second drain on the same checkpoint changes nothing
+    ingest.run_incremental_ingest(spark, str(landing), wh)
+    assert _snapshot(spark, wh) == streamed
+
+
+def test_stream_applies_sets_in_name_order(spark, tmp_path):
+    # one micro-batch, two publish sets: set 1's manifest deletes X and
+    # set 2 republishes X, so X must be present afterwards
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    x = _bare_bib("9940008651", "9950008651")
+    _publish_file(landing / "incremental-1_new_1.tar.gz", [x], 1_700_000_000)
+    _manifest(landing / "incremental-1_delete_1.xml", [(x["mms_id"], None)],
+              1_700_000_000)
+    _publish_file(landing / "incremental-2_new_1.tar.gz", [x], 1_700_000_100)
+    wh = str(tmp_path / "warehouse")
+    ingest.run_incremental_ingest(spark, str(landing), wh)
+    got = _snapshot(spark, wh)
+    assert [r[:2] for r in got["bib_brief"]] == [(x["mms_id"], 1)]
+    assert [r[:3] for r in got["deleted_record"]] == [
+        ("bib", x["mms_id"], x["mms_id"])]
 
 
 def test_analytics_tsv_pipeline(spark, tmp_path):
