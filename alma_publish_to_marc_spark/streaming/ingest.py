@@ -7,10 +7,13 @@
   late under an earlier-sorting name. The stream reads only each file's
   path and modification time; the content column is pruned.
 - OP-ST5: each micro-batch's files are grouped into publish sets by
-  name prefix (SRC-5), and each set is applied by the nightly sync
-  itself, `plans.pipeline.run_publish_pipeline`, one set at a time in
-  name order. Within a set, its delete manifests (SRC-6) apply after
-  its upserts, as in the reference.
+  name prefix with the reference's `file_prefix` rule (SRC-5,
+  `sources.source_queries.publish_set_prefix`: strip `_<kind>_<n>.tar.gz`,
+  then `_<kind>.tar.gz`; any other file is a set of its own). Each set
+  is applied by the nightly sync itself,
+  `plans.pipeline.run_publish_pipeline`, one set at a time in name
+  order. Within a set, its delete manifests (SRC-6) apply after its
+  upserts, as in the reference.
 - OP-ST3: a set's `batch_ts` is its latest file modification time, so
   a replayed batch merges with the same timestamps, and the strict
   timestamp guard of `operators.upsert.merge_upsert` makes the replay
@@ -29,13 +32,13 @@ tests/test_upsert_streaming.py).
 from __future__ import annotations
 
 import os
-import re
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import run_publish_pipeline
+from ..sources.source_queries import publish_set_prefix
 
 
 def run_incremental_ingest(spark: SparkSession, landing_dir: str,
@@ -50,13 +53,12 @@ def run_incremental_ingest(spark: SparkSession, landing_dir: str,
              .schema("path string, modificationTime timestamp, "
                      "length long, content binary")
              .load(landing_dir)
-             .select("path", "modificationTime"))
+             .select(publish_set_prefix(F.col("path")), "path",
+                     "modificationTime"))
 
     def apply_sets(batch_df: DataFrame, batch_id: int) -> None:
         sets = defaultdict(list)
-        for path, mtime in batch_df.collect():
-            # file_prefix (alma_publish_parser.py:310-312)
-            prefix = re.sub(r"_[a-z]+_\d+\.[^/]*$", "", path)
+        for prefix, path, mtime in batch_df.collect():
             sets[prefix].append((path, mtime))
         for prefix in sorted(sets):
             paths, mtimes = zip(*sets[prefix])

@@ -9,6 +9,7 @@ import copy
 from datetime import datetime
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Row
 
 from alma_publish_to_marc_spark.plans import pipeline as PL
@@ -262,7 +263,8 @@ def test_unreadable_table_fails_the_run(spark, tmp_path, location_dim):
         f.unlink()
     (table / "part-00000.parquet").write_bytes(b"not a parquet file")
     before = {f.name: f.read_bytes() for f in table.iterdir()}
-    with pytest.raises(Exception):
+    with pytest.raises(Py4JJavaError, match=r"CANNOT_READ_FILE_FOOTER\] "
+                       r".*/holding_brief/part-00000\.parquet"):
         PL.run_publish_pipeline(spark, str(run1) + "/*", str(wh),
                                 datetime(2024, 6, 2), location_dim)
     assert {f.name: f.read_bytes() for f in table.iterdir()} == before

@@ -107,7 +107,8 @@ def _publish_file(path, records, mtime):
 
 
 def _manifest(path, deletes, mtime):
-    """A delete manifest: one record per (mms_id, holding_id or None)."""
+    """A tar.gz delete manifest: one record per (mms_id, holding_id or
+    None)."""
     recs = []
     for mms_id, holding_id in deletes:
         rec = marclib.new_record(mms_id=mms_id)
@@ -116,10 +117,8 @@ def _manifest(path, deletes, mtime):
             rec["fields"] = [{"tag": "852", "ind1": " ", "ind2": " ",
                               "subfields": [{"code": "8",
                                              "value": holding_id}]}]
-        recs.append(marclib.to_marcxml(rec, namespace=False))
-    path.write_bytes(('<collection xmlns="http://www.loc.gov/MARC21/slim">'
-                      + "".join(recs) + "</collection>").encode())
-    os.utime(path, (mtime, mtime))
+        recs.append(rec)
+    _publish_file(path, recs, mtime)
 
 
 def _bare_bib(mms_id, part):
@@ -168,7 +167,7 @@ def test_streaming_ingest_equals_batch(spark, tmp_path):
     drops = tmp_path / "drops"
     drops.mkdir()
     names = ["incremental-1_new_1.tar.gz", "incremental-0_new_1.tar.gz",
-             "incremental-2_delete_1.xml"]
+             "incremental-2_delete_1.tar.gz"]
     t0 = 1_700_000_000
     _publish_file(drops / names[0], [GOOD_RECORD], t0)
     _publish_file(drops / names[1], [_newer_good_record(),
@@ -208,21 +207,36 @@ def test_streaming_ingest_equals_batch(spark, tmp_path):
 
 
 def test_stream_applies_sets_in_name_order(spark, tmp_path):
-    # one micro-batch, two publish sets: set 1's manifest deletes X and
-    # set 2 republishes X, so X must be present afterwards
+    # one micro-batch, three publish sets: set 1's manifest deletes X and
+    # set 2 republishes X, so X must be present afterwards; set 3 has no
+    # sequence numbers (`_new.tar.gz`, `_delete.tar.gz`) and its manifest
+    # deletes the bib Y it also publishes, so Y must be gone
     landing = tmp_path / "landing"
     landing.mkdir()
     x = _bare_bib("9940008651", "9950008651")
-    _publish_file(landing / "incremental-1_new_1.tar.gz", [x], 1_700_000_000)
-    _manifest(landing / "incremental-1_delete_1.xml", [(x["mms_id"], None)],
-              1_700_000_000)
-    _publish_file(landing / "incremental-2_new_1.tar.gz", [x], 1_700_000_100)
+    y = _bare_bib("9960008651", "9970008651")
+    t0 = 1_700_000_000
+    sets = [["incremental-1_new_1.tar.gz", "incremental-1_delete_1.tar.gz"],
+            ["incremental-2_new_1.tar.gz"],
+            ["incremental-3_new.tar.gz", "incremental-3_delete.tar.gz"]]
+    _publish_file(landing / sets[0][0], [x], t0)
+    _manifest(landing / sets[0][1], [(x["mms_id"], None)], t0)
+    _publish_file(landing / sets[1][0], [x], t0 + 100)
+    _publish_file(landing / sets[2][0], [y], t0 + 200)
+    _manifest(landing / sets[2][1], [(y["mms_id"], None)], t0 + 200)
     wh = str(tmp_path / "warehouse")
     ingest.run_incremental_ingest(spark, str(landing), wh)
     got = _snapshot(spark, wh)
+
+    batch_wh = str(tmp_path / "batch")
+    for i, names in enumerate(sets):
+        PL.run_publish_pipeline(spark, [str(landing / n) for n in names],
+                                batch_wh, datetime.fromtimestamp(t0 + 100 * i))
+    assert got == _snapshot(spark, batch_wh)
+
     assert [r[:2] for r in got["bib_brief"]] == [(x["mms_id"], 1)]
     assert [r[:3] for r in got["deleted_record"]] == [
-        ("bib", x["mms_id"], x["mms_id"])]
+        ("bib", x["mms_id"], x["mms_id"]), ("bib", y["mms_id"], y["mms_id"])]
 
 
 def test_analytics_tsv_pipeline(spark, tmp_path):
