@@ -34,7 +34,7 @@ AUDIT = ("create_date_time", "update_date_time", "version")
 
 
 def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
-                 ts_col: str, tiebreak: Sequence[str] = ()) -> DataFrame:
+                 ts_col: str) -> DataFrame:
     """Batch MERGE: returns the post-merge table.
 
     - new keys insert with version=1, create=update=incoming ts
@@ -42,7 +42,7 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
       temporal guard) — version increments, create_date_time is preserved
     - unmatched stored rows pass through
     """
-    incoming = latest_per_key(incoming, keys, ts_col, tiebreak)
+    incoming = latest_per_key(incoming, keys, ts_col)
     value_cols = [c for c in incoming.columns if c not in keys]
 
     s = stored
@@ -82,11 +82,10 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
 
 
 def insert_ignore(stored: DataFrame, incoming: DataFrame,
-                  keys: Sequence[str], ts_col: str,
-                  tiebreak: Sequence[str] = ()) -> DataFrame:
+                  keys: Sequence[str], ts_col: str) -> DataFrame:
     """SRC-11 `no_updates` variant (ON CONFLICT DO NOTHING,
     database_insert.py:26-46): existing keys keep their rows."""
-    incoming = latest_per_key(incoming, keys, ts_col, tiebreak)
+    incoming = latest_per_key(incoming, keys, ts_col)
     fresh = incoming.join(stored.select(*keys), on=list(keys), how="left_anti")
     fresh = (fresh
              .withColumn("create_date_time", F.col(ts_col))

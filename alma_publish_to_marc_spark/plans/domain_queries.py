@@ -23,15 +23,13 @@ _LEADER = "00000nx  a22000001n 4500"
 
 def _synth_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out the NARROW driving scan (c_custkey, c_name — a few bytes
-    # per row) instead of letting publish_split_fast.split_rows
-    # round-robin the SYNTHESIZED frame: the nested control_fields/
+    # per row), not the SYNTHESIZED frame: the nested control_fields/
     # fields payload (every holding + item struct) is orders of
-    # magnitude wider, and repartitioning it also serialized the
-    # synthesis projection into the scan's single task on one-file
-    # inputs. With the exchange moved below the broadcast join, the
-    # payload is built in parallel and never reshuffled (split_rows'
-    # parallelism guard sees >= defaultParallelism and stays out).
-    # At scale this is the usual fan_out no-op (guide §2.3/§2.5).
+    # magnitude wider, and a one-task scan would also serialize the
+    # synthesis projection. With the exchange below the broadcast join,
+    # the payload is built in parallel and reaches split_rows' Arrow
+    # stage without a reshuffle. At scale this is the usual fan_out
+    # no-op.
     customer = fan_out(load(spark, sf_dir, "customer"), "c_custkey")
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")

@@ -2,10 +2,10 @@
 the reference's `alma_publish_to_database.main()` (SURVEY.md §3.1),
 as one composed DataFrame program:
 
-read files → split (1→3 entities + errors) → extract briefs → serialize
-MARC payloads → location broadcast lookup → versioned temporal merge
-into the parquet warehouse → publish-driven anti-join deletes + delete
-manifests, with CDC history → run counters.
+parse and split files in one stage (1→3 entities + errors) → extract
+briefs → serialize MARC payloads → location broadcast lookup →
+versioned temporal merge into the parquet warehouse → publish-driven
+anti-join deletes + delete manifests, with CDC history → run counters.
 
 The reference's thread pool, per-thread connections, and per-bib commits
 all disappear: file parallelism is split scheduling, connections are
@@ -18,7 +18,6 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,7 +28,7 @@ from ..functions.scalars import (format_number_dashes, format_oclc,
 from ..operators import upsert as U
 from ..sources import publish as P
 from ..tables import persist, release
-from .publish_split import split_publish
+from .publish_split_fast import file_split_rows, split_outputs
 
 WAREHOUSE_TABLES = ("bib_brief", "holding_brief", "item", "bib_part",
                     "deleted_record", "errors")
@@ -152,14 +151,12 @@ def extract_bib_parts(bibs: DataFrame) -> DataFrame:
 def _read_table(spark: SparkSession, warehouse_dir: str, name: str,
                 template: DataFrame) -> DataFrame:
     path = os.path.join(warehouse_dir, name)
-    try:
-        stored = spark.read.parquet(path)
-    except AnalysisException as e:
-        # only a table not written yet reads as empty: an unreadable one
-        # must fail the run, not be overwritten with the drop's rows alone
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    # only a table not written yet reads as empty: an unreadable one
+    # must fail the run, not be overwritten with the drop's rows alone
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return template.limit(0)
+    stored = spark.read.parquet(path)
     # Schema evolution: a warehouse written by an older engine version
     # may lack columns added since (e.g. holding_brief gained
     # voyager_holding_id), carry a column whose type was since widened,
@@ -203,7 +200,7 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
     publish set's files). Returns the run counters (OP-A1)."""
     from .. import metrics
 
-    out = split_publish(P.read_publish_records(spark, landing_dir))
+    out = split_outputs(file_split_rows(spark, landing_dir))
 
     bibs = extract_bib_brief(out["bibs"], batch_ts)
     holdings = extract_holding_brief(out["holdings"], location, batch_ts)
@@ -216,20 +213,19 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
             "_ts", F.coalesce(F.col("system_update_date_time"),
                               F.col("batch_ts"))).drop("batch_ts")
 
-    stored_b = _read_table(spark, warehouse_dir, "bib_brief",
-                           ts_col(bibs).withColumn("create_date_time", F.col("_ts"))
-                           .withColumn("update_date_time", F.col("_ts"))
-                           .withColumn("version", F.lit(1).cast("long")))
+    def read_stored(name: str, incoming: DataFrame) -> DataFrame:
+        """The stored table, typed as `incoming` plus audit columns."""
+        ts = F.col("_ts")
+        template = ts_col(incoming).withColumns(
+            {"create_date_time": ts, "update_date_time": ts,
+             "version": F.lit(1).cast("long")})
+        return _read_table(spark, warehouse_dir, name, template)
+
+    stored_b = read_stored("bib_brief", bibs)
     merged_b = U.merge_upsert(stored_b, ts_col(bibs), ["mms_id"], "_ts")
 
-    stored_h = _read_table(spark, warehouse_dir, "holding_brief",
-                           ts_col(holdings).withColumn("create_date_time", F.col("_ts"))
-                           .withColumn("update_date_time", F.col("_ts"))
-                           .withColumn("version", F.lit(1).cast("long")))
-    stored_i = _read_table(spark, warehouse_dir, "item",
-                           ts_col(items).withColumn("create_date_time", F.col("_ts"))
-                           .withColumn("update_date_time", F.col("_ts"))
-                           .withColumn("version", F.lit(1).cast("long")))
+    stored_h = read_stored("holding_brief", holdings)
+    stored_i = read_stored("item", items)
 
     # publish-driven stale-holding deletes (OP-J2) BEFORE the merge,
     # cascading to the stale holdings' items (the reference's FK

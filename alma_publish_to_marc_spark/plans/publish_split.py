@@ -227,9 +227,9 @@ def split_publish(records: DataFrame) -> dict[str, DataFrame]:
     HOF expression program below. The expression implementation
     (`split_publish_catalyst`) remains the executable specification and
     is pinned equivalent in tests/test_publish_split_equivalence.py."""
-    from .publish_split_fast import split_publish_fast
+    from .publish_split_fast import split_outputs, split_rows
 
-    return split_publish_fast(records)
+    return split_outputs(split_rows(records))
 
 
 def split_publish_catalyst(records: DataFrame) -> dict[str, DataFrame]:

@@ -7,12 +7,15 @@ evaluates higher-order functions interpreted (CodegenFallback), and the
 split's per-record program is deep enough that expression interpretation
 dominates (~100 ms core-time per record at sf0.1 — slower per core than
 the reference's imperative loop). This module runs the SAME semantics as
-plain Python over Arrow batches inside one mapInPandas pass: ~50 µs per
-record, no shuffle, embarrassingly parallel — the strategy SURVEY.md §7
-("hard parts" #1) prescribes.
+plain Python over Arrow batches: ~50 µs per record, no shuffle,
+embarrassingly parallel — the strategy SURVEY.md §7 ("hard parts" #1)
+prescribes. The publish sync splits each file in the stage that parses
+it (`file_split_rows`, the reference's parse_file → handle_record loop);
+`split_rows` splits a nested-record frame, e.g. the records the
+publish_split_* queries synthesize in Spark.
 
-tests/test_publish_split_equivalence.py pins the two implementations to
-byte-identical outputs on the fixture corpus; the DuckDB oracles for the
+tests/test_publish_split_equivalence.py pins both to the Catalyst spec's
+outputs on the fixture corpus; the DuckDB oracles for the
 publish_split_* driver queries check this path at sf scale.
 """
 
@@ -20,14 +23,15 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, StringType, StructField, StructType)
 
 from ..functions.scalars import is_institution_holding_id_py
-from ..schemas import (CONTROL_FIELD, DATA_FIELD, ITEM_STRUCT, PUBLISH_RECORD)
-from ..sources.publish import _iter
-from ..tables import fan_out, persist
+from ..schemas import CONTROL_FIELD, DATA_FIELD, ITEM_STRUCT
+from ..sources.publish import (_hid_of, _iter, file_records_or_error,
+                               map_files, publish_files)
+from ..tables import persist
 
 _BIB_T = StructType([
     StructField("mms_id", StringType()),
@@ -50,13 +54,6 @@ SPLIT_ROW = StructType([
     StructField("items", ArrayType(ITEM_STRUCT)),
     StructField("error", StringType()),
 ])
-
-
-def _hid_of(field: dict, code: str = "8") -> str | None:
-    for s in _iter(field.get("subfields")):
-        if s["code"] == code and is_institution_holding_id_py(s["value"]):
-            return s["value"]
-    return None
 
 
 def _control_groups(cf: list[dict]) -> tuple[list[list[dict]], set[int]]:
@@ -213,11 +210,6 @@ def split_rows(records: DataFrame) -> DataFrame:
     iterrows + per-field dict rebuilding."""
     import pandas as pd
 
-    # AQE coalesces by byte estimate and routinely lands nested-record
-    # frames on ONE partition, serializing this Python stage (measured
-    # 60 s → 3 s at sf0.1 after spreading).
-    records = fan_out(records)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in SPLIT_ROW]
         for pdf in batches:
@@ -227,9 +219,20 @@ def split_rows(records: DataFrame) -> DataFrame:
     return records.mapInPandas(run, SPLIT_ROW)
 
 
-def split_publish_fast(records: DataFrame) -> dict[str, DataFrame]:
-    """Drop-in equivalent of publish_split.split_publish."""
-    rows = persist(split_rows(records))
+def file_split_rows(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """A drop's upsert files → SPLIT_ROW frame in one Arrow stage: each
+    file is parsed and its records split in the task that reads it, so
+    the nested records never cross to the JVM and back."""
+    return map_files(
+        publish_files(spark, path),
+        lambda p, c: [split_record(r) for r in file_records_or_error(p, c)],
+        SPLIT_ROW)
+
+
+def split_outputs(rows: DataFrame) -> dict[str, DataFrame]:
+    """SPLIT_ROW frame → {bibs, holdings, items, errors, records}, the
+    outputs of publish_split.split_publish."""
+    rows = persist(rows)
     ok = rows.where(F.col("error").isNull())
     bibs = (ok.select(F.col("bib.*"), F.col("source_file"))
             .dropDuplicates(["mms_id"]))

@@ -9,8 +9,9 @@ Why a DataSource: the other sinks are column serializers
 is a concatenated-record file format with no Spark writer. The
 DataSource gives it the usual file-sink protocol: per-task part files,
 a driver-side ``_SUCCESS`` commit and abort cleanup. There is no read
-side; publish drops are read by ``publish.read_publish_records``, which
-the streaming drain reaches through the batch publish run.
+side; publish drops are read by the per-file readers in ``publish``
+(the publish run, which the streaming drain also runs, parses and splits
+them in one stage).
 
 Scale: each task serializes its own partition on an executor; the
 driver only collects (path, count) commit messages. No shuffle.

@@ -1,12 +1,14 @@
 """Publish-file sources and sinks (SURVEY.md §2.1).
 
 - SRC-1/2/3: MARC XML / tar.gz / binary MARC scan → nested-record
-  DataFrame. `binaryFile` gives one row per file; an Arrow-batched
-  mapInPandas stage untars/parses per file. File-level parallelism is
-  Spark's split scheduling (the reference's ThreadPool, SRC-4/5's
-  ordering via deterministic path sort).
-- SRC-6: delete-manifest routing by filename (`'delete' in name`,
-  alma_publish_parser.py:291-292) → (mms_id, holding_id) delete rows.
+  DataFrame. `binaryFile` gives one row per file; `map_files`, the one
+  mapper behind every publish reader (and the sync's parse-and-split
+  stage), runs a per-file function over them in a mapInPandas stage.
+  File-level parallelism is Spark's split scheduling (the reference's
+  ThreadPool, SRC-4/5's ordering via deterministic path sort).
+- SRC-6: delete-manifest routing by file name (`'delete' in name`,
+  alma_publish_parser.py:291-292; `publish_files`) → (mms_id,
+  holding_id) delete rows.
 - SRC-8: JSONL sink with maxRecordsPerFile (split_jsonl.py's chunking).
 - SRC-15/16: binary MARC / MARC XML serialization as columns.
 
@@ -21,7 +23,7 @@ from __future__ import annotations
 
 import io
 import tarfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,104 +42,106 @@ DELETE_ROW = StructType([
 ])
 
 
-def _extract_xml_payloads(path: str, content: bytes) -> list[bytes]:
-    """tar.gz members (SRC-2) or the file itself (SRC-1)."""
-    if path.endswith(".gz"):
-        payloads = []
-        with tarfile.open(fileobj=io.BytesIO(content), mode="r:gz") as tar:
-            for member in tar.getmembers():
-                f = tar.extractfile(member)
-                if f is not None:
-                    payloads.append(f.read())
-        return payloads
-    return [content]
+def _file_records(path: str, content: bytes) -> list[dict]:
+    """One publish file → the nested records of each tar.gz member
+    (SRC-2) or of the file itself (SRC-1); the only place publish files
+    are untarred and parsed."""
+    if not path.endswith(".gz"):
+        return marclib.from_marcxml(content, source_file=path)
+    with tarfile.open(fileobj=io.BytesIO(content), mode="r:gz") as tar:
+        return [rec for member in tar.getmembers()
+                if (f := tar.extractfile(member)) is not None
+                for rec in marclib.from_marcxml(f.read(), source_file=path)]
 
 
-def _file_records(path: str, content: bytes) -> Iterator[dict]:
-    """One publish file → its nested records; the only place publish
-    files are untarred and parsed."""
-    for payload in _extract_xml_payloads(path, content):
-        yield from marclib.from_marcxml(payload, source_file=path)
+def file_records_or_error(path: str, content: bytes) -> list[dict]:
+    """An upsert file's records; log-and-continue per file (parse_file's
+    try/except, alma_publish_parser.py:197-238): a corrupt file gives one
+    null-mms_id record, which the split routes to its error stream."""
+    try:
+        return _file_records(path, content)
+    except Exception:
+        return [marclib.new_record(source_file=path)]
+
+
+def publish_files(spark: SparkSession, path: str | list[str],
+                  manifests: bool = False) -> DataFrame:
+    """A drop's upsert files, or with `manifests` its delete manifests,
+    as `binaryFile` rows. SRC-6 (alma_publish_parser.py:291-292): a file
+    whose NAME contains "delete" is a manifest; the directories above it
+    do not count. The manifest read filters with `pathGlobFilter`, which
+    matches file names before any bytes are read."""
+    files = spark.read.format("binaryFile")
+    if manifests:
+        return files.option("pathGlobFilter", "*delete*").load(path)
+    name = F.substring_index(F.col("path"), "/", -1)
+    return files.load(path).where(~name.contains("delete"))
+
+
+def map_files(files: DataFrame,
+              per_file: Callable[[str, bytes], Iterable[dict]],
+              schema: StructType) -> DataFrame:
+    """`binaryFile` rows → the rows `per_file(path, content)` makes of
+    each file, in one mapInPandas stage: each file is handled in the task
+    that reads it."""
+    cols = [f.name for f in schema]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row for p, content in zip(pdf["path"], pdf["content"])
+                    for row in per_file(p, bytes(content))]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return files.select("path", "content").mapInPandas(run, schema)
 
 
 def read_publish_records(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """SRC-1/2: Alma publish XML (optionally inside .tar.gz) → nested
-    records, upsert files only — delete files are routed separately
-    (SRC-6); the `delete` filename test matches the reference's."""
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows.extend(_file_records(p, bytes(content)))
-                except Exception:
-                    # log-and-continue per file (parse_file's try/except,
-                    # alma_publish_parser.py:197-238): a null-mms_id row
-                    # routes to split_publish's error stream.
-                    rows.append(marclib.new_record(source_file=p))
-            yield pd.DataFrame(rows, columns=[f.name for f in PUBLISH_RECORD])
-
-    return (spark.read.format("binaryFile").load(path)
-            .select("path", "content")
-            .where(~F.col("path").contains("delete"))
-            .mapInPandas(parse, PUBLISH_RECORD))
+    records, upsert files only; delete manifests are read by
+    `read_delete_manifests` (SRC-6)."""
+    return map_files(publish_files(spark, path), file_records_or_error,
+                     PUBLISH_RECORD)
 
 
 def read_binary_marc(spark: SparkSession, path: str) -> DataFrame:
     """SRC-3: ISO 2709 .mrc files → nested records. (The reference's
     binary path is dead code due to an arity bug, parser :231; this is
     the working equivalent.)"""
-    files = (spark.read.format("binaryFile").load(path)
-             .select("path", "content"))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rec in marclib.iter_iso2709(bytes(content)):
-                    rec["source_file"] = p
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in PUBLISH_RECORD])
-
-    return files.mapInPandas(parse, PUBLISH_RECORD)
+    return map_files(
+        spark.read.format("binaryFile").load(path),
+        lambda p, c: [dict(r, source_file=p) for r in marclib.iter_iso2709(c)],
+        PUBLISH_RECORD)
 
 
 def read_delete_manifests(spark: SparkSession,
                           path: str | list[str]) -> DataFrame:
     """SRC-6 (process_delete_file, alma_publish_parser.py:341-380):
-    files with 'delete' in the name; each record deletes its 001 bib and
-    at most one 852$8 holding (the reference breaks after the first).
-    A corrupt manifest fails the read rather than skipping deletes."""
-    files = (spark.read.format("binaryFile").load(path)
-             .select("path", "content")
-             .where(F.col("path").contains("delete")))
+    each manifest record deletes its 001 bib and at most one 852$8
+    holding (the reference breaks after the first). A corrupt manifest
+    fails the read rather than skipping deletes."""
+    def deletes(p: str, content: bytes) -> Iterator[dict]:
+        for rec in _file_records(p, content):
+            hids = (_hid_of(f) for f in rec["fields"] if f["tag"] == "852")
+            yield {"mms_id": rec["mms_id"], "source_file": p,
+                   "holding_id": next(filter(None, hids), None)}
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rec in _file_records(p, bytes(content)):
-                    holding_id = next(
-                        (s["value"] for f in rec["fields"] if f["tag"] == "852"
-                         for s in f["subfields"]
-                         if s["code"] == "8"
-                         and is_institution_holding_id_py(s["value"])), None)
-                    rows.append({"mms_id": rec["mms_id"],
-                                 "holding_id": holding_id,
-                                 "source_file": p})
-            yield pd.DataFrame(rows, columns=[f.name for f in DELETE_ROW])
-
-    return files.mapInPandas(parse, DELETE_ROW)
+    return map_files(publish_files(spark, path, manifests=True), deletes,
+                     DELETE_ROW)
 
 
 # --- serialization columns (SRC-15/16) -------------------------------------
-_RECORD_DICT_COLS = ("mms_id", "leader", "control_fields", "fields")
-
-
 def _iter(v):
     """None-safe iteration over Arrow-materialized nested arrays (numpy
     ndarrays have ambiguous truthiness, so no `v or []`)."""
     return [] if v is None else v
+
+
+def _hid_of(field: dict, code: str = "8") -> str | None:
+    """The field's first institution holding id in subfield `code`."""
+    for s in _iter(field.get("subfields")):
+        if s["code"] == code and is_institution_holding_id_py(s["value"]):
+            return s["value"]
+    return None
 
 
 def _row_to_dict(row: pd.Series) -> dict:
@@ -199,8 +203,6 @@ def apply_size_guard(records: DataFrame,
     → skip (null bytes). The reference's `==`-for-`=` typo meant its
     retry never took effect — this implements the evident intent
     (SURVEY.md §7 'bugs not to replicate')."""
-    import pandas as pd
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []

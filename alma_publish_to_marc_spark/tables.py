@@ -89,7 +89,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, *keys: str) -> DataFrame:
+def fan_out(df: DataFrame, key: str) -> DataFrame:
     """Raise an under-parallelized input to the session's default
     parallelism before per-row-heavy compute (interpreted HOF folds,
     Arrow/mapInPandas stages, explode+hash pipelines).
@@ -104,9 +104,9 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     Scale discipline: this is a NO-OP whenever the upstream already
     carries >= defaultParallelism partitions — at 100 TB a scan arrives
     as thousands of row-group splits, so no payload ever reshuffles on
-    a real cluster; only few-file/few-row-group inputs fan out. Keyed
-    repartition (pass the frame's id column) keeps the exchange
-    deterministic hash partitioning; results are partition-count
+    a real cluster; only few-file/few-row-group inputs fan out. The
+    repartition is keyed on the frame's id column, a deterministic hash
+    exchange that plan-shape tests count; results are partition-count
     invariant by the repo's determinism rules (CLAUDE.md) and gated by
     tests/test_partition_invariance.py.
 
@@ -121,9 +121,7 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
             return df
     except Exception:
         return df  # streaming frames have no .rdd; batch sizing applies
-    if keys:
-        return df.repartition(target, *[F.col(k) for k in keys])
-    return df.repartition(target)
+    return df.repartition(target, F.col(key))
 
 
 # Deferred cleanups (unpersists, staged-dir removals, memo evictions),

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import math
+import os
+
 import pytest
 
 from alma_publish_to_marc_spark import metrics
@@ -170,3 +173,19 @@ def test_compact_parquet_dir_reduces_file_count(spark, tmp_path):
     a = sorted(r["id"] for r in spark.read.parquet(src).collect())
     b = sorted(r["id"] for r in spark.read.parquet(out).collect())
     assert a == b
+
+
+# --- JSONL sink (SRC-8) -----------------------------------------------------
+def test_write_jsonl_chunks_part_files(spark, tmp_path):
+    from alma_publish_to_marc_spark.sources.publish import write_jsonl
+
+    n, k = 25, 10
+    df = spark.range(n).selectExpr("id", "cast(id * 2 as string) AS v") \
+        .coalesce(1)
+    out = str(tmp_path / "jsonl")
+    write_jsonl(df, out, k)
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(parts) == math.ceil(n / k)
+    back = spark.read.schema(df.schema).json(out)
+    assert sorted(map(tuple, back.collect())) == \
+        sorted(map(tuple, df.collect()))

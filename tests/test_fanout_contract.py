@@ -16,8 +16,6 @@ does not contain, so there is nothing to pin from here.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from alma_publish_to_marc_spark import tables
@@ -39,8 +37,9 @@ _AT_SCALE = {
     "ann_index_incremental": (2, 1),
     "kmeans_fixed_point": (1, 1),
     "distinct_ngram_diversity": (3, 1),
-    # the publish-split synthesis: split_rows' Arrow stage fans out
-    # through tables.fan_out, so FANOUT=off adds no exchange there
+    # the publish-split synthesis: its one fan_out is on the narrow
+    # customer scan (domain_queries._synth_records); split_rows' Arrow
+    # stage adds no exchange of its own
     "publish_split_bibs": (3, 3),
     # the fan_out sites added in r12: the sketch family's shared
     # `_tokens` shingle stream, ngram_lm's tokenized documents and the
@@ -71,21 +70,3 @@ def test_no_fanout_plan_shape(spark, name, monkeypatch):
         f"under the fan_out")
     assert p["scans"] == scans, name
 
-
-def test_split_rows_honours_fanout_off(spark, monkeypatch):
-    """split_rows fans out through tables.fan_out, so FANOUT=off leaves a
-    one-partition input unshuffled. The `_AT_SCALE` counts above cannot
-    see this: `summarize` counts hash exchanges, and split_rows' fan-out
-    is a round-robin one."""
-    from alma_publish_to_marc_spark.plans.publish_split_fast import split_rows
-    from alma_publish_to_marc_spark.schemas import PUBLISH_RECORD
-
-    from .fixtures_publish import ALL_RECORDS
-
-    records = spark.createDataFrame(ALL_RECORDS, PUBLISH_RECORD).coalesce(1)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "off")
-    plan = split_rows(records)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "auto")
-    plan = split_rows(records)._jdf.queryExecution().executedPlan().toString()
-    assert "RoundRobinPartitioning" in plan, plan

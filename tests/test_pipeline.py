@@ -269,3 +269,26 @@ def test_unreadable_table_fails_the_run(spark, tmp_path, location_dim):
                                 datetime(2024, 6, 2), location_dim)
     assert {f.name: f.read_bytes() for f in table.iterdir()} == before
 
+
+
+def test_manifests_are_routed_by_file_name(spark, tmp_path, location_dim):
+    """SRC-6 tests the file name, not the path: a drop under a directory
+    named `deleted-drops/` is upserted, and a `*_delete*` file beside it
+    still deletes."""
+    from alma_publish_to_marc_spark.sources import publish as P
+
+    land = tmp_path / "deleted-drops"
+    land.mkdir()
+    write_drop(land, [GOOD_RECORD])
+    assert P.read_delete_manifests(spark, str(land)).count() == 0
+    wh = str(tmp_path / "wh")
+    PL.run_publish_pipeline(spark, str(land), wh, datetime(2024, 6, 1),
+                            location_dim)
+    assert spark.read.parquet(wh + "/bib_brief").count() == 1
+
+    write_drop(land, [GOOD_RECORD], name="incremental-1_delete.tar.gz")
+    PL.run_publish_pipeline(spark, str(land), wh, datetime(2024, 6, 2),
+                            location_dim)
+    assert spark.read.parquet(wh + "/bib_brief").count() == 0
+    history = spark.read.parquet(wh + "/deleted_record")
+    assert history.where("record_type = 'bib'").count() == 1

@@ -17,8 +17,9 @@ Usage: python tools/schema_sweep.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import types as T  # noqa: E402
 
