@@ -5,10 +5,18 @@ extractor surface OP-U4) reproducing the brief-extraction rules of
 /root/reference/marc/helper.py.
 
 All functions operate on the nested arrays of schemas.PUBLISH_RECORD /
-HOLDING_RECORD — pure Column expressions over array HOFs, no UDFs, so the
-whole extraction stage stays inside whole-stage codegen. "First field"
-semantics use element_at(filter(...), 1): Spark arrays preserve document
-order, which is what makes these deterministic.
+HOLDING_RECORD — pure Column expressions over array HOFs, no UDFs. Spark
+interprets the HOFs row by row (CodegenFallback), so the whole-stage
+codegen around them does not reach inside. "First field" semantics use
+element_at(filter(...), 1): Spark arrays preserve document order, which
+is what makes these deterministic.
+
+This library is the specification of the brief extraction. The publish
+run extracts the same raw strings in Python, in the task that parses
+each file (plans.publish_split_fast.brief_row), and applies only the
+scalar finishing (punctuation trim, date parse, `voyager_id`) on the
+JVM; tests/test_publish_split_equivalence.py pins the two together.
+The registry queries run this library directly.
 
 Rule citations name the reference function whose documented behavior each
 expression reproduces (e.g. extract_title ⇐ marc/helper.py:21-22).
@@ -164,6 +172,11 @@ def extract_voyager_or_sierra_id(fields: Column) -> Column:
                  lambda v: v.startswith("(CtY-L)b")
                  | (v.startswith("(CtY)") & v.endswith("-yaledb-Voyager"))),
         F.lit(1))
+    return voyager_id(a)
+
+
+def voyager_id(a: Column) -> Column:
+    """The id carried by a selected voyager/sierra 035 $a."""
     return (
         # '(CtY-L)b123x' → 'b123' (after the prefix, minus trailing char)
         F.when(a.startswith("(CtY-L)b"),

@@ -3,8 +3,8 @@
 The reference tallies files/records/bibs/holdings/items/deletes/errors
 per run and ships them to CloudWatch (`alma_publish_parser.py:20-28`,
 `metrics/aws_metrics.py:13-30`). Engine-side the counters are computed
-from the split outputs with one multi-aggregate job (counts are action
-results, not mutable globals), and the emitter is pluggable — a boto3
+from the split outputs with one action (counts are action results, not
+mutable globals), and the emitter is pluggable — a boto3
 CloudWatch emitter when available, else log-only.
 """
 
@@ -14,6 +14,7 @@ import json
 import logging
 import time
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,19 +24,17 @@ logger = logging.getLogger(__name__)
 
 def run_counters(split_outputs: dict[str, DataFrame]) -> dict[str, int]:
     """cnt_bibs/holdings/items/errors (+ records and files from the
-    split's per-record `records` rows) in one pass per frame."""
-    out: dict[str, int] = {}
-    for name, key in (("bibs", "cnt_bibs"), ("holdings", "cnt_holdings"),
-                      ("items", "cnt_items"), ("errors", "cnt_errors")):
-        if name in split_outputs:
-            out[key] = split_outputs[name].count()
-    if "records" in split_outputs:
-        agg = split_outputs["records"].agg(
-            F.count(F.lit(1)).alias("records"),
-            F.countDistinct("source_file").alias("files")).collect()[0]
-        out["cnt_records"] = agg["records"]
-        out["cnt_files"] = agg["files"]
-    return out
+    split's per-record `records` rows) in one action: a cross join of
+    one-row aggregates, whose independent stages run concurrently."""
+    counts = [split_outputs[name].agg(F.count(F.lit(1)).alias(key))
+              for name, key in (("bibs", "cnt_bibs"),
+                                ("holdings", "cnt_holdings"),
+                                ("items", "cnt_items"),
+                                ("errors", "cnt_errors"))]
+    counts.append(split_outputs["records"].agg(
+        F.count(F.lit(1)).alias("cnt_records"),
+        F.countDistinct("source_file").alias("cnt_files")))
+    return reduce(DataFrame.crossJoin, counts).collect()[0].asDict()
 
 
 def throughput(count: int, elapsed_seconds: float) -> float:

@@ -2,10 +2,15 @@
 the reference's `alma_publish_to_database.main()` (SURVEY.md §3.1),
 as one composed DataFrame program:
 
-parse and split files in one stage (1→3 entities + errors) → extract
-briefs → serialize MARC payloads → location broadcast lookup →
-versioned temporal merge into the parquet warehouse → publish-driven
-anti-join deletes + delete manifests, with CDC history → run counters.
+one Arrow stage per file: parse, split (1→3 entities + errors) and
+walk each bib and holding for its raw brief strings
+(publish_split_fast.file_split_rows) → the briefs' scalar finishing on
+the JVM (`extract_*`: punctuation trim, date parse, voyager id,
+suppress flag; every regex and date rule of functions/marc.py stays
+here) → location broadcast lookup → versioned temporal merge into the
+parquet warehouse → publish-driven anti-join deletes + delete
+manifests, with CDC history → run counters. No nested MARC field array
+reaches the persisted split rows, the dedup shuffles or the merges.
 
 The reference's thread pool, per-thread connections, and per-bib commits
 all disappear: file parallelism is split scheduling, connections are
@@ -22,9 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import marc as M
-from ..functions.scalars import (format_number_dashes, format_oclc,
-                                 parse_date_tz_alias, presence, rm_ws,
-                                 suppress_flag)
+from ..functions.scalars import (INSTITUTION_SUFFIX_RE, parse_date_tz_alias,
+                                 presence, rm_ws, suppress_flag,
+                                 trim_punctuation_bounded, truncate254)
 from ..operators import upsert as U
 from ..sources import publish as P
 from ..tables import persist, release
@@ -35,33 +40,25 @@ WAREHOUSE_TABLES = ("bib_brief", "holding_brief", "item", "bib_part",
 
 
 def extract_bib_brief(bibs: DataFrame, batch_ts) -> DataFrame:
-    """bib_brief columns from the nested bib record
-    (store_bib_marc, alma_publish_to_database.py:139-198)."""
-    fields = F.col("fields")
-    dates = M.extract_system_dates(fields, "BIB")
-    isbns = M.extract_isbns(fields)
-    issns = M.extract_issns(fields)
-    oclcs = M.extract_oclcs(fields)
+    """bib_brief columns (store_bib_marc, alma_publish_to_database.py:
+    139-198) from the raw brief strings of the file stage: only the
+    scalar finishing of functions/marc.py's rules runs here."""
     return bibs.select(
         "mms_id",
-        M.extract_title(fields).alias("title"),
-        M.extract_author(fields).alias("author"),
-        M.extract_publication_date(fields).alias("publication_date"),
-        M.extract_publication_place(fields).alias("publication_place"),
-        M.extract_publisher(fields).alias("publisher"),
-        parse_date_tz_alias(dates["create_raw"]).alias("system_create_date_time"),
-        parse_date_tz_alias(dates["update_raw"]).alias("system_update_date_time"),
-        M.first_fixed_field(F.col("control_fields"), "008").alias("field008"),
-        M.extract_extent(fields).alias("extent"),
-        M.extract_material(fields).alias("material"),
-        F.col("leader"),
-        F.try_element_at(issns, F.lit(1)).alias("issn"),
-        F.try_element_at(isbns, F.lit(1)).alias("isbn"),
-        F.try_element_at(oclcs, F.lit(1)).alias("oclc_number"),
-        M.extract_voyager_or_sierra_id(fields).alias("voyager_bib_id"),
-        suppress_flag(M.subfields_as_string(fields, "BIB", "a"))
-            .alias("suppress"),
-        F.col("holding_ids"),
+        trim_punctuation_bounded(F.col("title")).alias("title"),
+        trim_punctuation_bounded(F.col("author")).alias("author"),
+        truncate254(trim_punctuation_bounded(F.col("publication_date")))
+            .alias("publication_date"),
+        trim_punctuation_bounded(F.col("publication_place"))
+            .alias("publication_place"),
+        trim_punctuation_bounded(F.col("publisher")).alias("publisher"),
+        parse_date_tz_alias(F.col("create_raw")).alias("system_create_date_time"),
+        parse_date_tz_alias(F.col("update_raw")).alias("system_update_date_time"),
+        "field008", "extent", "material", "leader", "issn", "isbn",
+        "oclc_number",
+        M.voyager_id(F.col("voyager_035a")).alias("voyager_bib_id"),
+        suppress_flag(F.col("suppress_raw")).alias("suppress"),
+        "holding_ids",
         F.lit(batch_ts).cast("timestamp_ntz").alias("batch_ts"),
     )
 
@@ -69,26 +66,19 @@ def extract_bib_brief(bibs: DataFrame, batch_ts) -> DataFrame:
 def extract_holding_brief(holdings: DataFrame, location: DataFrame | None,
                           batch_ts) -> DataFrame:
     """holding_brief columns (store_holding_marc,
-    alma_publish_to_database.py:236-268) with the OP-J1 broadcast
-    location lookup on (library_code=852$b, code=852$c)."""
-    fields = F.col("fields")
-    dates = M.extract_system_dates(fields, "HLD")
-    # paired extraction: both codes must come from the SAME 852 (the
-    # reference skips fields carrying only one of the two)
-    libloc = M.extract_library_location(fields)
-    lib = libloc["library_code"]
-    loc = libloc["location_code"]
+    alma_publish_to_database.py:236-268) from the raw brief strings,
+    with the OP-J1 broadcast location lookup on (library_code=852$b,
+    code=852$c); both codes come from the same 852."""
     out = holdings.select(
         "holding_id", "mms_id",
-        M.extract_call_number(fields).alias("display_call_number"),
-        parse_date_tz_alias(dates["create_raw"]).alias("system_create_date_time"),
-        parse_date_tz_alias(dates["update_raw"]).alias("system_update_date_time"),
-        M.first_fixed_field(F.col("control_fields"), "008").alias("field008"),
-        suppress_flag(M.subfields_as_string(fields, "HLD", "a"))
-            .alias("suppress"),
-        M.extract_voyager_or_sierra_id(fields).alias("voyager_holding_id"),
-        lib.alias("library_code"),
-        loc.alias("location_code"),
+        trim_punctuation_bounded(F.col("call_number"))
+            .alias("display_call_number"),
+        parse_date_tz_alias(F.col("create_raw")).alias("system_create_date_time"),
+        parse_date_tz_alias(F.col("update_raw")).alias("system_update_date_time"),
+        "field008",
+        suppress_flag(F.col("suppress_raw")).alias("suppress"),
+        M.voyager_id(F.col("voyager_035a")).alias("voyager_holding_id"),
+        "library_code", "location_code",
         F.lit(batch_ts).cast("timestamp_ntz").alias("batch_ts"),
     )
     if location is not None:
@@ -137,14 +127,9 @@ def extract_bib_parts(bibs: DataFrame) -> DataFrame:
     value starts with the bib prefix '99' and ends with an institution
     suffix. The PK (mms_id, part_mms_id) + ON CONFLICT DO NOTHING in the
     reference dedups — dropDuplicates is the batch equivalent."""
-    from ..functions.scalars import INSTITUTION_SUFFIX_RE as suffix_re
-    w_firsts = F.transform(
-        M.fields_with_tag(F.col("fields"), "774"),
-        lambda f: F.try_element_at(M.subfield_values(f, "w"), F.lit(1)))
-    parts = F.filter(
-        w_firsts,
-        lambda v: v.isNotNull() & v.startswith("99") & v.rlike(suffix_re))
-    return (bibs.select("mms_id", F.explode(parts).alias("part_mms_id"))
+    part = F.col("part_mms_id")
+    return (bibs.select("mms_id", F.explode("part_ids").alias("part_mms_id"))
+            .where(part.startswith("99") & part.rlike(INSTITUTION_SUFFIX_RE))
             .dropDuplicates(["mms_id", "part_mms_id"]))
 
 

@@ -9,14 +9,22 @@ dominates (~100 ms core-time per record at sf0.1 — slower per core than
 the reference's imperative loop). This module runs the SAME semantics as
 plain Python over Arrow batches: ~50 µs per record, no shuffle,
 embarrassingly parallel — the strategy SURVEY.md §7 ("hard parts" #1)
-prescribes. The publish sync splits each file in the stage that parses
-it (`file_split_rows`, the reference's parse_file → handle_record loop);
-`split_rows` splits a nested-record frame, e.g. the records the
-publish_split_* queries synthesize in Spark.
+prescribes. `split_rows` splits a nested-record frame into SPLIT_ROWs,
+e.g. the records the publish_split_* queries synthesize in Spark.
 
-tests/test_publish_split_equivalence.py pins both to the Catalyst spec's
-outputs on the fixture corpus; the DuckDB oracles for the
-publish_split_* driver queries check this path at sf scale.
+The publish sync goes one step further in the stage that parses each
+file (`file_split_rows`, the reference's parse_file → handle_record
+loop): it splits each record and walks the split bib and holdings for
+the brief columns (`brief_row`, the traversal functions/marc.py
+specifies), so its BRIEF_ROWs carry flat raw strings and no nested
+field arrays. What stays on the JVM is the scalar finishing
+(plans.pipeline.extract_*): every regex and date rule, since Java's
+`[^\\W\\d]` is ASCII-only where Python's is Unicode.
+
+tests/test_publish_split_equivalence.py pins the split to the Catalyst
+spec's outputs on the fixture corpus, and the brief traversal plus the
+finishing to marc.py's extraction; the DuckDB oracles for the
+publish_split_* driver queries check `split_rows` at sf scale.
 """
 
 from __future__ import annotations
@@ -46,14 +54,40 @@ _HOLDING_T = StructType([
     StructField("control_fields", ArrayType(CONTROL_FIELD)),
     StructField("fields", ArrayType(DATA_FIELD)),
 ])
-SPLIT_ROW = StructType([
-    StructField("mms_id", StringType()),
-    StructField("source_file", StringType()),
-    StructField("bib", _BIB_T),
-    StructField("holdings", ArrayType(_HOLDING_T)),
-    StructField("items", ArrayType(ITEM_STRUCT)),
-    StructField("error", StringType()),
+
+
+def _split_row_t(bib: StructType, holding: StructType) -> StructType:
+    return StructType([
+        StructField("mms_id", StringType()),
+        StructField("source_file", StringType()),
+        StructField("bib", bib),
+        StructField("holdings", ArrayType(holding)),
+        StructField("items", ArrayType(ITEM_STRUCT)),
+        StructField("error", StringType()),
+    ])
+
+
+def _strings(*names: str) -> list[StructField]:
+    return [StructField(n, StringType()) for n in names]
+
+
+SPLIT_ROW = _split_row_t(_BIB_T, _HOLDING_T)
+# The raw brief strings of a split bib / holding (`brief_row`):
+# title..publisher are joined subfield values before the punctuation
+# trim; *_raw are the values before their JVM finishing.
+_BIB_BRIEF_T = StructType([
+    *_strings("mms_id", "leader", "title", "author", "publication_date",
+              "publication_place", "publisher", "extent", "material",
+              "isbn", "issn", "oclc_number", "voyager_035a", "suppress_raw",
+              "create_raw", "update_raw", "field008"),
+    StructField("holding_ids", ArrayType(StringType())),
+    StructField("part_ids", ArrayType(StringType())),
 ])
+_HOLDING_BRIEF_T = StructType(_strings(
+    "holding_id", "call_number", "voyager_035a", "suppress_raw",
+    "create_raw", "update_raw", "field008", "library_code",
+    "location_code"))
+BRIEF_ROW = _split_row_t(_BIB_BRIEF_T, _HOLDING_BRIEF_T)
 
 
 def _control_groups(cf: list[dict]) -> tuple[list[list[dict]], set[int]]:
@@ -219,30 +253,197 @@ def split_rows(records: DataFrame) -> DataFrame:
     return records.mapInPandas(run, SPLIT_ROW)
 
 
+# --- brief traversal: the raw strings of functions/marc.py's rules -------
+def _values(field: dict, codes: str) -> list:
+    """marc.subfield_values: the values of the subfields whose code is
+    in `codes` ('*' = all), null values kept (they count toward "has
+    the subfield" but are skipped by joins)."""
+    subs = _iter(field.get("subfields"))
+    if codes == "*":
+        return [s["value"] for s in subs]
+    wanted = frozenset(codes)
+    return [s["value"] for s in subs if s["code"] in wanted]
+
+
+def _join(values: list) -> str:
+    """array_join(values, ' '), which skips nulls."""
+    return " ".join(v for v in values if v is not None)
+
+
+def _first_joined(fields: list, tag: str, codes: str) -> str | None:
+    """marc.subfields_as_string."""
+    for f in fields:
+        if f["tag"] == tag and (vals := _values(f, codes)):
+            return _join(vals)
+    return None
+
+
+def _per_field_joined(fields: list, tag: str, codes: str,
+                      ind2: tuple = ()) -> list[str]:
+    """marc._per_field_join (264's ind2 test when `ind2` is given)."""
+    return [_join(vals) for f in fields
+            if f["tag"] == tag and (not ind2 or f["ind2"] in ind2)
+            and (vals := _values(f, codes))]
+
+
+def _no_code_in(field: dict, codes: str) -> bool:
+    """~exists(subfields, code ∈ codes) under three-valued logic: a null
+    code makes the test null, which drops the field like a match."""
+    subs = field.get("subfields")
+    skip = frozenset(codes)
+    return subs is not None and all(
+        s["code"] is not None and s["code"] not in skip for s in subs)
+
+
+def _first_values_with_skip(fields: list, tag: str, skip: str) -> list:
+    """marc.extract_values_with_skip."""
+    for f in fields:
+        if f["tag"] == tag and _no_code_in(f, skip) and (a := _values(f, "a")):
+            return a
+    return []
+
+
+def _isbn(fields: list) -> str | None:
+    """marc.extract_isbns' first element: the first value of length
+    ≥ 13, else the first value."""
+    vals = _first_values_with_skip(fields, "020", "z")
+    best = next((v for v in vals if v is not None and len(v) >= 13), None)
+    return best if best is not None else next(iter(vals), None)
+
+
+def _oclc(fields: list) -> str | None:
+    """marc.extract_oclcs' first element. The prefix test is ASCII, so
+    Python's lower() agrees with the JVM's here."""
+    for f in fields:
+        if (f["tag"] in ("035", "079") and _no_code_in(f, "z")
+                and (a := _values(f, "a"))):
+            v = _join(a)
+            if v.lower().startswith(("(ocolc)", "oc")):
+                return v
+    return None
+
+
+def _voyager_035a(fields: list) -> str | None:
+    """The 035 $a that marc.extract_voyager_or_sierra_id selects, before
+    marc.voyager_id."""
+    for f in fields:
+        if f["tag"] == "035" and (a := _values(f, "a")):
+            v = a[0]
+            if v is not None and (v.startswith("(CtY-L)b") or (
+                    v.startswith("(CtY)") and v.endswith("-yaledb-Voyager"))):
+                return v
+    return None
+
+
+def _system_dates(fields: list, tag: str) -> tuple:
+    """marc.extract_system_dates: (create_raw, update_raw)."""
+    for f in fields:
+        if f["tag"] == tag and (created := _values(f, "1")):
+            updated = next(iter(_values(f, "2")), None)
+            return created[0], created[0] if updated is None else updated
+    return None, None
+
+
+def _fixed(control_fields: list, tag: str) -> str | None:
+    """marc.first_fixed_field."""
+    return next((c["data"] for c in control_fields if c["tag"] == tag), None)
+
+
+def _bib_brief(bib: dict) -> dict:
+    fields = bib["fields"]
+    create, update = _system_dates(fields, "BIB")
+    material = [v for v in (_first_joined(fields, "300", "b"),
+                            _first_joined(fields, "340", "*"))
+                if v is not None]
+    authors = [s["value"] for f in fields
+               if f["tag"] in ("100", "110", "111")
+               for s in _iter(f.get("subfields"))
+               if s["code"] is not None and s["code"] != "0"]
+    issns = _first_values_with_skip(fields, "022", "yz")
+    return {
+        "mms_id": bib["mms_id"], "leader": bib["leader"],
+        "title": _first_joined(fields, "245", "abfghknp"),
+        "author": _join(authors),
+        "publication_date": " ".join(
+            _per_field_joined(fields, "260", "c")
+            + _per_field_joined(fields, "264", "c", ind2=("1", "2", "3"))
+            + _per_field_joined(fields, "260", "g")),
+        "publication_place": " ".join(
+            _per_field_joined(fields, "260", "ae")
+            + _per_field_joined(fields, "264", "a")
+            + _per_field_joined(fields, "752", "abcd")),
+        "publisher": " ".join(_per_field_joined(fields, "260", "bf")
+                              + _per_field_joined(fields, "264", "b")),
+        "extent": _first_joined(fields, "300", "acef"),
+        "material": " ".join(material),
+        "isbn": _isbn(fields),
+        "issn": next(iter(issns), None),
+        "oclc_number": _oclc(fields),
+        "voyager_035a": _voyager_035a(fields),
+        "suppress_raw": _first_joined(fields, "BIB", "a"),
+        "create_raw": create, "update_raw": update,
+        "field008": _fixed(bib["control_fields"], "008"),
+        "holding_ids": bib["holding_ids"],
+        # the first $w of each 774; the pipeline keeps the bib-shaped ones
+        "part_ids": [w[0] for f in fields
+                     if f["tag"] == "774" and (w := _values(f, "w"))
+                     and w[0] is not None],
+    }
+
+
+def _holding_brief(holding: dict) -> dict:
+    fields = holding["fields"]
+    create, update = _system_dates(fields, "HLD")
+    # marc.extract_library_location: the first 852 with both $b and $c
+    lib, loc = next(((b[0], c[0]) for f in fields if f["tag"] == "852"
+                     and (b := _values(f, "b")) and (c := _values(f, "c"))),
+                    (None, None))
+    return {
+        "holding_id": holding["holding_id"],
+        "call_number": _first_joined(fields, "852", "khimt"),
+        "voyager_035a": _voyager_035a(fields),
+        "suppress_raw": _first_joined(fields, "HLD", "a"),
+        "create_raw": create, "update_raw": update,
+        "field008": _fixed(holding["control_fields"], "008"),
+        "library_code": lib, "location_code": loc,
+    }
+
+
+def brief_row(split: dict) -> dict:
+    """A SPLIT_ROW dict → BRIEF_ROW dict: the split bib and holdings
+    become their raw brief strings; items and errors pass through."""
+    if split["bib"] is None:
+        return split
+    return dict(split, bib=_bib_brief(split["bib"]),
+                holdings=[_holding_brief(h) for h in split["holdings"]])
+
+
 def file_split_rows(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """A drop's upsert files → SPLIT_ROW frame in one Arrow stage: each
-    file is parsed and its records split in the task that reads it, so
-    the nested records never cross to the JVM and back."""
+    """A drop's upsert files → BRIEF_ROW frame in one Arrow stage: each
+    file is parsed, its records split and their briefs extracted in the
+    task that reads it, so no nested record crosses to the JVM."""
     return map_files(
         publish_files(spark, path),
-        lambda p, c: [split_record(r) for r in file_records_or_error(p, c)],
-        SPLIT_ROW)
+        lambda p, c: [brief_row(split_record(r))
+                      for r in file_records_or_error(p, c)],
+        BRIEF_ROW)
 
 
 def split_outputs(rows: DataFrame) -> dict[str, DataFrame]:
-    """SPLIT_ROW frame → {bibs, holdings, items, errors, records}, the
-    outputs of publish_split.split_publish."""
+    """SPLIT_ROW or BRIEF_ROW frame → {bibs, holdings, items, errors,
+    records}, the outputs of publish_split.split_publish (holdings carry
+    holding_id, mms_id, then the rest of the holding struct)."""
     rows = persist(rows)
     ok = rows.where(F.col("error").isNull())
     bibs = (ok.select(F.col("bib.*"), F.col("source_file"))
             .dropDuplicates(["mms_id"]))
+    rest = [n for n in rows.schema["holdings"].dataType.elementType.names
+            if n != "holding_id"]
     holdings = (ok.select(F.col("mms_id"),
                           F.explode("holdings").alias("h"))
                 .select(F.col("h.holding_id").alias("holding_id"),
                         F.col("mms_id"),
-                        F.col("h.leader").alias("leader"),
-                        F.col("h.control_fields").alias("control_fields"),
-                        F.col("h.fields").alias("fields"))
+                        *[F.col(f"h.{n}").alias(n) for n in rest])
                 .dropDuplicates(["holding_id"]))
     items = (ok.select(F.explode("items").alias("it"))
              .select("it.*").dropDuplicates())

@@ -72,10 +72,29 @@ def publish_files(spark: SparkSession, path: str | list[str],
     do not count. The manifest read filters with `pathGlobFilter`, which
     matches file names before any bytes are read."""
     files = spark.read.format("binaryFile")
+    paths = _resolve_globs(spark, path)
     if manifests:
-        return files.option("pathGlobFilter", "*delete*").load(path)
+        return files.option("pathGlobFilter", "*delete*").load(paths)
     name = F.substring_index(F.col("path"), "/", -1)
-    return files.load(path).where(~name.contains("delete"))
+    return files.load(paths).where(~name.contains("delete"))
+
+
+def _resolve_globs(spark: SparkSession, path: str | list[str]) -> list[str]:
+    """Expand glob paths through the Hadoop FileSystem, as Spark would,
+    so no literal glob reaches the read: Spark probes a glob path for a
+    streaming-sink metadata directory and logs a stack trace when it is
+    missing. A glob that matches nothing is kept, so the read fails on
+    it as before."""
+    conf = spark._jsc.hadoopConfiguration()
+    out = []
+    for p in [path] if isinstance(path, str) else path:
+        if not any(c in p for c in "{}[]*?\\"):   # Spark's isGlobPath
+            out.append(p)
+            continue
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+        matches = jpath.getFileSystem(conf).globStatus(jpath) or []
+        out += sorted(m.getPath().toString() for m in matches) or [p]
+    return out
 
 
 def map_files(files: DataFrame,
