@@ -19,6 +19,10 @@ incoming is deduped to latest-per-key first (required — SQL MERGE raises
 on duplicate matches, and the reference's per-row loop silently
 last-writes); at 100 TB the rewrite becomes partition-overwrite on a
 bucketed/partitioned key so only touched partitions rewrite.
+
+A delete is a tag, not a filter (`tag_deletes`): the survivors
+(`live_rows`) and the history (`history_rows`) read the same tagged rows,
+as the reference's trigger records the row its DELETE removes.
 """
 
 from __future__ import annotations
@@ -28,9 +32,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .relational import latest_per_key
+from . import relational as R
 
 AUDIT = ("create_date_time", "update_date_time", "version")
+DELETED = "_deleted"
 
 
 def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
@@ -42,50 +47,32 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
       temporal guard) — version increments, create_date_time is preserved
     - unmatched stored rows pass through
     """
-    incoming = latest_per_key(incoming, keys, ts_col)
+    incoming = R.latest_per_key(incoming, keys, ts_col)
     value_cols = [c for c in incoming.columns if c not in keys]
-
-    s = stored
-    i = incoming
-    for c in value_cols:
-        i = i.withColumnRenamed(c, f"_in_{c}")
-
-    joined = s.join(i, on=list(keys), how="full_outer")
+    i = incoming.withColumnsRenamed({c: f"_in_{c}" for c in value_cols})
+    joined = stored.join(i, on=list(keys), how="full_outer")
     is_insert = F.col(ts_col).isNull()          # no stored row
     in_ts = F.col(f"_in_{ts_col}")
-    has_incoming = in_ts.isNotNull()
-    take_incoming = is_insert | (has_incoming & (in_ts > F.col(ts_col)))
+    take_incoming = is_insert | (in_ts.isNotNull() & (in_ts > F.col(ts_col)))
 
-    out_cols = [F.col(k) for k in keys]
-    for c in value_cols:
-        if c in AUDIT:
-            continue
-        out_cols.append(
-            F.when(take_incoming, F.col(f"_in_{c}")).otherwise(F.col(c))
-             .alias(c))
-    out_cols.extend([
+    return joined.select(
+        *keys,
+        *[F.when(take_incoming, F.col(f"_in_{c}")).otherwise(F.col(c))
+          .alias(c) for c in value_cols if c not in AUDIT],
         F.when(is_insert, in_ts)
-         .otherwise(F.col("create_date_time")).alias("create_date_time")
-        if "create_date_time" in s.columns else
-        in_ts.alias("create_date_time"),
+         .otherwise(F.col("create_date_time")).alias("create_date_time"),
         F.when(take_incoming, in_ts)
-         .otherwise(F.col("update_date_time")).alias("update_date_time")
-        if "update_date_time" in s.columns else
-        in_ts.alias("update_date_time"),
+         .otherwise(F.col("update_date_time")).alias("update_date_time"),
         F.when(is_insert, F.lit(1).cast("long"))
          .when(take_incoming, F.col("version") + 1)
-         .otherwise(F.col("version")).alias("version")
-        if "version" in s.columns else
-        F.lit(1).cast("long").alias("version"),
-    ])
-    return joined.select(*out_cols)
+         .otherwise(F.col("version")).alias("version"))
 
 
 def insert_ignore(stored: DataFrame, incoming: DataFrame,
                   keys: Sequence[str], ts_col: str) -> DataFrame:
     """SRC-11 `no_updates` variant (ON CONFLICT DO NOTHING,
     database_insert.py:26-46): existing keys keep their rows."""
-    incoming = latest_per_key(incoming, keys, ts_col)
+    incoming = R.latest_per_key(incoming, keys, ts_col)
     fresh = incoming.join(stored.select(*keys), on=list(keys), how="left_anti")
     fresh = (fresh
              .withColumn("create_date_time", F.col(ts_col))
@@ -94,22 +81,41 @@ def insert_ignore(stored: DataFrame, incoming: DataFrame,
     return stored.unionByName(fresh.select(*stored.columns))
 
 
+def tag_deletes(df: DataFrame, delete_keys: DataFrame, key: str,
+                record_type: str) -> DataFrame:
+    """OP-ST6 as a tag, in one left join: `_deleted` is set to the history
+    `record_type` on the rows whose `key` is in `delete_keys`; a row keeps
+    any tag it already has."""
+    hits = (delete_keys.select(key).dropDuplicates([key])
+            .withColumn("_hit", F.lit(record_type)))
+    prior = F.col(DELETED) if DELETED in df.columns else F.lit(None)
+    return df.join(hits, on=key, how="left").select(
+        *[c for c in df.columns if c != DELETED],
+        F.coalesce(prior, F.col("_hit")).alias(DELETED))
+
+
+def live_rows(df: DataFrame) -> DataFrame:
+    """The untagged rows without the tag column (an untagged frame as is)."""
+    if DELETED not in df.columns:
+        return df
+    return df.where(F.col(DELETED).isNull()).drop(DELETED)
+
+
+def history_rows(df: DataFrame, record_id: str) -> DataFrame:
+    """The deleted_record rows (record_type, mms_id, record_id) of the
+    tagged rows: the delete-trigger payload."""
+    return df.where(F.col(DELETED).isNotNull()).select(
+        F.col(DELETED).alias("record_type"),
+        F.col("mms_id").cast("string").alias("mms_id"),
+        F.col(record_id).cast("string").alias("record_id"))
+
+
 def delete_with_history(stored: DataFrame, delete_keys: DataFrame,
-                        key: str, record_type: str,
-                        mms_col: str = "mms_id") -> tuple[DataFrame, DataFrame]:
-    """OP-ST6: (survivors, history). History rows mirror deleted_record
-    (record_type, mms_id, record_id) — the delete-trigger payload."""
-    doomed = stored.join(delete_keys.select(key).dropDuplicates([key]),
-                         on=key, how="left_semi")
-    survivors = stored.join(delete_keys.select(key).dropDuplicates([key]),
-                            on=key, how="left_anti")
-    history = doomed.select(
-        F.lit(record_type).alias("record_type"),
-        (F.col(mms_col) if mms_col in stored.columns else F.lit(None))
-        .cast("string").alias("mms_id"),
-        F.col(key).cast("string").alias("record_id"),
-    )
-    return survivors, history
+                        key: str, record_type: str
+                        ) -> tuple[DataFrame, DataFrame]:
+    """OP-ST6: (survivors, history), both from one tagging join."""
+    tagged = tag_deletes(stored, delete_keys, key, record_type)
+    return live_rows(tagged), history_rows(tagged, key)
 
 
 def cascade_delete_holdings(holdings: DataFrame, items: DataFrame,
@@ -120,16 +126,9 @@ def cascade_delete_holdings(holdings: DataFrame, items: DataFrame,
     Returns (surviving_holdings, surviving_items, history)."""
     surv_h, hist_h = delete_with_history(
         holdings, holding_keys, "holding_id", "holding")
-    doomed_items = items.join(holding_keys.select("holding_id").dropDuplicates(),
-                              on="holding_id", how="left_semi")
-    surv_i = items.join(holding_keys.select("holding_id").dropDuplicates(),
-                        on="holding_id", how="left_anti")
-    hist_i = doomed_items.select(
-        F.lit("item").alias("record_type"),
-        F.col("mms_id").cast("string").alias("mms_id"),
-        F.col("pid").cast("string").alias("record_id"),
-    )
-    return surv_h, surv_i, hist_h.unionByName(hist_i)
+    tagged_i = tag_deletes(items, holding_keys, "holding_id", "item")
+    return (surv_h, live_rows(tagged_i),
+            hist_h.unionByName(history_rows(tagged_i, "pid")))
 
 
 def stale_holdings_for_published_bibs(stored_holdings: DataFrame,
@@ -138,9 +137,6 @@ def stale_holdings_for_published_bibs(stored_holdings: DataFrame,
     """OP-J2 (`alma_publish_to_database.py:139-143`): holdings stored
     under a republished bib but absent from the incoming publish are the
     per-bib delete set (holding_id != ALL(incoming))."""
-    in_scope = stored_holdings.join(
-        published_bibs.select("mms_id").dropDuplicates(["mms_id"]),
-        on="mms_id", how="left_semi")
-    return in_scope.join(
-        incoming_holdings.select("holding_id").dropDuplicates(["holding_id"]),
-        on="holding_id", how="left_anti")
+    return R.anti_join_deletes(
+        R.semi_join(stored_holdings, published_bibs, ["mms_id"]),
+        incoming_holdings, ["holding_id"])

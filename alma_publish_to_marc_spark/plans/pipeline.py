@@ -7,10 +7,10 @@ walk each bib and holding for its raw brief strings
 (publish_split_fast.file_split_rows) → the briefs' scalar finishing on
 the JVM (`extract_*`: punctuation trim, date parse, voyager id,
 suppress flag; every regex and date rule of functions/marc.py stays
-here) → location broadcast lookup → versioned temporal merge into the
-parquet warehouse → publish-driven anti-join deletes + delete
-manifests, with CDC history → run counters. No nested MARC field array
-reaches the persisted split rows, the dedup shuffles or the merges.
+here) → location broadcast lookup → versioned temporal merge, where each
+delete tags the rows it removes (OP-ST6) → staged tables, whose untagged
+rows become the warehouse and tagged rows the CDC history → run counters.
+No nested MARC field array reaches the split rows, shuffles or merges.
 
 The reference's thread pool, per-thread connections, and per-bib commits
 all disappear: file parallelism is split scheduling, connections are
@@ -21,7 +21,6 @@ per-table overwrite (MERGE on Delta).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +29,7 @@ from ..functions import marc as M
 from ..functions.scalars import (INSTITUTION_SUFFIX_RE, parse_date_tz_alias,
                                  presence, rm_ws, suppress_flag,
                                  trim_punctuation_bounded, truncate254)
+from ..operators import relational as R
 from ..operators import upsert as U
 from ..sources import publish as P
 from ..tables import persist, release
@@ -133,13 +133,19 @@ def extract_bib_parts(bibs: DataFrame) -> DataFrame:
             .dropDuplicates(["mms_id", "part_mms_id"]))
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of `path`: I/O on any filesystem Spark reads."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _read_table(spark: SparkSession, warehouse_dir: str, name: str,
                 template: DataFrame) -> DataFrame:
     path = os.path.join(warehouse_dir, name)
     # only a table not written yet reads as empty: an unreadable one
     # must fail the run, not be overwritten with the drop's rows alone
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
         return template.limit(0)
     stored = spark.read.parquet(path)
     # Schema evolution: a warehouse written by an older engine version
@@ -171,11 +177,12 @@ def _stage_table(df: DataFrame, warehouse_dir: str, name: str) -> DataFrame:
 
 
 def _swap_table(staged: DataFrame, warehouse_dir: str, name: str) -> None:
-    """Phase 2: write the final table from a plan that reads only the
-    staged copy, then drop the copy."""
+    """Phase 2: write the final table (the staged rows no delete tagged)
+    from a plan that reads only the staged copy, then drop the copy."""
     path = os.path.join(warehouse_dir, name)
-    staged.write.mode("overwrite").parquet(path)
-    shutil.rmtree(path + "._staged", ignore_errors=True)
+    U.live_rows(staged).write.mode("overwrite").parquet(path)
+    fs, jpath = _hadoop_path(staged.sparkSession, path + "._staged")
+    fs.delete(jpath, True)
 
 
 def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
@@ -206,43 +213,47 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
              "version": F.lit(1).cast("long")})
         return _read_table(spark, warehouse_dir, name, template)
 
-    stored_b = read_stored("bib_brief", bibs)
-    merged_b = U.merge_upsert(stored_b, ts_col(bibs), ["mms_id"], "_ts")
+    # every delete tags the rows it removes (OP-ST6); the swaps keep the
+    # untagged rows of the staged tables and the history reads the tagged
+    # ones. Delete manifests (SRC-6) apply after the upserts, cascading
+    # holding→item; persisted for three tags and the counter.
+    deletes = persist(P.read_delete_manifests(spark, landing_dir))
+    merged_b = U.tag_deletes(
+        U.merge_upsert(read_stored("bib_brief", bibs), ts_col(bibs),
+                       ["mms_id"], "_ts"), deletes, "mms_id", "bib")
 
+    # publish-driven stale holdings (OP-J2) are absent from the drop, so
+    # the merge passes them through to their tag
     stored_h = read_stored("holding_brief", holdings)
-    stored_i = read_stored("item", items)
-
-    # publish-driven stale-holding deletes (OP-J2) BEFORE the merge,
-    # cascading to the stale holdings' items (the reference's FK
-    # ON DELETE CASCADE, ddl/data_sync_db.sql:422-427)
     stale = U.stale_holdings_for_published_bibs(
-        stored_h, out["bibs"], out["holdings"])
-    surviving_h, stored_i, hist_stale = U.cascade_delete_holdings(
-        stored_h, stored_i, stale.select("holding_id"))
-    merged_h = U.merge_upsert(surviving_h, ts_col(holdings),
-                              ["holding_id"], "_ts")
+        stored_h, out["bibs"], out["holdings"]).select("holding_id")
+    merged_h = U.tag_deletes(
+        U.merge_upsert(stored_h, ts_col(holdings), ["holding_id"], "_ts"),
+        stale.unionByName(deletes.select("holding_id")), "holding_id",
+        "holding")
 
-    # OP-J3: items stored under a republished holding but absent from
-    # the incoming publish are deleted (alma_publish_to_database.py:238-241)
-    stale_items = (stored_i
-                   .join(out["holdings"].select("holding_id").dropDuplicates(),
-                         "holding_id", "left_semi")
-                   .join(items.select("pid").dropDuplicates(),
-                         "pid", "left_anti"))
-    stored_i, hist_items = U.delete_with_history(
-        stored_i, stale_items.select("pid"), "pid", "item")
-    merged_i = U.merge_upsert(stored_i, ts_col(items), ["pid"], "_ts")
-    hist_h = hist_stale.unionByName(hist_items)
+    # stale holdings' items (FK ON DELETE CASCADE, data_sync_db.sql:422-427)
+    # and OP-J3 items (under a republished holding, absent from the drop;
+    # alma_publish_to_database.py:238-241) are tagged BEFORE the merge:
+    # an item moved off a stale holding is deleted, then re-inserted
+    stored_i = read_stored("item", items)
+    stale_items = R.anti_join_deletes(
+        R.semi_join(stored_i, out["holdings"], ["holding_id"]), items, ["pid"])
+    tagged_i = U.tag_deletes(
+        U.tag_deletes(stored_i, stale, "holding_id", "item"),
+        stale_items, "pid", "item")
+    merged_i = (U.tag_deletes(
+        U.merge_upsert(U.live_rows(tagged_i), ts_col(items), ["pid"], "_ts"),
+        deletes, "holding_id", "item")
+        .unionByName(tagged_i.where(F.col(U.DELETED).isNotNull())))
 
     # bib_part: wholesale replace per published bib (the reference
     # deletes every published mms_id's edges, then re-inserts; no FK, so
     # delete manifests do NOT cascade here — data_sync_db.sql:363-364)
     parts = extract_bib_parts(out["bibs"])
-    stored_p = _read_table(spark, warehouse_dir, "bib_part", parts)
-    merged_p = (stored_p
-                .join(out["bibs"].select("mms_id").dropDuplicates(),
-                      "mms_id", "left_anti")
-                .unionByName(parts))
+    merged_p = R.anti_join_deletes(
+        _read_table(spark, warehouse_dir, "bib_part", parts), out["bibs"],
+        ["mms_id"]).unionByName(parts)
 
     # stage every merge (reads originals) — see _stage_table
     staged_b = _stage_table(merged_b, warehouse_dir, "bib_brief")
@@ -250,27 +261,18 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
     staged_i = _stage_table(merged_i, warehouse_dir, "item")
     staged_p = _stage_table(merged_p, warehouse_dir, "bib_part")
 
-    # delete manifests (SRC-6) apply after the upserts, to the staged
-    # rows, cascading holding→item (OP-ST6); persisted, since the final
-    # writes, the history and the counter all read them
-    deletes = persist(P.read_delete_manifests(spark, landing_dir))
-    final_b, hist_bib = U.delete_with_history(
-        staged_b, deletes.select(F.col("mms_id")).where(F.col("mms_id").isNotNull()),
-        "mms_id", "bib")
-    doomed_h = deletes.select("holding_id").where(F.col("holding_id").isNotNull())
-    final_h, final_i, hist_cascade = U.cascade_delete_holdings(
-        staged_h, staged_i, doomed_h)
-
-    history = (hist_h.unionByName(hist_bib).unionByName(hist_cascade)
+    history = (U.history_rows(staged_b, "mms_id")
+               .unionByName(U.history_rows(staged_h, "holding_id"))
+               .unionByName(U.history_rows(staged_i, "pid"))
                .withColumn("create_date_time",
                            F.lit(batch_ts).cast("timestamp_ntz")))
     history.write.mode("append").parquet(
         os.path.join(warehouse_dir, "deleted_record"))
     out["errors"].write.mode("append").parquet(
         os.path.join(warehouse_dir, "errors"))
-    for name, final in (("bib_brief", final_b), ("holding_brief", final_h),
-                        ("item", final_i), ("bib_part", staged_p)):
-        _swap_table(final, warehouse_dir, name)
+    for name, staged in (("bib_brief", staged_b), ("holding_brief", staged_h),
+                         ("item", staged_i), ("bib_part", staged_p)):
+        _swap_table(staged, warehouse_dir, name)
 
     counters = metrics.run_counters(out)
     counters["cnt_deletes"] = deletes.count()

@@ -6,6 +6,7 @@ anti-join, cascade history."""
 from __future__ import annotations
 
 import copy
+import os
 from datetime import datetime
 
 import pytest
@@ -25,6 +26,37 @@ def location_dim(spark):
         Row(id=11, library_code="LIB1", code="LOC1"),
         Row(id=22, library_code="LIB2", code="LOC2"),
     ])
+
+
+def _without_holding_b(rec, move_item_to=None):
+    """`rec` with holding B dropped entirely (852 + its control group).
+    B's item is dropped too, or moved to holding `move_item_to`."""
+    rec = copy.deepcopy(rec)
+    for f in rec["fields"]:
+        for s in f.get("subfields", []):
+            if move_item_to and f["tag"] == "ITM" and s["value"] == HID_B:
+                s["value"] = move_item_to
+    rec["fields"] = [f for f in rec["fields"]
+                     if not any(s["code"] in ("0", "8") and s["value"] == HID_B
+                                for s in f.get("subfields", []))]
+    rec["control_fields"] = rec["control_fields"][:8]  # bib + A's group
+    return rec
+
+
+def _manifest_xml(path, mms_id, holding_id=None):
+    """A delete manifest of one record: its 001 bib and its 852$8
+    holding."""
+    rec = marclib.new_record(mms_id=mms_id)
+    rec["control_fields"] = [{"tag": "001", "data": mms_id}]
+    if holding_id:
+        rec["fields"] = [{"tag": "852", "ind1": " ", "ind2": " ",
+                          "subfields": [{"code": "8", "value": holding_id}]}]
+    path.write_bytes(marclib.to_marcxml(rec).encode())
+
+
+def _history(spark, wh):
+    return sorted(tuple(r) for r in spark.read.parquet(wh + "/deleted_record")
+                  .select("record_type", "mms_id", "record_id").collect())
 
 
 def test_two_run_lifecycle(spark, tmp_path, location_dim):
@@ -59,24 +91,13 @@ def test_two_run_lifecycle(spark, tmp_path, location_dim):
             ]
         if f["tag"] == "245":
             f["subfields"] = [{"code": "a", "value": "New title"}]
-    # drop holding B entirely (852 + its control group)
-    rec2["fields"] = [f for f in rec2["fields"]
-                      if not any(s["code"] == "8" and s["value"] == HID_B
-                                 for s in f.get("subfields", []))]
-    rec2["control_fields"] = rec2["control_fields"][:8]  # bib + A's group
-    rec2["fields"] = [f for f in rec2["fields"]
-                      if not (f["tag"] == "ITM"
-                              and any(s["code"] == "0" and s["value"] == HID_B
-                                      for s in f["subfields"]))]
+    rec2 = _without_holding_b(rec2)
 
     run2 = tmp_path / "run2"
     run2.mkdir()
     write_drop(run2, [rec2], name="incremental-2_new_1.tar.gz")
     # delete manifest for an unrelated bib
-    del_rec = marclib.new_record(mms_id="9977778651")
-    del_rec["control_fields"] = [{"tag": "001", "data": "9977778651"}]
-    (run2 / "incremental-2_delete_1.xml").write_bytes(
-        marclib.to_marcxml(del_rec).encode())
+    _manifest_xml(run2 / "incremental-2_delete_1.xml", "9977778651")
 
     c2 = PL.run_publish_pipeline(spark, str(run2) + "/*", wh,
                                  datetime(2024, 7, 6), location_dim)
@@ -103,6 +124,75 @@ def test_two_run_lifecycle(spark, tmp_path, location_dim):
                             datetime(2024, 7, 6), location_dim)
     bib3 = spark.read.parquet(wh + "/bib_brief").collect()[0]
     assert bib3["version"] == 2                      # strict > guard held
+    # every swap dropped its staged copy
+    assert not list((tmp_path / "wh").glob("*._staged"))
+
+
+def _second_run(spark, tmp_path, location_dim, rec2, manifest=None):
+    """Load GOOD_RECORD, then publish `rec2` (plus a delete manifest of
+    (mms_id, holding_id) if given) into the same warehouse."""
+    wh = str(tmp_path / "wh")
+    for night, rec in enumerate([GOOD_RECORD, rec2], start=1):
+        run = tmp_path / f"run{night}"
+        run.mkdir()
+        write_drop(run, [rec], name=f"incremental-{night}_new_1.tar.gz")
+        if night == 2 and manifest:
+            _manifest_xml(run / "incremental-2_delete_1.xml", *manifest)
+        PL.run_publish_pipeline(spark, str(run) + "/*", wh,
+                                datetime(2024, 6, night), location_dim)
+    return wh
+
+
+def test_item_moved_off_stale_holding(spark, tmp_path, location_dim):
+    """An item whose stored holding goes stale while the drop publishes
+    it under another holding is deleted with the holding, then
+    re-inserted at version 1 (the reference's FK cascade runs before the
+    item upsert)."""
+    moved = "23111138651"
+    wh = _second_run(spark, tmp_path, location_dim,
+                     _without_holding_b(GOOD_RECORD, move_item_to=HID_A))
+    items = {r["pid"]: r for r in spark.read.parquet(wh + "/item").collect()}
+    assert items[moved]["holding_id"] == HID_A
+    assert items[moved]["version"] == 1
+    mms = GOOD_RECORD["mms_id"]
+    assert _history(spark, wh) == [("holding", mms, HID_B),
+                                   ("item", mms, moved)]
+
+
+def test_stale_holding_named_in_manifest_deleted_once(spark, tmp_path,
+                                                      location_dim):
+    """A holding both stale (OP-J2) and named in a delete manifest has
+    one history row, and so has its item."""
+    wh = _second_run(spark, tmp_path, location_dim,
+                     _without_holding_b(GOOD_RECORD), manifest=(HID_B, HID_B))
+    mms = GOOD_RECORD["mms_id"]
+    assert _history(spark, wh) == [("holding", mms, HID_B),
+                                   ("item", mms, "23111138651")]
+    assert {r["holding_id"] for r in
+            spark.read.parquet(wh + "/holding_brief").collect()} == {HID_A}
+
+
+def test_history_reads_only_staged_tables(spark, tmp_path, location_dim,
+                                          monkeypatch):
+    """The deleted_record append reads the staged tables the final
+    writes read, not the stored tables or the landing files again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        written[os.path.basename(path)] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    _second_run(spark, tmp_path, location_dim,
+                _without_holding_b(GOOD_RECORD), manifest=(HID_B, HID_B))
+    # the directory of every file the append's scans read
+    read = {os.path.basename(os.path.dirname(f))
+            for f in written["deleted_record"].inputFiles()}
+    assert read == {"bib_brief._staged", "holding_brief._staged",
+                    "item._staged"}
 
 
 def test_bib_parts_replaced_per_published_bib(spark, tmp_path, location_dim):

@@ -5,8 +5,8 @@ Usage: python tools/dump_publish_plans.py <out_dir> [suffix]
 Builds a small seeded warehouse with perfbench's publish generator
 (400 bibs), then applies one incremental drop (120 bibs) through
 `plans.pipeline.run_publish_pipeline` and writes the
-`.explain('formatted')` of each staged merge of that second run
-(bib_brief, holding_brief, item, bib_part) to
+`.explain('formatted')` of the bib_brief, holding_brief and item
+staged merges of that second run to
 <out_dir>/<table>_<suffix>.txt (suffix defaults to "after"). The run's
 scratch directory is printed as $WORK in the plans.
 """
@@ -24,7 +24,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
-MERGES = ("bib_brief", "holding_brief")
+MERGES = ("bib_brief", "holding_brief", "item")
 
 
 def main(out_dir: str, suffix: str = "after") -> None:
