@@ -17,8 +17,9 @@ rewritten (on Delta/Iceberg this maps 1:1 onto `MERGE WHEN MATCHED AND
 s.ts > t.ts`). Scale notes: one shuffle on the key for the outer join;
 incoming is deduped to latest-per-key first (required — SQL MERGE raises
 on duplicate matches, and the reference's per-row loop silently
-last-writes); at 100 TB the rewrite becomes partition-overwrite on a
-bucketed/partitioned key so only touched partitions rewrite.
+last-writes). Every run rewrites the whole table: a partition-overwrite
+on a bucketed key, rewriting only the touched buckets, is neither built
+nor measured.
 
 A delete is a tag, not a filter (`tag_deletes`): the survivors
 (`live_rows`) and the history (`history_rows`) read the same tagged rows,
@@ -46,11 +47,24 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
     - matched keys update only when incoming is strictly newer (the
       temporal guard) — version increments, create_date_time is preserved
     - unmatched stored rows pass through
+    - a stored row tagged `_deleted` matches nothing: it passes through
+      with its tag, and an incoming row of its key inserts (the delete
+      ran before the upsert, as the reference's FK cascade does)
     """
     incoming = R.latest_per_key(incoming, keys, ts_col)
     value_cols = [c for c in incoming.columns if c not in keys]
     i = incoming.withColumnsRenamed({c: f"_in_{c}" for c in value_cols})
-    joined = stored.join(i, on=list(keys), how="full_outer")
+    tag = [DELETED] if DELETED in stored.columns else []
+    if tag:
+        # a condition, not a null key: tagged rows keep their key's
+        # partition instead of all hashing to the null one
+        i = i.withColumnsRenamed({k: f"_in_{k}" for k in keys})
+        match = [F.col(k) == F.col(f"_in_{k}") for k in keys]
+        joined = (stored.join(i, [*match, F.col(DELETED).isNull()],
+                              "full_outer")
+                  .withColumns({k: F.coalesce(k, f"_in_{k}") for k in keys}))
+    else:
+        joined = stored.join(i, on=list(keys), how="full_outer")
     is_insert = F.col(ts_col).isNull()          # no stored row
     in_ts = F.col(f"_in_{ts_col}")
     take_incoming = is_insert | (in_ts.isNotNull() & (in_ts > F.col(ts_col)))
@@ -65,7 +79,8 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
          .otherwise(F.col("update_date_time")).alias("update_date_time"),
         F.when(is_insert, F.lit(1).cast("long"))
          .when(take_incoming, F.col("version") + 1)
-         .otherwise(F.col("version")).alias("version"))
+         .otherwise(F.col("version")).alias("version"),
+        *tag)
 
 
 def insert_ignore(stored: DataFrame, incoming: DataFrame,

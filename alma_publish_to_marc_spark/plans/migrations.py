@@ -13,7 +13,8 @@ JSON through a server-side cursor and issue row-at-a-time UPDATEs:
 
 Spark-first, each becomes ONE declarative pass: a primary-key left join
 between the table and the JSON source plus a conditional column rewrite,
-committed atomically through the pipeline's stage-and-swap. At 100 TB
+written through the pipeline's stage-and-swap (not atomic: a crash inside
+the swap is not yet recovered). At 100 TB
 the pid⋈pid join is a co-partitioned shuffle (both sides keyed by the
 primary key — bucketed tables make it shuffle-free), the location dim is
 a broadcast (it IS driver-dict-sized: the reference materializes it in
@@ -87,11 +88,12 @@ def backfill_temp_locations(item: DataFrame, item_json: DataFrame,
 
 def run_backfill(spark: SparkSession, warehouse_dir: str, table: str,
                  transform) -> None:
-    """Run a whole-table migration through the pipeline's two-phase
-    commit: stage the rewritten table next to the original (the lazy
-    plan still reads it), then swap. Same discipline as
-    run_publish_pipeline — no path is overwritten while a live plan
-    references it."""
+    """Run a whole-table migration through the pipeline's stage-and-swap:
+    stage the rewritten table next to the original (the lazy plan still
+    reads it), then overwrite the original from the staged copy. Same
+    discipline as run_publish_pipeline — no path is overwritten while a
+    live plan references it. The overwrite deletes the table before it
+    writes, so a crash inside the swap is not yet recovered."""
     from .pipeline import _stage_table, _swap_table
 
     current = spark.read.parquet(os.path.join(warehouse_dir, table))

@@ -13,9 +13,11 @@ rows become the warehouse and tagged rows the CDC history → run counters.
 No nested MARC field array reaches the split rows, shuffles or merges.
 
 The reference's thread pool, per-thread connections, and per-bib commits
-all disappear: file parallelism is split scheduling, connections are
-per-partition sinks (or plain parquet writes locally), and atomicity is
-per-table overwrite (MERGE on Delta).
+all disappear: file parallelism is split scheduling, and connections are
+per-partition sinks (or plain parquet writes locally). Each table is
+staged, then overwritten (MERGE on Delta). That overwrite is not atomic:
+Spark deletes `name/` before it writes, and a run that dies inside a swap
+is not yet recovered.
 """
 
 from __future__ import annotations
@@ -234,18 +236,17 @@ def run_publish_pipeline(spark: SparkSession, landing_dir: str | list[str],
 
     # stale holdings' items (FK ON DELETE CASCADE, data_sync_db.sql:422-427)
     # and OP-J3 items (under a republished holding, absent from the drop;
-    # alma_publish_to_database.py:238-241) are tagged BEFORE the merge:
-    # an item moved off a stale holding is deleted, then re-inserted
+    # alma_publish_to_database.py:238-241) are tagged BEFORE the merge,
+    # which inserts anew an item moved off a stale holding
     stored_i = read_stored("item", items)
     stale_items = R.anti_join_deletes(
         R.semi_join(stored_i, out["holdings"], ["holding_id"]), items, ["pid"])
     tagged_i = U.tag_deletes(
         U.tag_deletes(stored_i, stale, "holding_id", "item"),
         stale_items, "pid", "item")
-    merged_i = (U.tag_deletes(
-        U.merge_upsert(U.live_rows(tagged_i), ts_col(items), ["pid"], "_ts"),
+    merged_i = U.tag_deletes(
+        U.merge_upsert(tagged_i, ts_col(items), ["pid"], "_ts"),
         deletes, "holding_id", "item")
-        .unionByName(tagged_i.where(F.col(U.DELETED).isNotNull())))
 
     # bib_part: wholesale replace per published bib (the reference
     # deletes every published mms_id's edges, then re-inserts; no FK, so

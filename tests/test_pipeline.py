@@ -159,6 +159,24 @@ def test_item_moved_off_stale_holding(spark, tmp_path, location_dim):
                                    ("item", mms, moved)]
 
 
+def test_item_moved_onto_manifest_deleted_holding(spark, tmp_path,
+                                                  location_dim):
+    """An item moved off a stale holding onto a holding the manifest
+    deletes is deleted twice: with the stale holding, then, re-inserted,
+    with the manifest's. Both holdings and all items end deleted."""
+    moved = "23111138651"
+    wh = _second_run(spark, tmp_path, location_dim,
+                     _without_holding_b(GOOD_RECORD, move_item_to=HID_A),
+                     manifest=(HID_A, HID_A))
+    mms = GOOD_RECORD["mms_id"]
+    assert _history(spark, wh) == [
+        ("holding", mms, HID_A), ("holding", mms, HID_B),
+        ("item", mms, "23111118651"), ("item", mms, "23111128651"),
+        ("item", mms, moved), ("item", mms, moved)]
+    for table in ("item", "holding_brief"):
+        assert spark.read.parquet(f"{wh}/{table}").count() == 0, table
+
+
 def test_stale_holding_named_in_manifest_deleted_once(spark, tmp_path,
                                                       location_dim):
     """A holding both stale (OP-J2) and named in a delete manifest has
@@ -257,7 +275,8 @@ def test_list_ids(spark, tmp_path):
 
 def test_backfill_migration_stage_and_swap(spark, tmp_path):
     """Whole-table backfill (reference migrations add_item_policy /
-    update_item_temp_locations) rewrites the item table atomically."""
+    update_item_temp_locations) rewrites the item table through a staged
+    copy, which the swap removes."""
     from pyspark.sql import Row, functions as F
     from alma_publish_to_marc_spark.plans import migrations as MIG
 

@@ -269,23 +269,39 @@ def test_file_stage_is_one_map_over_the_scan(spark, drop):
     assert "Scan binaryFile" in plan, plan
 
 
+def _relation_paths(plan) -> list[str]:
+    """The root path of each file relation a logical plan reads, once per
+    read."""
+    leaves = plan.collectLeaves()
+    return [leaf.relation().location().rootPaths().head().toUri().getPath()
+            for leaf in map(leaves.apply, range(leaves.size()))
+            if leaf.nodeName() == "LogicalRelation"]
+
+
 def test_staged_merges_run_no_higher_order_functions(spark, drop, tmp_path,
                                                      monkeypatch):
     """No MARC higher-order function is left for Catalyst to interpret
-    in the four staged merges of a publish run."""
-    plans = {}
+    in the four staged merges of a publish run, and the item merge is one
+    plan: no union of a second branch, and the stored items read once for
+    the merge and once for the OP-J3 stale items."""
+    plans, reads = {}, {}
     stage = PL._stage_table
 
     def recording(df, warehouse_dir, name):
-        plans[name] = df._jdf.queryExecution().optimizedPlan().toJSON()
+        plan = df._jdf.queryExecution().optimizedPlan()
+        plans[name] = plan.toJSON()
+        reads[name] = _relation_paths(plan)
         return stage(df, warehouse_dir, name)
 
     monkeypatch.setattr(PL, "_stage_table", recording)
+    wh = tmp_path / "wh"
     for batch in range(2):   # the second run merges into stored tables
-        PL.run_publish_pipeline(spark, drop, str(tmp_path / "wh"),
+        PL.run_publish_pipeline(spark, drop, str(wh),
                                 datetime(2024, 6, 1 + batch),
                                 _location(spark))
     assert sorted(plans) == ["bib_brief", "bib_part", "holding_brief", "item"]
     for name, plan in plans.items():
         for hof in ("ArrayFilter", "ArrayTransform", "LambdaFunction"):
             assert f"expressions.{hof}" not in plan, (name, hof)
+    assert plans["item"].count("logical.Union") == 0
+    assert 1 <= reads["item"].count(str(wh / "item")) <= 2, reads["item"]
