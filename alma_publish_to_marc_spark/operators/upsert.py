@@ -53,18 +53,14 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
     """
     incoming = R.latest_per_key(incoming, keys, ts_col)
     value_cols = [c for c in incoming.columns if c not in keys]
-    i = incoming.withColumnsRenamed({c: f"_in_{c}" for c in value_cols})
+    i = incoming.withColumnsRenamed({c: f"_in_{c}" for c in incoming.columns})
     tag = [DELETED] if DELETED in stored.columns else []
-    if tag:
-        # a condition, not a null key: tagged rows keep their key's
-        # partition instead of all hashing to the null one
-        i = i.withColumnsRenamed({k: f"_in_{k}" for k in keys})
-        match = [F.col(k) == F.col(f"_in_{k}") for k in keys]
-        joined = (stored.join(i, [*match, F.col(DELETED).isNull()],
-                              "full_outer")
-                  .withColumns({k: F.coalesce(k, f"_in_{k}") for k in keys}))
-    else:
-        joined = stored.join(i, on=list(keys), how="full_outer")
+    # a condition, not a null key: tagged rows keep their key's
+    # partition instead of all hashing to the null one
+    match = [F.col(k) == F.col(f"_in_{k}") for k in keys]
+    joined = (stored.join(i, match + [F.col(t).isNull() for t in tag],
+                          "full_outer")
+              .withColumns({k: F.coalesce(k, f"_in_{k}") for k in keys}))
     is_insert = F.col(ts_col).isNull()          # no stored row
     in_ts = F.col(f"_in_{ts_col}")
     take_incoming = is_insert | (in_ts.isNotNull() & (in_ts > F.col(ts_col)))

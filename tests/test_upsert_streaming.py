@@ -55,12 +55,14 @@ def test_merge_upsert_guard_and_versions(spark, stored):
 
 def test_merge_upsert_passes_tagged_rows_through(spark, stored):
     """A stored row deleted before the upsert (tagged) matches no incoming
-    row: it stays as it was, tag and all, and its key inserts anew."""
+    row: it stays as it was, tag and all, and its key inserts anew, even
+    from an incoming row older than the stored one, which the temporal
+    guard would drop on a live row."""
     tagged = U.tag_deletes(stored, spark.createDataFrame([Row(pid="p2")]),
                            "pid", "item")
     incoming = spark.createDataFrame([
         Row(pid="p1", status="NEW", update_ts=ts("2024-02-01T00:00:00")),
-        Row(pid="p2", status="MOVED", update_ts=ts("2024-07-01T00:00:00")),
+        Row(pid="p2", status="MOVED", update_ts=ts("2024-05-01T00:00:00")),
     ])
     out = sorted(
         U.merge_upsert(tagged, incoming, ["pid"], "update_ts").collect(),
@@ -69,7 +71,7 @@ def test_merge_upsert_passes_tagged_rows_through(spark, stored):
             for r in out] == [("p1", "NEW", 4, None),
                               ("p2", "MOVED", 1, None),
                               ("p2", "KEEP", 1, "item")]
-    assert out[1]["create_date_time"] == ts("2024-07-01T00:00:00")
+    assert out[1]["create_date_time"] == ts("2024-05-01T00:00:00")
     assert out[2].asDict() == tagged.where("pid = 'p2'").first().asDict()
 
 
