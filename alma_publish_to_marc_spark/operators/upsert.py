@@ -55,8 +55,8 @@ def merge_upsert(stored: DataFrame, incoming: DataFrame, keys: Sequence[str],
     value_cols = [c for c in incoming.columns if c not in keys]
     i = incoming.withColumnsRenamed({c: f"_in_{c}" for c in incoming.columns})
     tag = [DELETED] if DELETED in stored.columns else []
-    # a condition, not a null key: tagged rows keep their key's
-    # partition instead of all hashing to the null one
+    # the tag is a join condition, not a null key: tagged rows keep
+    # their key's partition instead of all hashing to the null one
     match = [F.col(k) == F.col(f"_in_{k}") for k in keys]
     joined = (stored.join(i, match + [F.col(t).isNull() for t in tag],
                           "full_outer")
